@@ -32,8 +32,10 @@ as "wall_all".
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -152,6 +154,22 @@ def reconcile_budgets(
     return over_budget, no_budget
 
 
+def git_stamp() -> dict:
+    """Revision of the checkout this file runs from: ``git_sha`` and
+    ``git_dirty`` (tracked files modified), both None outside a git
+    checkout. Taken before the run, which rewrites tracked sidecars."""
+    git = functools.partial(
+        subprocess.run, cwd=os.path.dirname(os.path.abspath(__file__)),
+        capture_output=True, text=True, check=True,
+    )
+    try:
+        sha = git(["git", "rev-parse", "HEAD"]).stdout.strip()
+        dirty = git(["git", "status", "--porcelain", "--untracked-files=no"]).stdout
+    except (OSError, subprocess.CalledProcessError):
+        return {"git_sha": None, "git_dirty": None}
+    return {"git_sha": sha, "git_dirty": bool(dirty)}
+
+
 def main() -> None:
     write_budgets = "--write-budgets" in sys.argv
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -162,6 +180,7 @@ def main() -> None:
     # judge cycle (r9 verdict task #2). Sampled BEFORE get_spark so the
     # driver JVM's own startup burst can't masquerade as contention.
     load_1m_start = round(os.getloadavg()[0], 2)
+    source = git_stamp()
     spark = get_spark(app_name="polkadot-etl-spark-bench")
 
     # Warmup + min-of-N discipline live in benchutil (shared with
@@ -172,8 +191,7 @@ def main() -> None:
     # diff were all sub-second queries on untouched code), and a
     # gc.collect() per query bounding localCheckpoint residue. (The GC
     # is hygiene, NOT the phantom-breach cause: the r10 A/B ran under
-    # 1.3x box-speed swings — see the loadavg stamps and STATUS's
-    # adjudication record, where every in-bench breach re-measured
+    # 1.3x box-speed swings, and every in-bench breach re-measured
     # UNDER budget min-of-5 in a fresh session on the same box.)
     warm_session(spark, sf_dir)
 
@@ -266,6 +284,7 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "sf": sf,
+                **source,
                 # sourced from benchutil (the one definition of the
                 # timing discipline) so the metadata can never lie about
                 # what the shared helper actually did (r10 ADVICE note)

@@ -11,23 +11,24 @@ each corpus-independent tree is built ONCE per (SparkContext, site) and
 reused — plan machinery, not result caching: every invocation still
 assembles, analyzes and executes its own plan from the parquet inputs.
 
-Keyed by the live SparkContext's Python object identity so a restarted
-JVM can never be served stale py4j references. Cached trees must be
-built from NAME-based references only (F.col/string names, F.lit
-constants) — never from a concrete DataFrame's resolved attributes.
+The memo is owned by the live SparkContext (``sources.tables._memo_for``)
+and dropped with it, so a restarted JVM can never be served stale py4j
+references. Cached trees must be built from NAME-based references only
+(F.col/string names, F.lit constants) — never from a concrete
+DataFrame's resolved attributes.
 """
 
 from __future__ import annotations
 
 from pyspark import SparkContext
 
-_EXPR_CACHE: dict = {}
+from polkadot_etl_spark.sources.tables import _memo_for
 
 
 def expr_cache(key, build):
-    sc = SparkContext._active_spark_context
-    full = (id(sc), key)
-    got = _EXPR_CACHE.get(full)
+    memo = _memo_for(SparkContext._active_spark_context)
+    full = ("expr_cache", key)
+    got = memo.get(full)
     if got is None:
-        got = _EXPR_CACHE[full] = build()
+        got = memo[full] = build()
     return got

@@ -31,33 +31,14 @@ canonical interior key.
 
 from __future__ import annotations
 
-from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# ---------------------------------------------------------------------------
-# Corpus-independent expression memo (r14, VERDICT #4 / guide §1.2).
-#
-# Building a gar registry frame costs ~9,000 py4j round trips — every
-# invocation reconstructed the SAME name-based expression trees (the
-# parser selects below are pure functions of the parser CLASS, not of
-# the data), and the instrumented gar_chain/longtail builds spent
-# 1.7–2.0 s in that construction alone. Column objects are immutable
-# unresolved trees: reusing one across plans yields a byte-identical
-# plan (name resolution happens at analysis, per plan). So each
-# corpus-independent tree is built ONCE per (SparkContext, site) and
-# reused — plan machinery, not result caching: every invocation still
-# assembles, analyzes and executes its own plan from the parquet
-# inputs.
-#
-# Keyed by the live SparkContext's Python object identity so a
-# restarted JVM can never be served stale py4j references.
-# ---------------------------------------------------------------------------
-
-from polkadot_etl_spark.plans.exprmemo import (  # noqa: E402
-    _EXPR_CACHE,
-    expr_cache as _expr_cache,
-)
+# Corpus-independent expression memo (plans/exprmemo.py, r14 VERDICT
+# #4): the parser selects below are pure functions of the parser CLASS,
+# not of the data, and rebuilding their trees (~9,000 py4j round trips
+# per gar registry frame) cost the gar_chain/longtail builds 1.7–2.0 s.
+from polkadot_etl_spark.plans.exprmemo import expr_cache as _expr_cache
 
 
 def _cleaned_asset_id(raw: Column) -> Column:

@@ -10,6 +10,9 @@ replaces exactly that day — the Spark equivalent of
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,33 +30,30 @@ TABLES = (
 )
 
 
-# Scan-root memo (r14, guide §1.2/§7.3 — the same plan-machinery class
-# as plans/exprmemo.py): constructing one parquet scan DataFrame costs
-# ~150-300 ms of driver work (DataSource resolution, footer/schema read,
-# py4j) and the registry pays it hundreds of times per bench run — every
-# query build re-reads the same immutable fixture schema. A scan
-# DataFrame is an unresolved plan fragment: reusing it across plans is
-# plan machinery, not result caching — every query still assembles,
-# analyzes and EXECUTES its own plan from the parquet files on disk
-# (nothing row-shaped is retained; the first build in any fresh JVM
-# pays full price). Keyed per live SparkSession (weak — a closed
-# session's frames are never served to a new one) + path.
-_SCAN_MEMO: "dict" = {}
+# Program memos (r14, guide §1.2/§7.3): plan machinery, not result
+# caching. Each entry is an unresolved plan fragment or a planning fact
+# reused across plans; every query still assembles, analyzes and
+# EXECUTES its own plan from the parquet files on disk (nothing
+# row-shaped is retained; the first build in any fresh JVM pays full
+# price). Entries live in a dict owned by one live SparkContext or
+# SparkSession and are dropped when the owner is collected, so a
+# recycled id() can never alias a dead owner's entries and a stopped
+# context's py4j references are never served to its successor.
+_MEMOS: dict[int, dict] = {}
+_MEMOS_LOCK = threading.Lock()  # builders load tables from worker threads
 
 
-def _scan_memo_for(spark: SparkSession) -> dict:
-    import weakref
-
-    sess_key = id(spark)
-    entry = _SCAN_MEMO.get(sess_key)
-    if entry is None:
-        # prune on session GC so a recycled id() can never alias
-        _SCAN_MEMO[sess_key] = entry = {}
-        try:
-            weakref.finalize(spark, _SCAN_MEMO.pop, sess_key, None)
-        except TypeError:
-            pass
-    return entry
+def _memo_for(owner) -> dict:
+    """The memo dict owned by ``owner`` (any weakref-able object). Keys
+    are tuples whose first item names the memo, so memos sharing an
+    owner never collide."""
+    key = id(owner)
+    with _MEMOS_LOCK:
+        memo = _MEMOS.get(key)
+        if memo is None:
+            memo = _MEMOS[key] = {}
+            weakref.finalize(owner, _MEMOS.pop, key, None)
+    return memo
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -70,10 +70,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     consumer sees one type. Session timezone is pinned to UTC so
     date/epoch math matches the oracle even when the caller's session
     wasn't built by session.py (re-pinned on EVERY call, memo hit or
-    not — the non-UTC-driver guard must hold per invocation)."""
+    not — the non-UTC-driver guard must hold per invocation).
+
+    Constructing a scan costs ~150-300 ms of driver work (DataSource
+    resolution, footer/schema read, py4j), so it is memoized per
+    SparkSession (see ``_memo_for``), which puts two constraints on
+    callers:
+
+    - the files under ``sf_dir`` must not be rewritten within a session:
+      the memoized scan keeps the schema and file listing of its first
+      load;
+    - two loads of the same table in one session are the SAME plan
+      fragment with the same exprIds, so a self-join must join by
+      name/USING or ``alias`` each side — a column reference such as
+      ``df["k"]`` cannot tell the two sides apart."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    memo = _scan_memo_for(spark)
-    key = (sf_dir, name)
+    memo = _memo_for(spark)
+    key = ("load_table", sf_dir, name)
     df = memo.get(key)
     if df is not None:
         return df
@@ -92,19 +105,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-_SCAN_SPLITS_MEMO: dict[tuple[int, str, str], int] = {}
-
-
 def scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Planned split count of one table's parquet scan, memoized per
     (SparkContext, path) — one .rdd planning round trip per table per
     JVM (no job runs; split packing is decided at planning time from
     file sizes and maxPartitionBytes/openCostInBytes)."""
-    key = (id(spark.sparkContext), sf_dir, name)
-    n = _SCAN_SPLITS_MEMO.get(key)
+    memo = _memo_for(spark.sparkContext)
+    key = ("scan_splits", sf_dir, name)
+    n = memo.get(key)
     if n is None:
-        n = load_table(spark, sf_dir, name).rdd.getNumPartitions()
-        _SCAN_SPLITS_MEMO[key] = n
+        n = memo[key] = load_table(spark, sf_dir, name).rdd.getNumPartitions()
     return n
 
 

@@ -27,7 +27,14 @@ def _plan_of(spark, df) -> str:
     )
 
 
-def test_no_row_at_a_time_python_anywhere(spark):
+@pytest.fixture(scope="module")
+def registry_plans(spark) -> dict[str, str]:
+    """{name: formatted physical plan} for every registry query — one
+    build-and-explain sweep shared by the registry-wide plan bans."""
+    return {name: _plan(spark, name) for name in sorted(QUERIES)}
+
+
+def test_no_row_at_a_time_python_anywhere(registry_plans):
     """Registry-wide plan bans, checked in one planning pass:
     - BatchEvalPython (row-pickling Python) — Python must be
       Arrow-batched (ArrowEvalPython / FlatMapGroupsInPandas /
@@ -36,8 +43,7 @@ def test_no_row_at_a_time_python_anywhere(spark):
       right 100 TB plan; small-side crosses must broadcast
       (BroadcastNestedLoopJoin) and everything else needs a key."""
     offenders, cartesian = [], []
-    for name in sorted(QUERIES):
-        plan = _plan(spark, name)
+    for name, plan in registry_plans.items():
         if "BatchEvalPython" in plan:
             offenders.append(name)
         if "CartesianProduct" in plan:
@@ -1911,7 +1917,7 @@ def test_dedup_family_venn_cross_query_conservation(spark):
     assert lsh_margin == lsh_pairs, (lsh_margin, lsh_pairs)
 
 
-def test_payload_exchanges_are_deliberate_fanouts_only(spark):
+def test_payload_exchanges_are_deliberate_fanouts_only(registry_plans):
     """ADVICE r14: raw corpus payload (documents.text / embeddings.
     embedding) may cross an Exchange ONLY through the deliberate keyed
     scan fan-outs — hashpartitioning on the unique id key, tagged
@@ -1922,8 +1928,7 @@ def test_payload_exchanges_are_deliberate_fanouts_only(spark):
     Inspects each Exchange node's Input COLUMNS, not just the header
     line (the r13 assertions' blind spot, ADVICE medium)."""
     bad = []
-    for name in sorted(QUERIES):
-        plan = _plan(spark, name)
+    for name, plan in registry_plans.items():
         for block in re.split(r"\n\n", plan):
             if not re.match(r"\(\d+\) Exchange", block):
                 continue
@@ -1951,22 +1956,23 @@ def test_fan_out_scan_gates_on_split_count(spark):
     from polkadot_etl_spark.sources import tables as T
 
     dp = spark.sparkContext.defaultParallelism
-    key = (id(spark.sparkContext), SF_DIR, "documents")
+    memo = T._memo_for(spark.sparkContext)
+    key = ("scan_splits", SF_DIR, "documents")
     df = T.load_table(spark, SF_DIR, "documents")
-    saved = T._SCAN_SPLITS_MEMO.get(key)
+    saved = memo.get(key)
     try:
         # real fixture layout: single-row-group parquet -> fans out
-        T._SCAN_SPLITS_MEMO.pop(key, None)
+        memo.pop(key, None)
         fanned = df.transform(T.fan_out_scan(SF_DIR, "documents", "doc_id"))
-        assert T._SCAN_SPLITS_MEMO[key] < dp  # memo filled by the gate
+        assert memo[key] < dp  # memo filled by the gate
         plan = _plan_of(spark, fanned)
         assert re.search(r"hashpartitioning\(doc_id#\d+L, \d+\), REPARTITION_BY_NUM", plan)
         # production layout (simulated): splits >= cores -> pass-through
-        T._SCAN_SPLITS_MEMO[key] = dp
+        memo[key] = dp
         passed = df.transform(T.fan_out_scan(SF_DIR, "documents", "doc_id"))
         assert passed is df
     finally:
         if saved is None:
-            T._SCAN_SPLITS_MEMO.pop(key, None)
+            memo.pop(key, None)
         else:
-            T._SCAN_SPLITS_MEMO[key] = saved
+            memo[key] = saved

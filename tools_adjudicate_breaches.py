@@ -2,8 +2,7 @@
 task #2): min-of-5 noop-sink timing at sf0.1 for breach names (default:
 the r9 `over_budget` rows; pass names as argv), printed against their
 checked-in budgets. Run on an idle box; the verdict-prescribed protocol
-that exonerated the r8 pair. Results are recorded in STATUS.md (not a
-committed artifact — delete or keep as the round's adjudication script).
+that exonerated the r8 pair. It prints its verdicts and writes no file.
 
 r12: consumes the box-speed calibration stamp (benchutil.
 box_speed_probe) — it measures THIS sitting's speed, reads the speed

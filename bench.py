@@ -183,10 +183,10 @@ def main() -> None:
     source = git_stamp()
     spark = get_spark(app_name="polkadot-etl-spark-bench")
 
-    # Warmup + min-of-N discipline live in benchutil (shared with
-    # scaling_card.py and tools_adjudicate_breaches.py so the three
-    # tools can never drift apart): parquet-footer + Arrow-worker warm,
-    # noop-sink materialization, third iteration when sub-second (the
+    # Warmup + min-of-N discipline live in benchutil (shared with the
+    # other timing tools so they can never drift apart): parquet-footer
+    # + one core-slot wave of Arrow-worker warm, noop-sink
+    # materialization, third iteration when sub-second (the
     # scheduler-noise floor — five phantom "regressions" in the r4
     # diff were all sub-second queries on untouched code), and a
     # gc.collect() per query bounding localCheckpoint residue. (The GC

@@ -1,13 +1,16 @@
-"""Shared measurement discipline for the three timing tools (bench.py,
-scaling_card.py, tools_adjudicate_breaches.py) — ONE definition of the
-warmup and the min-of-N noop-sink loop, so a future fix to either cannot
-leave the tools silently measuring under different rules (r10
-self-review finding: the idiom had been copy-pasted three times).
+"""Shared measurement discipline for the five timing tools (bench.py,
+scaling_card.py, parallel_card.py, tools_adjudicate_breaches.py and
+tools_profile.py) — ONE definition of the warmup and the min-of-N
+noop-sink loop, so a future fix to either cannot leave the tools
+silently measuring under different rules (r10 self-review finding: the
+idiom had been copy-pasted three times).
 
 The discipline (bench.py's, unchanged):
-- warmup: one parquet-footer read + one Arrow/pandas-UDF wave, so the
-  first measured query absorbs neither JVM/session startup nor the
-  one-time Python-worker fork (~2 s);
+- warmup: one parquet-footer read + one Arrow/pandas-UDF wave of one
+  task per core slot, so the first measured query absorbs neither
+  JVM/session startup nor the one-time Python-worker fork (~2 s), and
+  the warmup itself pays the fixed per-Python-task cost once per slot
+  only (README pitfall "Python tasks have a fixed cost");
 - timing: full materialization through the NOOP sink (every output
   column computed, no rows to the driver — `.count()` lets Catalyst
   legally eliminate the expensive stages, measured in r4);
@@ -51,12 +54,11 @@ BOX_PROBE_FOLD = 64
 def box_speed_probe(spark: SparkSession) -> dict:
     """Measure the box: {'box_speed_1t', 'box_speed_nt'} in probe
     rows/sec (min-of-2 walls, one warm run first so codegen compilation
-    is excluded), plus the raw walls and thread count for readers."""
-    import os
-
+    is excluded), plus the raw walls and thread count for readers. The
+    parallel leg runs one partition per core slot of the live context."""
     from pyspark.sql import functions as F
 
-    n_threads = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n_threads = spark.sparkContext.defaultParallelism
     fold = F.expr(
         f"aggregate(sequence(1, {BOX_PROBE_FOLD}), 0L,"
         " (acc, x) -> acc + (x * id) % 997)"
@@ -86,14 +88,12 @@ def box_speed_probe(spark: SparkSession) -> dict:
 
 
 def warm_session(spark: SparkSession, sf_dir: str) -> None:
-    """Parquet-footer + Arrow-worker warmup (see module doc)."""
+    """Parquet-footer + Arrow-worker warmup (see module doc): the Python
+    stage runs exactly one task per core slot, so it forks the whole
+    worker pool in one wave on any master."""
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).collect()
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # no type hints: `from __future__ import annotations` stringifies
-    # them, which the pandas_udf hint inference can't read
-    _warm = pandas_udf(lambda s: s, "long", PandasUDFType.SCALAR)
-    spark.range(32).repartition(32).select(_warm("id")).collect()
+    slots = spark.sparkContext.defaultParallelism
+    spark.range(0, slots, 1, slots).mapInPandas(lambda it: it, "id long").collect()
 
 
 def time_noop_min(

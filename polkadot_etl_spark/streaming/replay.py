@@ -49,12 +49,14 @@ def write_ndjson_waves(work: str, waves: "list[list[str]]") -> str:
 
 
 # Minimum rows a Python-stateful streaming task should amortize its
-# fixed per-batch cost over: every state partition pays an Arrow
-# round-trip + state-store commit per micro-batch (~50 ms measured at
-# r13) regardless of row count, so partitions holding only a handful of
-# rows are nearly pure overhead. Used to derive the STATE partition
-# count from the bounded stream's own size — the streaming analogue of
-# AQE partition coalescing, which cannot act inside a streaming plan.
+# fixed per-batch cost over: every state partition is a Python task
+# per micro-batch, paying an Arrow round-trip + state-store commit plus
+# the ~0.24 s fixed Python-task cost (per-task zip-directory re-reads,
+# README pitfall "Python tasks have a fixed cost") regardless of row
+# count, so partitions holding only a handful of rows are nearly pure
+# overhead. Used to derive the STATE partition count from the bounded
+# stream's own size — the streaming analogue of AQE partition
+# coalescing, which cannot act inside a streaming plan.
 # Production-sized streams (n_rows >> cores * this) saturate to the
 # session's configured shuffle parallelism, so the derivation is
 # scale-adaptive, not a local constant.

@@ -1,14 +1,22 @@
 """bench.reconcile_budgets — the self-healing budget contract (the gap
 the r6 AND r7 verdicts flagged: the newest query shipped unguarded after
-every manual regeneration). Pure file/dict logic, no Spark."""
+every manual regeneration) — as pure file/dict logic, plus the shared
+benchutil instruments every timing tool runs before it measures (the
+box-speed probe and the session warmup) and the BENCH_DETAIL.json
+sidecar's agreement with itself."""
 
 from __future__ import annotations
 
 import json
+import re
 import sys
+import warnings
+from pathlib import Path
 
 sys.path.insert(0, "/root/repo")
 from bench import _budget_of, reconcile_budgets  # noqa: E402
+
+from tests.conftest import SF_DIR  # noqa: E402
 
 
 def _write(path, budgets, provisional=None):
@@ -84,12 +92,17 @@ def test_box_speed_probe_shape(spark):
         assert b["box_speed_1t"] > 0 and b["box_speed_nt"] > 0
         assert b["box_probe_rows"] == BOX_PROBE_ROWS
         assert b["box_probe_wall_1t"] > 0 and b["box_probe_wall_nt"] > 0
+        # the parallel leg is sized from the live context, not from env
+        assert b["box_probe_threads"] == spark.sparkContext.defaultParallelism
 
-    # Instrument-shape pin only, not a box-speed pin: on a low-core or
-    # co-tenant-throttled box (SPARK_GRAFT_CPUS defaults to 32 regardless
-    # of real cores) the parallel leg can legitimately trail the serial
-    # leg, so the factor is loose — it catches a broken probe (nt leg
-    # timing the wrong thing / returning garbage), not scheduler noise.
+    # Instrument-shape pin only, not a box-speed pin: the parallel leg
+    # runs one partition per core slot of the session's master, and a
+    # local[N] master may have more slots than the box has real cores
+    # (SPARK_GRAFT_CPUS, which sets N, defaults to 32); on such a box or
+    # a co-tenant-throttled one the parallel leg can legitimately trail
+    # the serial leg, so the factor is loose — it catches a broken probe
+    # (nt leg timing the wrong thing / returning garbage), not scheduler
+    # noise.
     # A broken probe fails the ratio on EVERY attempt; a sitting where
     # another 32-task job owns the cores (measured: nt 87k vs 1t 202k
     # with a concurrent full-registry verify) fails it transiently.
@@ -109,3 +122,49 @@ def test_box_speed_probe_shape(spark):
             box = box_speed_probe(spark)
             _assert_shape(box)
     assert passes >= 2, box
+
+
+def test_warm_session_is_one_python_wave_per_core_slot(spark):
+    """benchutil.warm_session's Python stage runs exactly one task per
+    core slot — one wave that forks the whole worker pool on any master
+    (every Python task pays a fixed cost, README pitfall "Python tasks
+    have a fixed cost") — and the warmup raises no warning."""
+    from polkadot_etl_spark.benchutil import warm_session
+
+    sc = spark.sparkContext
+    group = "test_warm_session_shape"
+    sc.setJobGroup(group, "warm_session shape")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            # unclosed-socket ResourceWarnings come from the garbage
+            # collection of earlier py4j/collect sockets, wherever it runs
+            warnings.simplefilter("ignore", ResourceWarning)
+            warm_session(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not caught, [str(w.message) for w in caught]
+
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    assert jobs
+    # the Python stage is the warmup's last job
+    stages = tracker.getJobInfo(jobs[-1]).stageIds
+    assert [tracker.getStageInfo(s).numTasks for s in stages] == [
+        sc.defaultParallelism
+    ]
+
+
+def test_bench_detail_sidecar_agrees_with_itself():
+    """BENCH_DETAIL.json is checked only against itself, never against
+    prose or another file, so it holds after any bench.py run."""
+    detail = json.loads(
+        (Path(__file__).resolve().parents[1] / "BENCH_DETAIL.json").read_text()
+    )
+    queries = detail["queries"]
+    assert detail["value"] == round(sum(queries.values()), 3)
+    assert set(detail["over_budget"]) <= set(queries)
+    assert detail["box_probe_threads"] > 0
+    sha = detail.get("git_sha")
+    assert sha is None or re.fullmatch(r"[0-9a-f]{40}", sha), sha

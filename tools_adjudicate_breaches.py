@@ -58,9 +58,9 @@ def main() -> None:
     # queries run at full parallelism, so the nt stamp is the right
     # normalizer; speed ratio > 1 means this sitting's box is SLOWER
     # than the one that generated the budgets. nt stamps are only
-    # comparable at the SAME thread count (SPARK_GRAFT_CPUS can differ
-    # across sittings) — on mismatch fall back to the 1t stamp, which
-    # is thread-count-free.
+    # comparable at the SAME thread count (the session's core slots
+    # can differ across sittings) — on mismatch fall back to the 1t
+    # stamp, which is thread-count-free.
     ratio = None
     if box_then.get("box_speed_nt") and (
         box_then.get("box_probe_threads") == box_now.get("box_probe_threads")

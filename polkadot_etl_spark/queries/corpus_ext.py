@@ -18,6 +18,9 @@ digram keys, never raw text.
 
 from __future__ import annotations
 
+import tempfile
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -43,6 +46,32 @@ _DOT = (
 )
 _QN = "list_sum(list_transform(range(1, len(q_emb) + 1), i -> q_emb[i]::DOUBLE * q_emb[i]::DOUBLE))"
 _CN = "list_sum(list_transform(range(1, len(c_emb) + 1), i -> c_emb[i]::DOUBLE * c_emb[i]::DOUBLE))"
+
+
+def _overlap(*legs):
+    """Run each zero-argument leg on its own driver thread; return the
+    results in argument order.
+
+    Independent eager legs (a builder's checkpoints, CC rounds, k-means
+    rounds, a stream harness) otherwise run strictly back to back;
+    submitted together, the scheduler back-fills each leg's task tails
+    with the other legs' tasks.
+
+    Every leg goes through ``inheritable_thread_target`` so its jobs
+    inherit the caller's job group and local properties: job-group
+    counters (perfbench's build_jobs/stages/tasks) miss a bare thread's
+    jobs without any error.
+
+    If a leg raises, all legs are still waited for, then the first
+    failure in argument order is re-raised.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(legs)) as pool:
+        futs = [pool.submit(inheritable_thread_target(leg)) for leg in legs]
+    return [f.result() for f in futs]
 
 
 def _assigned_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2955,29 +2984,12 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # method results and the candidate counts (composing the two public
     # queries here would train kmeans twice per audit — measured ~2x on
     # the audit's bench cost); same for the sketch scan, whose |Q| x m
-    # candidate frame is checkpointed once (bounded at any corpus size)
-    # r13 (guide §2.6): the two eager legs — the kmeans training loop's
-    # per-round driver actions and the sketch scan's checkpoint — are
-    # independent; submitting them from two driver threads lets the
-    # scheduler back-fill each leg's task tails with the other's tasks
-    # instead of running the legs strictly back to back.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_ivf = pool.submit(
-            inheritable_thread_target(_ivf_trained_parts), spark, sf_dir
-        )
-        f_sk = pool.submit(
-            inheritable_thread_target(
-                lambda: _sketch_prefiltered(spark, sf_dir).localCheckpoint(
-                    eager=True
-                )
-            )
-        )
-        assigned, probed, n_iter = f_ivf.result()
-        sk_cand = f_sk.result()
+    # candidate frame is checkpointed once (bounded at any corpus size).
+    # The kmeans training loop and the sketch checkpoint are independent.
+    (assigned, probed, n_iter), sk_cand = _overlap(
+        lambda: _ivf_trained_parts(spark, sf_dir),
+        lambda: _sketch_prefiltered(spark, sf_dir).localCheckpoint(eager=True),
+    )
     ivf = _ivf_rerank(spark, sf_dir, assigned, probed, n_iter).select(
         F.col("query_id").alias("q_id"), F.col("neighbor_id").alias("c_id")
     )
@@ -3325,28 +3337,13 @@ def _release_stage_parts(
         )
 
     if only is None:
-        # r13 (guide §2.6): under full composition (the funnel / gate
-        # audit) the two expensive independent legs overlap — the
-        # near-dup gate's BUILD is eager (the CC driver loop inside
-        # dedup_corpus_survivors) while the decontamination flag frame
-        # is a self-contained (doc_id, contaminated) dim, so one driver
-        # thread materializes its checkpoint while the other runs the
-        # CC rounds and the scheduler back-fills each leg's task tails.
-        # Single-stage builds (bench attribution via ``only``) keep the
-        # plain un-checkpointed plans.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_near = pool.submit(inheritable_thread_target(_near))
-            f_cont = pool.submit(
-                inheritable_thread_target(
-                    lambda: _contam().localCheckpoint(eager=True)
-                )
-            )
-            parts["lsh_near_dedup"] = f_near.result()
-            parts["decontamination"] = f_cont.result()
+        # under full composition (the funnel / gate audit) the near-dup
+        # gate's eager CC build overlaps the decontamination dim's
+        # checkpoint. Single-stage builds (bench attribution via
+        # ``only``) keep the plain un-checkpointed plans.
+        parts["lsh_near_dedup"], parts["decontamination"] = _overlap(
+            _near, lambda: _contam().localCheckpoint(eager=True)
+        )
         return parts
     if want("lsh_near_dedup"):
         parts["lsh_near_dedup"] = _near()
@@ -6471,28 +6468,13 @@ JOIN ncand n ON n.query_id = c.query_id
     tags=("corpus", "retrieval", "audit"),
 )
 def hybrid_fusion_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r13 (guide §2.6): the BM25 leg and the sketch prefilter are
-    # independent eager checkpoints — overlap them from two driver
-    # threads so neither leg's task tail idles the other.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_bm = pool.submit(
-            inheritable_thread_target(
-                lambda: _rrf_bm_leg(spark, sf_dir).localCheckpoint(eager=True)
-            )
-        )
-        f_cand = pool.submit(
-            inheritable_thread_target(
-                lambda: _sketch_prefiltered(spark, sf_dir)
-                .where(F.col("q_id") < RRF_QUERIES)
-                .localCheckpoint(eager=True)
-            )
-        )
-        bm = f_bm.result()
-        cand = f_cand.result()
+    # the BM25 leg and the sketch prefilter are independent checkpoints
+    bm, cand = _overlap(
+        lambda: _rrf_bm_leg(spark, sf_dir).localCheckpoint(eager=True),
+        lambda: _sketch_prefiltered(spark, sf_dir)
+        .where(F.col("q_id") < RRF_QUERIES)
+        .localCheckpoint(eager=True),
+    )
     sk_leg = _sketch_rerank(spark, sf_dir, cand, topk=RRF_OUT).select(
         F.col("q_id").alias("query_id"),
         F.col("c_id").alias("item_id"),
@@ -6636,9 +6618,6 @@ FROM canon
     tags=("streaming", "corpus"),
 )
 def streaming_corpus_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from polkadot_etl_spark.streaming.corpus import (
         DEDUP_OUT_SCHEMA,
         dedup_first_occurrence,
@@ -6647,8 +6626,9 @@ def streaming_corpus_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from polkadot_etl_spark.streaming.replay import collect_bounded_stream
 
-    work = _tempfile.mkdtemp(prefix="corpus_replay_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="corpus_replay_", ignore_cleanup_errors=True
+    ) as work:
         src_dir = _replay_ndjson_batches(spark, sf_dir, work)
         # builder form (r14): the harness sizes state partitions in a
         # CLONED session, so the stream plans against the sized conf
@@ -6662,8 +6642,6 @@ def streaming_corpus_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             n_rows=REPLAY_DOCS,
         )
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
     return spark.createDataFrame(pdf, DEDUP_OUT_SCHEMA)
 
 
@@ -6747,9 +6725,6 @@ FROM verd WHERE rn = 1
     tags=("streaming", "dedup"),
 )
 def streaming_neardedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from polkadot_etl_spark.streaming.corpus import document_stream
     from polkadot_etl_spark.streaming.neardedup import (
         BAND_OUT_SCHEMA,
@@ -6758,8 +6733,9 @@ def streaming_neardedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from polkadot_etl_spark.streaming.replay import collect_bounded_stream
 
-    work = _tempfile.mkdtemp(prefix="neardedup_replay_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="neardedup_replay_", ignore_cleanup_errors=True
+    ) as work:
         src_dir = _replay_ndjson_batches(spark, sf_dir, work)
         # the REAL source stage (shared with streaming_corpus_replay) —
         # an inline copy would silently drift from the machine this
@@ -6773,8 +6749,6 @@ def streaming_neardedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             n_rows=REPLAY_DOCS,  # sized state partitions via cloned session
         )
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
     # pandas renders the nullable matched_id as float NaN, which the
     # row-wise createDataFrame verifier rejects for LongType (and the
     # Int64 extension dtype hits the same path) — convert explicitly
@@ -8360,9 +8334,6 @@ def _incr_stream_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState first-occurrence dedup; maxFilesPerTrigger=1
     so every wave is its own micro-batch and the state seam is
     exercised). Returns the collected stream output as a local frame."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from polkadot_etl_spark.streaming.corpus import (
         DEDUP_OUT_SCHEMA,
         dedup_first_occurrence,
@@ -8406,8 +8377,9 @@ def _incr_stream_output(spark: SparkSession, sf_dir: str) -> DataFrame:
             if r["doc_id"] % INCR_MIRROR_MOD == INCR_MIRROR_REM
         ]
     )
-    work = _tempfile.mkdtemp(prefix="incr_replay_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="incr_replay_", ignore_cleanup_errors=True
+    ) as work:
         src_dir = write_ndjson_waves(work, waves)
         # builder form (r14): state partitions sized in a CLONED session
         # — load-bearing for THIS query, whose quantizer-training leg
@@ -8422,8 +8394,6 @@ def _incr_stream_output(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             n_rows=sum(len(w) for w in waves),
         )
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
     return spark.createDataFrame(pdf, DEDUP_OUT_SCHEMA)
 
 
@@ -8607,10 +8577,6 @@ FROM drift d CROSS JOIN fun
     tags=("streaming", "corpus", "dedup", "similarity", "pipeline"),
 )
 def corpus_daily_increment_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     from polkadot_etl_spark.operators.kmeans import assign_nearest
 
     e = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < INCR_DOCS)
@@ -8630,10 +8596,8 @@ def corpus_daily_increment_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     # side quantizer training are INDEPENDENT legs: the stream carries
     # only src>=INCR_MIN_SRC docs while training reads the standing
     # (src<INCR_MIN_SRC) complement, so the kept and standing row sets
-    # are disjoint by construction. r13 (guide §2.6): run the stream
-    # harness (a driver-blocking micro-batch loop) and the Lloyd
-    # training rounds from two driver threads so the box is never idle
-    # waiting on one of them.
+    # are disjoint by construction, so the stream harness (a
+    # driver-blocking micro-batch loop) and the Lloyd rounds overlap.
     def _stream_leg():
         sdf = _incr_stream_output(spark, sf_dir)
         cls = _incr_classified(spark, sf_dir, sdf)
@@ -8654,11 +8618,9 @@ def corpus_daily_increment_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         return _ivf_train_canon(qd_std)
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_stream = pool.submit(inheritable_thread_target(_stream_leg))
-        f_train = pool.submit(inheritable_thread_target(_train_leg))
-        cls, fun_row = f_stream.result()
-        assigned, centroids, canon_col, _n_iter = f_train.result()
+    (cls, fun_row), (assigned, centroids, canon_col, _n_iter) = _overlap(
+        _stream_leg, _train_leg
+    )
 
     # ---- stage 3: admit the kept docs' embeddings to the trained index
     # (the SHARED maintenance machinery; membership = the kept set,
@@ -9646,21 +9608,9 @@ def _snm_verified_legs(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
             .withColumn("pass_no", F.lit(pass_no))
         )
 
-    # r13 (guide §2.6): each pass's build does eager work (the
-    # boundary-pinning range-sort checkpoint + the partition-count
-    # collect inside _snm_neighbor_pairs); the two passes are
-    # independent, so build them from two driver threads and let the
-    # scheduler overlap their jobs.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(inheritable_thread_target(_leg), pass_no, key)
-            for pass_no, key in keys.items()
-        ]
-        return [f.result() for f in futs]
+    # each pass's build is eager (the range-sort checkpoint + the
+    # partition-count collect inside _snm_neighbor_pairs) and independent
+    return _overlap(*(partial(_leg, p, k) for p, k in keys.items()))
 
 
 @query(
@@ -10499,25 +10449,12 @@ def dedup_family_venn(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_a", "doc_b", F.lit("gram").alias("fam"))
         )
 
-    # r13 (guide §2.6): the three family legs are fully independent —
-    # the SNM legs already build eagerly (range-sort checkpoints +
-    # partition-count collects), while the LSH and gram legs were lazy
-    # and evaluated strictly AFTER them in the final action. Checkpoint
-    # each leg's bounded pair frame from its own driver thread so the
-    # scheduler interleaves all three candidate generations; the final
-    # plan is then two small pair-keyed aggregates over the
-    # checkpointed frames.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    def _ck(build):
-        return lambda: build().localCheckpoint(eager=True)
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [pool.submit(inheritable_thread_target(_ck(b)))
-                for b in (_lsh, _snm, _gram)]
-        lsh, snm, gram = [f.result() for f in futs]
+    # the three family legs are independent: checkpoint each bounded
+    # pair frame on its own thread, so the final plan is two small
+    # pair-keyed aggregates over the checkpoints
+    lsh, snm, gram = _overlap(
+        *(lambda b=b: b().localCheckpoint(eager=True) for b in (_lsh, _snm, _gram))
+    )
     u = lsh.unionByName(snm).unionByName(gram)
     flags = u.groupBy("doc_a", "doc_b").agg(
         (F.max(F.when(F.col("fam") == "lsh", 1).otherwise(0)) == 1).alias(

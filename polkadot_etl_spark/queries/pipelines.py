@@ -9,6 +9,11 @@ test of the pipeline composition, not of the synthetic generator.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+import weakref
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,11 +36,21 @@ def _pk(c: Column) -> Column:
     return F.concat(F.lit("0x"), F.lpad(c.cast("string"), 64, "0"))
 
 
-def _synth_bronze(spark: SparkSession, sf_dir: str):
-    """Deterministic chain-day bronze from orders/lineitem:
+def _session_tempdir(spark: SparkSession, prefix: str) -> str:
+    """A fresh temp dir removed once ``spark`` is garbage-collected (or at
+    interpreter exit): the frame a builder returns reads it lazily, so it
+    must outlive the builder, and every frame keeps its session alive."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    weakref.finalize(spark, shutil.rmtree, path, True)
+    return path
 
-    - block   := order   (number = o_orderkey, block_time = o_orderdate,
-                 digest logs: 1 always + 1 more for 1-URGENT)
+
+def _bronze_from(blocks: DataFrame, le: DataFrame):
+    """Deterministic chain-day bronze (blocks_raw, extrinsics, events)
+    from ``blocks`` (number, hash, block_time, o_orderpriority) and
+    ``le``, lineitem joined to its block's ``block_time``:
+
+    - block   := order (digest logs: 1 always + 1 more for 1-URGENT)
     - extrinsic := lineitem (id = "{okey}-{lineno}"); section by
       l_returnflag: A → utility:batch (nested params), R →
       balances:transfer, N → timestamp:set; signed = A|R with
@@ -43,23 +58,20 @@ def _synth_bronze(spark: SparkSession, sf_dir: str):
     - events  := system:ExtrinsicSuccess where l_quantity >= 2, plus a
       balances:Transfer event for every R line (positional JSON data)
     """
-    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderdate") >= F.lit(_DAY0))
-    li = load_table(spark, sf_dir, "lineitem")
-
     urgent = F.col("o_orderpriority") == "1-URGENT"
     j1 = F.concat(
         F.lit('{"preRuntime":["0x61757261","0x'),
-        F.lpad(F.hex(F.col("o_orderkey")), 16, "0"),
+        F.lpad(F.hex(F.col("number")), 16, "0"),
         F.lit('"]}'),
     )
     j2 = F.lit('{"seal":["0x61757261","0x00"]}')
-    blocks_raw = o.select(
-        F.col("o_orderkey").alias("number"),
-        F.concat(F.lit("0xb"), F.col("o_orderkey").cast("string")).alias("hash"),
+    blocks_raw = blocks.select(
+        "number",
+        "hash",
         F.lit(None).cast("string").alias("parent_hash"),
         F.lit(None).cast("string").alias("state_root"),
         F.lit(None).cast("string").alias("extrinsics_root"),
-        F.col("o_orderdate").alias("block_time"),
+        "block_time",
         F.lit(None).cast("string").alias("author_ss58"),
         F.lit(None).cast("string").alias("author_pub_key"),
         F.lit(1).alias("spec_version"),
@@ -68,9 +80,6 @@ def _synth_bronze(spark: SparkSession, sf_dir: str):
         F.when(urgent, F.array(j1, j2)).otherwise(F.array(j1)).alias("digest_logs"),
     )
 
-    le = li.join(
-        o.select("o_orderkey", "o_orderdate"), li.l_orderkey == F.col("o_orderkey")
-    ).drop("o_orderkey")
     rf = F.col("l_returnflag")
     signed = rf.isin("A", "R")
     # (l_orderkey, l_linenumber) is NOT unique in the synthetic data; the
@@ -86,7 +95,7 @@ def _synth_bronze(spark: SparkSession, sf_dir: str):
     extrinsics = le.select(
         ext_hash.alias("hash"),
         ext_id.alias("extrinsic_id"),
-        F.col("o_orderdate").alias("block_time"),
+        "block_time",
         F.col("l_orderkey").alias("block_number"),
         F.concat(F.lit("0xb"), F.col("l_orderkey").cast("string")).alias("block_hash"),
         F.lit("{}").alias("lifetime"),
@@ -104,7 +113,7 @@ def _synth_bronze(spark: SparkSession, sf_dir: str):
     common = [
         ext_id.alias("extrinsic_id"),
         ext_hash.alias("extrinsic_hash"),
-        F.col("o_orderdate").alias("block_time"),
+        "block_time",
         F.col("l_orderkey").alias("block_number"),
         F.concat(F.lit("0xb"), F.col("l_orderkey").cast("string")).alias("block_hash"),
         F.lit(None).cast("string").alias("data_decoded"),
@@ -194,7 +203,23 @@ FROM days d LEFT JOIN extd e ON d.log_dt = e.log_dt
 def dump_day_blocklog(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polkadot_etl_spark.plans.dump import dump_day
 
-    blocks_raw, extrinsics, events = _synth_bronze(spark, sf_dir)
+    # block := order (number = o_orderkey, block_time = o_orderdate)
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderdate") >= F.lit(_DAY0))
+    li = load_table(spark, sf_dir, "lineitem")
+    blocks = o.select(
+        F.col("o_orderkey").alias("number"),
+        F.concat(F.lit("0xb"), F.col("o_orderkey").cast("string")).alias("hash"),
+        F.col("o_orderdate").alias("block_time"),
+        "o_orderpriority",
+    )
+    le = (
+        li.join(
+            o.select("o_orderkey", "o_orderdate"), li.l_orderkey == F.col("o_orderkey")
+        )
+        .drop("o_orderkey")
+        .withColumnRenamed("o_orderdate", "block_time")
+    )
+    blocks_raw, extrinsics, events = _bronze_from(blocks, le)
     # Lazy fan-out (share_bronze=False): measured at sf0.1, an eager
     # bronze checkpoint costs more than the per-branch re-scans here
     # (Catalyst prunes each branch to a narrow column set; the checkpoint
@@ -2887,8 +2912,6 @@ FROM merged GROUP BY 1
     tags=("pipeline", "merge"),
 )
 def merge_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from polkadot_etl_spark.operators.merge import upsert_day_partitioned
 
     e = load_table(spark, sf_dir, "events")
@@ -2900,7 +2923,7 @@ def merge_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # child of the fresh temp dir: must NOT exist yet so the first
     # upsert takes the bootstrap-write path
-    path = tempfile.mkdtemp(prefix="merge_state_") + "/state"
+    path = _session_tempdir(spark, "merge_state_") + "/state"
     upsert_day_partitioned(spark, path, base, keys=["k"], time_col="ts")
     upsert_day_partitioned(spark, path, upd, keys=["k"], time_col="ts")
     # replay the same batch: X6 idempotence is part of the hashed result
@@ -2946,8 +2969,6 @@ FROM events WHERE event_id < 2000
     tags=("pipeline", "sink"),
 )
 def dune_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     e = load_table(spark, sf_dir, "events").where(F.col("event_id") < 2000)
     payload = F.concat(
         F.lit('{"type":"'),
@@ -2962,7 +2983,7 @@ def dune_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         s_ts("ts").alias("ts_str"),
     )
-    path = tempfile.mkdtemp(prefix="dune_csv_") + "/export"
+    path = _session_tempdir(spark, "dune_csv_") + "/export"
     (
         out.write.option("header", True)
         .option("escape", '"')  # RFC-4180 doubled quotes, not backslash
@@ -6095,19 +6116,16 @@ def _dump_replay_winners(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame (number, hash, block_time). Split out so bench.py can
     attribute the replay's cost to harness-vs-composition (the funnel
     treatment; r10 verdict task #4)."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from polkadot_etl_spark.streaming.pipeline import (
         block_candidates_stream,
         fork_resolving_sink,
     )
 
-    work = _tempfile.mkdtemp(prefix="dump_replay_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dump_replay_", ignore_cleanup_errors=True
+    ) as work:
         src_dir = _stream_dump_candidates(spark, sf_dir, work)
-        state_dir = _os.path.join(work, "state")
+        state_dir = os.path.join(work, "state")
         q = (
             # one wave file per micro-batch (oldest-mtime first): the
             # whole point is driving fork_resolving_sink's INCREMENTAL
@@ -6117,7 +6135,7 @@ def _dump_replay_winners(spark: SparkSession, sf_dir: str) -> DataFrame:
             # hash-green (r10 self-review finding)
             block_candidates_stream(spark, src_dir, max_files_per_trigger=1)
             .writeStream.outputMode("append")
-            .option("checkpointLocation", _os.path.join(work, "chk"))
+            .option("checkpointLocation", os.path.join(work, "chk"))
             .foreachBatch(fork_resolving_sink(state_dir))
             .start()
         )
@@ -6130,10 +6148,8 @@ def _dump_replay_winners(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(state_dir)
             .where(F.col("finalized"))
             .select("number", "hash", "block_time")
-            .localCheckpoint(eager=True)  # freeze before work is rmtree'd
+            .localCheckpoint(eager=True)  # freeze before work is removed
         )
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
 
 
 def _dump_replay_gold(
@@ -6144,33 +6160,11 @@ def _dump_replay_gold(
     test checks without paying the streaming harness)."""
     from polkadot_etl_spark.plans.dump import dump_day
 
-    # bronze decoration (batch-side, as the dump decorates from bronze):
-    # urgency drives the second digest log, exactly _synth_bronze's rule
+    # bronze decoration (batch-side, as the dump decorates from bronze)
     o = load_table(spark, sf_dir, "orders").where(F.col("o_orderkey") < _SDR_KEYS)
-    urgent = F.col("o_orderpriority") == "1-URGENT"
-    j1 = F.concat(
-        F.lit('{"preRuntime":["0x61757261","0x'),
-        F.lpad(F.hex(F.col("number")), 16, "0"),
-        F.lit('"]}'),
-    )
-    j2 = F.lit('{"seal":["0x61757261","0x00"]}')
-    blocks_raw = winners.join(
+    blocks = winners.join(
         o.select(F.col("o_orderkey").alias("number"), "o_orderpriority"), "number"
-    ).select(
-        "number",
-        "hash",
-        F.lit(None).cast("string").alias("parent_hash"),
-        F.lit(None).cast("string").alias("state_root"),
-        F.lit(None).cast("string").alias("extrinsics_root"),
-        "block_time",
-        F.lit(None).cast("string").alias("author_ss58"),
-        F.lit(None).cast("string").alias("author_pub_key"),
-        F.lit(1).alias("spec_version"),
-        F.lit(None).cast("long").alias("relay_block_number"),
-        F.lit(None).cast("string").alias("relay_state_root"),
-        F.when(urgent, F.array(j1, j2)).otherwise(F.array(j1)).alias("digest_logs"),
     )
-
     # extrinsics/events exist only for PUBLISHED blocks: the semi-join
     # against the streamed winners makes the streaming output gate the
     # extrinsic side too (a lost winner silently empties its day)
@@ -6179,58 +6173,7 @@ def _dump_replay_gold(
         winners.select(F.col("number").alias("l_orderkey"), "block_time"),
         "l_orderkey",
     )
-    rf = F.col("l_returnflag")
-    signed = rf.isin("A", "R")
-    ok = (F.col("l_quantity") >= 2).cast("int")
-    ext_id = F.concat_ws("-", F.col("l_orderkey"), F.col("l_linenumber"), ok)
-    ext_hash = F.concat(
-        F.lit("0xe"), F.col("l_orderkey").cast("string"), F.lit("x"),
-        F.col("l_linenumber").cast("string"), F.lit("x"), ok.cast("string"),
-    )
-    extrinsics = le.select(
-        ext_hash.alias("hash"),
-        ext_id.alias("extrinsic_id"),
-        "block_time",
-        F.col("l_orderkey").alias("block_number"),
-        F.concat(F.lit("0xb"), F.col("l_orderkey").cast("string")).alias("block_hash"),
-        F.lit("{}").alias("lifetime"),
-        F.when(rf == "A", F.lit("utility")).when(rf == "R", F.lit("balances")).otherwise(F.lit("timestamp")).alias("section"),
-        F.when(rf == "A", F.lit("batch")).when(rf == "R", F.lit("transfer")).otherwise(F.lit("set")).alias("method"),
-        F.when(rf == "A", F.lit(_NESTED_PARAMS)).otherwise(F.lit("{}")).alias("params"),
-        F.when(signed, F.col("l_extendedprice")).alias("fee"),
-        F.when(signed, F.col("l_extendedprice") * 6.5).alias("fee_usd"),
-        F.lit(None).cast("long").alias("weight"),
-        signed.alias("signed"),
-        _pk(F.col("l_suppkey")).alias("signer_ss58"),
-        _pk(F.col("l_suppkey")).alias("signer_pub_key"),
-    )
-    common = [
-        ext_id.alias("extrinsic_id"),
-        ext_hash.alias("extrinsic_hash"),
-        F.col("block_time").alias("block_time"),
-        F.col("l_orderkey").alias("block_number"),
-        F.concat(F.lit("0xb"), F.col("l_orderkey").cast("string")).alias("block_hash"),
-        F.lit(None).cast("string").alias("data_decoded"),
-    ]
-    success = le.where(F.col("l_quantity") >= 2).select(
-        F.concat_ws("-", F.col("l_orderkey"), F.col("l_linenumber"), F.lit("0")).alias("event_id"),
-        F.lit("system").alias("section"),
-        F.lit("ExtrinsicSuccess").alias("method"),
-        F.lit("[]").alias("data"),
-        *common,
-    )
-    raw_amt = F.floor(F.col("l_extendedprice") * 100).cast("bigint").cast("string")
-    xfer_ev = le.where(rf == "R").select(
-        F.concat_ws("-", F.col("l_orderkey"), F.col("l_linenumber"), F.lit("1")).alias("event_id"),
-        F.lit("balances").alias("section"),
-        F.lit("Transfer").alias("method"),
-        F.concat(
-            F.lit('["'), _pk(F.col("l_suppkey")), F.lit('","'), _pk(F.col("l_partkey")),
-            F.lit('","'), raw_amt, F.lit('"]'),
-        ).alias("data"),
-        *common,
-    )
-    events = success.unionByName(xfer_ev)
+    blocks_raw, extrinsics, events = _bronze_from(blocks, le)
 
     tables = dump_day(blocks_raw, extrinsics, events, relay_chain="polkadot", para_id=0)
     gold = tables["blocklog"]

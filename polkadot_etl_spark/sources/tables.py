@@ -11,7 +11,6 @@ replaces exactly that day — the Spark equivalent of
 from __future__ import annotations
 
 import threading
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,24 +34,27 @@ TABLES = (
 # reused across plans; every query still assembles, analyzes and
 # EXECUTES its own plan from the parquet files on disk (nothing
 # row-shaped is retained; the first build in any fresh JVM pays full
-# price). Entries live in a dict owned by one live SparkContext or
-# SparkSession and are dropped when the owner is collected, so a
-# recycled id() can never alias a dead owner's entries and a stopped
-# context's py4j references are never served to its successor.
-_MEMOS: dict[int, dict] = {}
-_MEMOS_LOCK = threading.Lock()  # builders load tables from worker threads
+# price). Entries live in a dict held by one SparkContext or
+# SparkSession and die with it, so a stopped context's py4j references
+# are never served to its successor.
+_MEMO_ATTR = "_polkadot_etl_memo"
+_MEMO_LOCK = threading.Lock()  # builders load tables from worker threads
 
 
 def _memo_for(owner) -> dict:
-    """The memo dict owned by ``owner`` (any weakref-able object). Keys
-    are tuples whose first item names the memo, so memos sharing an
-    owner never collide."""
-    key = id(owner)
-    with _MEMOS_LOCK:
-        memo = _MEMOS.get(key)
+    """The memo dict owned by ``owner`` (any object that takes
+    attributes). Keys are tuples whose first item names the memo, so
+    memos sharing an owner never collide.
+
+    The owner holds its memo as an attribute rather than a module-level
+    registry holding it: a memoized DataFrame references its
+    SparkSession, and a registry entry would keep every session it ever
+    served alive (with whatever is tied to the session's lifetime)."""
+    with _MEMO_LOCK:
+        memo = getattr(owner, _MEMO_ATTR, None)
         if memo is None:
-            memo = _MEMOS[key] = {}
-            weakref.finalize(owner, _MEMOS.pop, key, None)
+            memo = {}
+            setattr(owner, _MEMO_ATTR, memo)
     return memo
 
 

@@ -1,8 +1,15 @@
 """Semantic invariants for the second-tier corpus ops — properties the
 row-hash oracle gate can't express (cross-row consistency, conservation
-laws, independent recomputation in plain Python)."""
+laws, independent recomputation in plain Python) — plus the contract of
+the driver-thread leg helper ``corpus_ext._overlap``."""
 
 from __future__ import annotations
+
+import ast
+import re
+import threading
+import time
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -969,3 +976,90 @@ def test_snm_multipass_attribution_and_consistency(spark):
     ]
     assert pair_exchanges, "pair-identity exchange missing"
     assert not any("vocab" in b for b in pair_exchanges), pair_exchanges
+
+
+def test_overlap_legs_run_in_the_callers_job_group(spark):
+    """Each leg's jobs count under the caller's job group — the group
+    perfbench's build_jobs/stages/tasks are read from. A leg run on a
+    bare thread would drop out of it without any error."""
+    from polkadot_etl_spark.queries.corpus_ext import _overlap
+
+    sc = spark.sparkContext
+    group = "test_overlap_job_group"
+    sc.setJobGroup(group, "overlap legs")
+    try:
+        # 3 and 5 partitions: one single-stage job each, told apart by
+        # task count
+        _overlap(
+            lambda: spark.range(0, 3, 1, 3).collect(),
+            lambda: spark.range(0, 5, 1, 5).collect(),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    tasks = {
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    }
+    assert {3, 5} <= tasks, tasks
+
+
+def test_overlap_returns_results_in_argument_order():
+    from polkadot_etl_spark.queries.corpus_ext import _overlap
+
+    def leg(value, delay):
+        def run():
+            time.sleep(delay)
+            return value
+
+        return run
+
+    # the first leg finishes last
+    assert _overlap(leg("a", 0.2), leg("b", 0.0), leg("c", 0.1)) == ["a", "b", "c"]
+
+
+def test_overlap_reraises_first_failure_after_every_leg_finished():
+    from polkadot_etl_spark.queries.corpus_ext import _overlap
+
+    finished = threading.Event()
+
+    def slow():
+        time.sleep(0.3)
+        finished.set()
+
+    def fails(exc, delay):
+        def run():
+            time.sleep(delay)
+            raise exc
+
+        return run
+
+    with pytest.raises(KeyError):
+        _overlap(fails(KeyError("first"), 0.0), slow)
+    assert finished.is_set()
+    # first in argument order, not first in time
+    with pytest.raises(KeyError):
+        _overlap(fails(KeyError("first"), 0.2), fails(ValueError("second"), 0.0))
+
+
+def test_driver_thread_pools_only_inside_overlap():
+    """Independent legs overlap through ``corpus_ext._overlap`` only: a
+    hand-rolled pool elsewhere is one more place a bare thread can drop
+    its jobs out of the caller's job group."""
+    pkg = Path(__file__).resolve().parents[1] / "polkadot_etl_spark"
+    stray = []
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        allowed = set()
+        if path.name == "corpus_ext.py":
+            for node in ast.walk(ast.parse(src)):
+                if isinstance(node, ast.FunctionDef) and node.name == "_overlap":
+                    allowed.update(range(node.lineno, node.end_lineno + 1))
+            assert allowed, "_overlap not found"
+        for i, line in enumerate(src.splitlines(), 1):
+            if re.search(r"ThreadPoolExecutor|inheritable_thread_target", line):
+                if i not in allowed:
+                    stray.append(f"{path.relative_to(pkg.parent)}:{i}")
+    assert not stray, stray

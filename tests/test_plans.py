@@ -1426,6 +1426,30 @@ class TestUpsertMerge:
         got2 = {r.k: r.v for r in spark.read.parquet(path).collect()}
         assert got2 == got
 
+    def test_merge_upsert_state_dir_lives_as_long_as_its_session(self, spark):
+        """merge_upsert_state returns a frame that reads its state dir
+        lazily, so the dir must outlive the builder; it is removed once
+        the session that built it is collected."""
+        import gc
+        import glob
+        import os
+        import tempfile
+
+        from polkadot_etl_spark.queries import QUERIES
+        from tests.conftest import SF_DIR
+
+        pattern = os.path.join(tempfile.gettempdir(), "merge_state_*")
+        before = set(glob.glob(pattern))
+        clone = spark.newSession()
+        assert QUERIES["merge_upsert_state"].build(clone, SF_DIR).collect()
+        (state_dir,) = set(glob.glob(pattern)) - before
+        del clone
+        # pyspark pins the most recently constructed session in
+        # RDD.toDF; constructing another moves that pin off the clone
+        spark.newSession()
+        gc.collect()
+        assert not os.path.exists(state_dir)
+
 
 class TestAsofAgainstPandas:
     def test_asof_join_matches_merge_asof(self, spark):

@@ -8,9 +8,10 @@ idiom had been copy-pasted three times).
 The discipline (bench.py's, unchanged):
 - warmup: one parquet-footer read + one Arrow/pandas-UDF wave of one
   task per core slot, so the first measured query absorbs neither
-  JVM/session startup nor the one-time Python-worker fork (~2 s), and
-  the warmup itself pays the fixed per-Python-task cost once per slot
-  only (README pitfall "Python tasks have a fixed cost");
+  JVM/session startup nor the one-time Python daemon start and worker
+  fork (~1 s on local[4]), and the warmup itself pays the fixed
+  per-Python-task cost once per slot only (README pitfall "Python
+  tasks have a fixed cost");
 - timing: full materialization through the NOOP sink (every output
   column computed, no rows to the driver — `.count()` lets Catalyst
   legally eliminate the expensive stages, measured in r4);

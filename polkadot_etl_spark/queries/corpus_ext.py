@@ -48,7 +48,7 @@ _QN = "list_sum(list_transform(range(1, len(q_emb) + 1), i -> q_emb[i]::DOUBLE *
 _CN = "list_sum(list_transform(range(1, len(c_emb) + 1), i -> c_emb[i]::DOUBLE * c_emb[i]::DOUBLE))"
 
 
-def _overlap(*legs):
+def _overlap(spark: SparkSession, *legs):
     """Run each zero-argument leg on its own driver thread; return the
     results in argument order.
 
@@ -57,10 +57,11 @@ def _overlap(*legs):
     submitted together, the scheduler back-fills each leg's task tails
     with the other legs' tasks.
 
-    Every leg goes through ``inheritable_thread_target`` so its jobs
-    inherit the caller's job group and local properties: job-group
-    counters (perfbench's build_jobs/stages/tasks) miss a bare thread's
-    jobs without any error.
+    Every leg goes through ``inheritable_thread_target(spark)`` so its
+    jobs inherit the caller's job group, local properties and job tags:
+    job-group counters (perfbench's build_jobs/stages/tasks) miss a bare
+    thread's jobs without any error. Without the session, pyspark warns
+    once per leg that tags will not be inherited.
 
     If a leg raises, all legs are still waited for, then the first
     failure in argument order is re-raised.
@@ -70,7 +71,7 @@ def _overlap(*legs):
     from pyspark import inheritable_thread_target
 
     with ThreadPoolExecutor(max_workers=len(legs)) as pool:
-        futs = [pool.submit(inheritable_thread_target(leg)) for leg in legs]
+        futs = [pool.submit(inheritable_thread_target(spark)(leg)) for leg in legs]
     return [f.result() for f in futs]
 
 
@@ -2987,6 +2988,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate frame is checkpointed once (bounded at any corpus size).
     # The kmeans training loop and the sketch checkpoint are independent.
     (assigned, probed, n_iter), sk_cand = _overlap(
+        spark,
         lambda: _ivf_trained_parts(spark, sf_dir),
         lambda: _sketch_prefiltered(spark, sf_dir).localCheckpoint(eager=True),
     )
@@ -3342,7 +3344,7 @@ def _release_stage_parts(
         # checkpoint. Single-stage builds (bench attribution via
         # ``only``) keep the plain un-checkpointed plans.
         parts["lsh_near_dedup"], parts["decontamination"] = _overlap(
-            _near, lambda: _contam().localCheckpoint(eager=True)
+            spark, _near, lambda: _contam().localCheckpoint(eager=True)
         )
         return parts
     if want("lsh_near_dedup"):
@@ -6470,6 +6472,7 @@ JOIN ncand n ON n.query_id = c.query_id
 def hybrid_fusion_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the BM25 leg and the sketch prefilter are independent checkpoints
     bm, cand = _overlap(
+        spark,
         lambda: _rrf_bm_leg(spark, sf_dir).localCheckpoint(eager=True),
         lambda: _sketch_prefiltered(spark, sf_dir)
         .where(F.col("q_id") < RRF_QUERIES)
@@ -8619,7 +8622,7 @@ def corpus_daily_increment_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         return _ivf_train_canon(qd_std)
 
     (cls, fun_row), (assigned, centroids, canon_col, _n_iter) = _overlap(
-        _stream_leg, _train_leg
+        spark, _stream_leg, _train_leg
     )
 
     # ---- stage 3: admit the kept docs' embeddings to the trained index
@@ -9610,7 +9613,7 @@ def _snm_verified_legs(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
 
     # each pass's build is eager (the range-sort checkpoint + the
     # partition-count collect inside _snm_neighbor_pairs) and independent
-    return _overlap(*(partial(_leg, p, k) for p, k in keys.items()))
+    return _overlap(spark, *(partial(_leg, p, k) for p, k in keys.items()))
 
 
 @query(
@@ -10453,6 +10456,7 @@ def dedup_family_venn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair frame on its own thread, so the final plan is two small
     # pair-keyed aggregates over the checkpoints
     lsh, snm, gram = _overlap(
+        spark,
         *(lambda b=b: b().localCheckpoint(eager=True) for b in (_lsh, _snm, _gram))
     )
     u = lsh.unionByName(snm).unionByName(gram)

@@ -20,6 +20,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+from polkadot_etl_spark import pyworker
+
+# the directory holding this package, for local Python workers' path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "polkadot-etl-spark",
@@ -77,7 +82,16 @@ def get_spark(
         # Quieter local runs.
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        # A local worker is a child of this host's JVM, so it can run the
+        # daemon from this package (see pyworker); the package must be
+        # importable before any task ships pyFiles, wherever the driver's
+        # cwd is.
+        conf.setdefault("spark.python.daemon.module", pyworker.__name__)
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(filter(None, (conf.get(key), _PACKAGE_PARENT)))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -9,6 +9,7 @@ import ast
 import re
 import threading
 import time
+import warnings
 from pathlib import Path
 
 import numpy as np
@@ -991,6 +992,7 @@ def test_overlap_legs_run_in_the_callers_job_group(spark):
         # 3 and 5 partitions: one single-stage job each, told apart by
         # task count
         _overlap(
+            spark,
             lambda: spark.range(0, 3, 1, 3).collect(),
             lambda: spark.range(0, 5, 1, 5).collect(),
         )
@@ -1006,7 +1008,7 @@ def test_overlap_legs_run_in_the_callers_job_group(spark):
     assert {3, 5} <= tasks, tasks
 
 
-def test_overlap_returns_results_in_argument_order():
+def test_overlap_returns_results_in_argument_order(spark):
     from polkadot_etl_spark.queries.corpus_ext import _overlap
 
     def leg(value, delay):
@@ -1017,10 +1019,23 @@ def test_overlap_returns_results_in_argument_order():
         return run
 
     # the first leg finishes last
-    assert _overlap(leg("a", 0.2), leg("b", 0.0), leg("c", 0.1)) == ["a", "b", "c"]
+    legs = leg("a", 0.2), leg("b", 0.0), leg("c", 0.1)
+    assert _overlap(spark, *legs) == ["a", "b", "c"]
 
 
-def test_overlap_reraises_first_failure_after_every_leg_finished():
+def test_overlap_warns_nothing(spark):
+    """pyspark warns once per leg when ``inheritable_thread_target`` gets
+    no session; ``_overlap`` passes the caller's."""
+    from polkadot_etl_spark.queries.corpus_ext import _overlap
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        warnings.simplefilter("ignore", ResourceWarning)
+        assert _overlap(spark, lambda: 1, lambda: 2) == [1, 2]
+    assert not caught, [str(w.message) for w in caught]
+
+
+def test_overlap_reraises_first_failure_after_every_leg_finished(spark):
     from polkadot_etl_spark.queries.corpus_ext import _overlap
 
     finished = threading.Event()
@@ -1037,11 +1052,13 @@ def test_overlap_reraises_first_failure_after_every_leg_finished():
         return run
 
     with pytest.raises(KeyError):
-        _overlap(fails(KeyError("first"), 0.0), slow)
+        _overlap(spark, fails(KeyError("first"), 0.0), slow)
     assert finished.is_set()
     # first in argument order, not first in time
     with pytest.raises(KeyError):
-        _overlap(fails(KeyError("first"), 0.2), fails(ValueError("second"), 0.0))
+        _overlap(
+            spark, fails(KeyError("first"), 0.2), fails(ValueError("second"), 0.0)
+        )
 
 
 def test_driver_thread_pools_only_inside_overlap():

@@ -163,9 +163,10 @@ def _msg(h, incoming, sent_at, bn, ts, chain=0, dest=2000):
 
 @pytest.fixture
 def few_shuffle_partitions(spark):
-    """applyInPandasWithState spawns a python worker per state partition
-    per micro-batch — 32 partitions × multiple batches is pure overhead on
-    4-row test data. Scope it down for the stateful tests."""
+    """applyInPandasWithState runs one Python task per state partition
+    per micro-batch (on reused workers) — 32 partitions × multiple
+    batches is pure overhead on 4-row test data. Scope it down for the
+    stateful tests."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "2")
     yield

@@ -4,8 +4,9 @@ final JSON line carrying the total AND the per-query map ("queries" —
 r14, VERDICT #7: the driver's round-over-round comparison needs the map
 in the line; ~6.5 KB for 219 queries, well under any observed capture
 limit — the r13 driver's BENCH_rNN.json tail captured more).  The full
-run metadata (box stamps, budgets, iterations, stage attributions) still
-goes to the BENCH_DETAIL.json sidecar next to this file.
+run metadata (box stamps, budgets, iterations, and "build_s", each
+query's builder time within its fastest iteration) still goes to the
+BENCH_DETAIL.json sidecar next to this file.
 
 Each query is fully materialized through the NOOP SINK
 (`df.write.format("noop")`): every output column is computed and row
@@ -28,6 +29,11 @@ single-shot timings absorb GC / AQE / scheduler noise from neighbors
 rounds' single-iteration totals (those equaled sum-of-singles), now with
 the noise floor removed; raw all-iteration wall-clock goes to the sidecar
 as "wall_all".
+
+The builder's share of each query comes from the same timing loop
+(benchutil.time_noop_split), so it covers every query alike, including
+the builders that run Spark jobs before they return a DataFrame (the
+streaming replays, the connected-components gates).
 """
 
 from __future__ import annotations
@@ -44,7 +50,7 @@ from polkadot_etl_spark.benchutil import (
     BASE_ITERS,
     EXTRA_BELOW,
     box_speed_probe,
-    time_noop_min,
+    time_noop_split,
     warm_session,
 )
 from polkadot_etl_spark.queries import QUERIES
@@ -154,6 +160,29 @@ def reconcile_budgets(
     return over_budget, no_budget
 
 
+def speed_ratio(box_then: dict, box_now: dict) -> "float | None":
+    """How much slower this sitting's box is than the one that stamped
+    the budgets (> 1: slower), from benchutil.box_speed_probe stamps, or
+    None when the budgets are unstamped (a raw verdict only). Queries
+    run at full parallelism, so the nt stamp normalizes; nt stamps are
+    only comparable at the same thread count, so on a
+    ``box_probe_threads`` mismatch the thread-count-free 1t stamp does.
+    A breach under ``budget * ratio`` is box drift, not code."""
+    if box_then.get("box_speed_nt") and (
+        box_then.get("box_probe_threads") == box_now.get("box_probe_threads")
+    ):
+        return box_then["box_speed_nt"] / box_now["box_speed_nt"]
+    if box_then.get("box_speed_1t"):
+        return box_then["box_speed_1t"] / box_now["box_speed_1t"]
+    return None
+
+
+def scale_factor(sf_dir: str) -> float:
+    """The scale factor a fixture directory is named for (``.../sf0.1``),
+    or -1.0 for a directory without one."""
+    return float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+
+
 def git_stamp() -> dict:
     """Revision of the checkout this file runs from: ``git_sha`` and
     ``git_dirty`` (tracked files modified), both None outside a git
@@ -173,7 +202,7 @@ def git_stamp() -> dict:
 def main() -> None:
     write_budgets = "--write-budgets" in sys.argv
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    sf = scale_factor(sf_dir)
     # 1-minute load BEFORE this run starts: driver-sitting contention is
     # the established phantom-breach cause (r8/r9 adjudications) — the
     # stamp makes it self-evident in the sidecar instead of costing a
@@ -201,69 +230,27 @@ def main() -> None:
     # phantom-breach class: 24 breaches across three rounds, every one
     # box-speed drift on untouched code). Readers: a sitting that
     # measures queries 1.3x slower should also read ~1.3x lower
-    # box_speed_* here; tools_adjudicate_breaches.py consumes the stamp.
+    # box_speed_* here; tools_profile.py normalizes budget verdicts by it.
     box = box_speed_probe(spark)
     print(f"# box speed: {box}", file=sys.stderr)
 
     per_query: dict[str, float] = {}
+    build_s: dict[str, float] = {}
     t_all = time.perf_counter()
     for name in sorted(QUERIES):
         spec = QUERIES[name]
         if not spec.bench:
             continue
-        times = time_noop_min(spec.build, spark, sf_dir)
-        per_query[name] = round(min(times), 3)
+        splits = time_noop_split(spec.build, spark, sf_dir)
+        times = [b + w for b, w in splits]
+        fastest = times.index(min(times))
+        per_query[name] = round(times[fastest], 3)
+        build_s[name] = round(splits[fastest][0], 3)
         print(
-            f"# {name}: min={per_query[name]:.3f}s "
+            f"# {name}: min={per_query[name]:.3f}s build={build_s[name]:.3f}s "
             f"(iters: {', '.join(f'{t:.3f}' for t in times)})",
             file=sys.stderr,
         )
-    # Stage-grain attribution for the most expensive composed query: time
-    # each corpus_release_funnel gate plan separately (same noop-sink
-    # materialization) so a regression localizes to ONE stage without
-    # re-profiling the whole funnel. One iteration per stage — these are
-    # attribution hints layered over the funnel's own budgeted min-of-2.
-    funnel_stages: dict[str, float] = {}
-    if "corpus_release_funnel" in per_query:
-        from polkadot_etl_spark.queries.corpus_ext import (  # noqa: PLC0415
-            _RELEASE_STAGES,
-            release_funnel_stage_plans,
-        )
-
-        for stage in _RELEASE_STAGES:
-            # build ONE stage inside the timer: the near-dup gate does
-            # its CC work eagerly at plan-construction time, so timing
-            # only the write would read ~0s for the most expensive gate
-            # (and building all six per stage would attribute that CC
-            # cost to every gate)
-            t0 = time.perf_counter()
-            release_funnel_stage_plans(spark, sf_dir, only=stage)[
-                stage
-            ].write.format("noop").mode("overwrite").save()
-            funnel_stages[stage] = round(time.perf_counter() - t0, 3)
-        print(f"# funnel stages: {funnel_stages}", file=sys.stderr)
-    # Stage-grain attribution for the other expensive composed query:
-    # streaming_dump_replay's cost is dominated by the 4-micro-batch
-    # structured-streaming harness (checkpoint round-trips), not plan
-    # work — split harness vs batch-side dump composition so a future
-    # regression localizes without re-profiling (r10 verdict task #4).
-    # One iteration each — attribution hints over the budgeted min-of-2.
-    dump_replay_stages: dict[str, float] = {}
-    if "streaming_dump_replay" in per_query:
-        from polkadot_etl_spark.queries.pipelines import (  # noqa: PLC0415
-            _dump_replay_gold,
-            _dump_replay_winners,
-        )
-
-        t0 = time.perf_counter()
-        winners = _dump_replay_winners(spark, sf_dir)
-        dump_replay_stages["stream_harness"] = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        _dump_replay_gold(spark, sf_dir, winners).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dump_replay_stages["dump_compose"] = round(time.perf_counter() - t0, 3)
-        print(f"# dump replay stages: {dump_replay_stages}", file=sys.stderr)
     wall_all = round(time.perf_counter() - t_all, 3)
     total = round(sum(per_query.values()), 3)
 
@@ -297,9 +284,8 @@ def main() -> None:
                 "loadavg_1m_end": round(os.getloadavg()[0], 2),
                 "over_budget": over_budget,
                 "no_budget": sorted(no_budget),
-                "funnel_stages": funnel_stages,
-                "dump_replay_stages": dump_replay_stages,
                 "queries": per_query,
+                "build_s": build_s,
             },
             fh,
             indent=1,

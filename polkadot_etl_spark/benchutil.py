@@ -1,9 +1,10 @@
-"""Shared measurement discipline for the five timing tools (bench.py,
-scaling_card.py, parallel_card.py, tools_adjudicate_breaches.py and
-tools_profile.py) — ONE definition of the warmup and the min-of-N
-noop-sink loop, so a future fix to either cannot leave the tools
-silently measuring under different rules (r10 self-review finding: the
-idiom had been copy-pasted three times).
+"""Shared measurement discipline for the timing tools — ONE definition
+of the warmup and the min-of-N noop-sink loop, so a future fix to either
+cannot leave the tools silently measuring under different rules (the
+idiom had once been copy-pasted three times).
+bench.py and tools_profile.py time through ``time_noop_split``,
+scaling_card.py through ``time_noop_min``; parallel_card.py keeps its
+own CPU-time loop and, like perfbench, calls only ``warm_session``.
 
 The discipline (bench.py's, unchanged):
 - warmup: one parquet-footer read + one Arrow/pandas-UDF wave of one
@@ -14,8 +15,11 @@ The discipline (bench.py's, unchanged):
   tasks have a fixed cost");
 - timing: full materialization through the NOOP sink (every output
   column computed, no rows to the driver — `.count()` lets Catalyst
-  legally eliminate the expensive stages, measured in r4);
-- iterations: ``base_iters`` runs, plus one extra when the min is
+  legally eliminate the expensive stages, measured in r4), with the
+  builder's wall time and the write's recorded apart: 41 builders run
+  Spark jobs before they return a DataFrame, and that cost shows up in
+  the build share;
+- iterations: ``base_iters`` runs, plus one extra when the fastest is
   sub-second (scheduler noise dominates there); the MIN is the
   statistic;
 - hygiene: gc.collect() after each query releases the built DataFrames'
@@ -97,25 +101,33 @@ def warm_session(spark: SparkSession, sf_dir: str) -> None:
     spark.range(0, slots, 1, slots).mapInPandas(lambda it: it, "id long").collect()
 
 
-def time_noop_min(
-    build,
-    spark: SparkSession,
-    sf_dir: str,
-    base_iters: int = BASE_ITERS,
-    extra_below: float = EXTRA_BELOW,
-) -> list[float]:
+def time_noop_split(
+    build, spark: SparkSession, sf_dir: str, base_iters: int = BASE_ITERS
+) -> list[tuple[float, float]]:
     """Run ``build(spark, sf_dir)`` through the noop sink ``base_iters``
-    times (+1 when the min lands under ``extra_below`` seconds) and
-    return the per-iteration wall times. Callers take min()."""
-    times: list[float] = []
-    for _ in range(base_iters):
+    times (+1 when the fastest iteration lands under ``EXTRA_BELOW``
+    seconds) and return each iteration's ``(build_s, write_s)``: the
+    builder's wall time, then the write's."""
+    splits: list[tuple[float, float]] = []
+
+    def once() -> None:
         t0 = time.perf_counter()
         df: DataFrame = build(spark, sf_dir)
+        t1 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
-        times.append(time.perf_counter() - t0)
-    if extra_below and min(times) < extra_below:
-        t0 = time.perf_counter()
-        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        times.append(time.perf_counter() - t0)
+        splits.append((t1 - t0, time.perf_counter() - t1))
+
+    for _ in range(base_iters):
+        once()
+    if min(b + w for b, w in splits) < EXTRA_BELOW:
+        once()
     gc.collect()
-    return times
+    return splits
+
+
+def time_noop_min(
+    build, spark: SparkSession, sf_dir: str, base_iters: int = BASE_ITERS
+) -> list[float]:
+    """Per-iteration wall times (build + write) of ``time_noop_split``.
+    Callers take min()."""
+    return [b + w for b, w in time_noop_split(build, spark, sf_dir, base_iters)]

@@ -241,14 +241,15 @@ def twox_128(data: bytes) -> str:
 
 
 def _scale_compact(n: int) -> bytes:
-    """SCALE compact-length encoding (public spec) for small vec lengths."""
+    """SCALE compact encoding (public spec) of an integer below 2**30:
+    vec lengths, para ids."""
     if n < 64:
         return bytes([n << 2])
     if n < 2**14:
         return ((n << 2) | 0b01).to_bytes(2, "little")
     if n < 2**30:
         return ((n << 2) | 0b10).to_bytes(4, "little")
-    raise ValueError("length too large")
+    raise ValueError(f"compact too large: {n}")
 
 
 def compute_multisig(pubkeys_hex: list[str], threshold: int) -> str:

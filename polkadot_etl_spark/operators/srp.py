@@ -72,8 +72,19 @@ def srp_signs_sql_literal(signs: "list[list[int]]") -> str:
 
 
 def _let(val_sql: str, var: str, body_sql: str) -> str:
-    # real let-binding via a 1-element transform (Catalyst never
-    # substitutes across lambda boundaries — plans/xcmgar.py's lesson)
+    """SQL let-binding: evaluate ``val_sql`` ONCE, bind it to lambda
+    variable ``var``, evaluate ``body_sql`` with ``var`` as a LEAF.
+
+    ``element_at(transform(array(v), x -> body), 1)`` is the only
+    pure-SQL way to stop Catalyst from re-inlining a subexpression at
+    every reference: lambda variables are attributes, so referencing
+    one ten times costs ten leaf nodes, not ten copies of the subtree.
+    Without it, plans/xcmgar.py's staged-withColumn codec collapsed
+    back into one tree — 3,226 get_json_object copies / 1.1 MB of
+    optimized plan for gar_longtail_registry, OOMing executor codegen
+    (nondeterministic `when(rand() >= -1, …)` pins don't survive
+    either: Spark 4's rand range analysis folds the guard away). The
+    array is always 1-element, so the ANSI element_at never faults."""
     return f"element_at(transform(array({val_sql}), {var} -> {body_sql}), 1)"
 
 

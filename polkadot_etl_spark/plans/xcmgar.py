@@ -36,6 +36,7 @@ from polkadot_etl_spark.functions.multilocation import (
     interior_key,
     para_id_of,
 )
+from polkadot_etl_spark.operators.srp import _let
 
 _LOC_INFO = T.StructType(
     [
@@ -114,23 +115,6 @@ _CANON_MAP_SQL = (
 # printable ASCII minus '"' (x22) and '\' (x5c): a quoted JSON string
 # with none of these needs no (re-)escaping, so source text == dumps text
 _SAFE_QSTRING_RE = r'^\"[\\x20-\\x21\\x23-\\x5b\\x5d-\\x7e]*\"$'
-
-
-def _let(val_sql: str, var: str, body_sql: str) -> str:
-    """SQL let-binding: evaluate ``val_sql`` ONCE, bind it to lambda
-    variable ``var``, evaluate ``body_sql`` with ``var`` as a LEAF.
-
-    ``element_at(transform(array(v), x -> body), 1)`` is the only
-    pure-SQL way to stop Catalyst from re-inlining a subexpression at
-    every reference: lambda variables are attributes, so referencing
-    one ten times costs ten leaf nodes, not ten copies of the subtree.
-    Without this the staged-withColumn form of the codec collapsed
-    back into one tree — 3,226 get_json_object copies / 1.1 MB of
-    optimized plan for gar_longtail_registry, OOMing executor codegen
-    (nondeterministic `when(rand() >= -1, …)` pins don't survive
-    either: Spark 4's rand range analysis folds the guard away). The
-    array is always 1-element, so the ANSI element_at never faults."""
-    return f"element_at(transform(array({val_sql}), {var} -> {body_sql}), 1)"
 
 
 def native_loc_cols(

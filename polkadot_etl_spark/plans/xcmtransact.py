@@ -42,19 +42,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from polkadot_etl_spark.functions.scalars import _scale_compact
+
 # ---------------------------------------------------------------------------
 # multilocation-derivative codec (xcmtransact.js:1211-1228)
 # ---------------------------------------------------------------------------
-
-
-def _scale_compact(n: int) -> bytes:
-    if n < 64:
-        return bytes([n << 2])
-    if n < 2**14:
-        return (n << 2 | 1).to_bytes(2, "little")
-    if n < 2**30:
-        return (n << 2 | 2).to_bytes(4, "little")
-    raise ValueError(f"compact too large: {n}")
 
 
 def multilocation_derivative(para_id: int, address: str) -> tuple[str, str]:

@@ -3248,40 +3248,31 @@ def corpus_release_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _release_stage_parts(
-    spark: SparkSession, sf_dir: str, only: "set[str] | None" = None
-) -> "dict[str, DataFrame]":
+def _release_stage_parts(spark: SparkSession, sf_dir: str) -> "dict[str, DataFrame]":
     """The funnel's flag plans: 'base' carries f_url + f_train in ONE
     fused _url_staged pass (both are row-local functions of doc_id);
-    the other four keys are the gate plans. Shared by the funnel (which
-    joins them) and release_funnel_stage_plans (bench attribution), so
-    neither can drift from what the release runs. ``only`` restricts
-    construction to the named parts — the near-dup gate does its CC
-    work EAGERLY at build time (lineage-cut checkpoints), so bench
-    stage attribution must be able to build one gate at a time."""
+    the other four keys are the gate plans. Shared by the funnel and
+    the gate attribution audit (which both join them), so neither can
+    drift from what the release runs."""
     from polkadot_etl_spark.queries.llmdata import _split_col, _word_grams
 
-    def want(name: str) -> bool:
-        return only is None or name in only
-
-    parts: "dict[str, DataFrame]" = {}
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    if want("base"):
-        parts["base"] = _url_staged(docs).select(
+    parts: "dict[str, DataFrame]" = {
+        "base": _url_staged(docs).select(
             "doc_id",
             (~F.col("blocked")).alias("f_url"),
             (_split_col() == "train").alias("f_train"),
-        )
-    if want("gopher_quality"):
-        parts["gopher_quality"] = (
+        ),
+        "gopher_quality": (
             QUERIES["gopher_repetition"].build(spark, sf_dir)
             .select("doc_id", F.col("keep").alias("f_gopher"))
-        )
-    if want("exact_dedup"):
-        parts["exact_dedup"] = (
+        ),
+        "exact_dedup": (
             QUERIES["dedup_exact"].build(spark, sf_dir)
             .select("doc_id", (F.col("doc_id") == F.col("canonical_id")).alias("f_exact"))
-        )
+        ),
+    }
+
     def _near() -> DataFrame:
         # MEASURED DECISION (r9, the lsh_planner question): the release
         # gate stays on the recall-leaning (b=4, r=1) family, NOT the
@@ -3338,57 +3329,12 @@ def _release_stage_parts(
             .withColumn("contaminated", F.lit(True))
         )
 
-    if only is None:
-        # under full composition (the funnel / gate audit) the near-dup
-        # gate's eager CC build overlaps the decontamination dim's
-        # checkpoint. Single-stage builds (bench attribution via
-        # ``only``) keep the plain un-checkpointed plans.
-        parts["lsh_near_dedup"], parts["decontamination"] = _overlap(
-            spark, _near, lambda: _contam().localCheckpoint(eager=True)
-        )
-        return parts
-    if want("lsh_near_dedup"):
-        parts["lsh_near_dedup"] = _near()
-    if want("decontamination"):
-        parts["decontamination"] = _contam()
+    # the near-dup gate's eager CC build overlaps the decontamination
+    # dim's checkpoint
+    parts["lsh_near_dedup"], parts["decontamination"] = _overlap(
+        spark, _near, lambda: _contam().localCheckpoint(eager=True)
+    )
     return parts
-
-
-_STAGE_TO_PART = {
-    "url_blocklist": "base",
-    "gopher_quality": "gopher_quality",
-    "exact_dedup": "exact_dedup",
-    "lsh_near_dedup": "lsh_near_dedup",
-    "decontamination": "decontamination",
-    "train_split": "base",
-}
-
-
-def release_funnel_stage_plans(
-    spark: SparkSession, sf_dir: str, only: "str | None" = None
-) -> "dict[str, DataFrame]":
-    """The funnel's six per-stage flag plans, keyed by _RELEASE_STAGES
-    name — bench.py times each through the noop sink so a regression in
-    ONE gate is attributable without re-profiling the composed funnel
-    (r7 verdict task: stage-grain entries in the bench sidecar). Built
-    from the SAME _release_stage_parts the funnel composes; the fused
-    url+split pass is split into its two flag views here. Pass ``only``
-    (a stage name) to construct just that gate's plan — the near-dup
-    gate checkpoints eagerly at BUILD time, so per-stage timing must
-    not pay it for every stage."""
-    wanted = None if only is None else {_STAGE_TO_PART[only]}
-    parts = _release_stage_parts(spark, sf_dir, wanted)
-    out = {}
-    if "base" in parts:
-        out["url_blocklist"] = parts["base"].select("doc_id", "f_url")
-        out["train_split"] = parts["base"].select("doc_id", "f_train")
-    for stage in ("gopher_quality", "exact_dedup", "lsh_near_dedup",
-                  "decontamination"):
-        if stage in parts:
-            out[stage] = parts[stage]
-    if only is not None:
-        return {only: out[only]}
-    return {k: out[k] for k in _RELEASE_STAGES}
 
 
 @query(

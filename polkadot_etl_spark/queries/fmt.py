@@ -34,6 +34,12 @@ def s_dbl(c: Column) -> Column:
     return c.cast("double")
 
 
+def s_decsum(c: Column) -> Column:
+    """Exact (associative) decimal sum emitted as double; d_decsum is
+    its DuckDB twin."""
+    return F.sum(c.cast("decimal(38,10)")).cast("double")
+
+
 # ---- DuckDB side (SQL fragment builders) ----------------------------------
 
 

@@ -6113,9 +6113,11 @@ def _dump_replay_winners(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage 1 of the replay — the STREAMING harness: fixture waves
     through block_candidates_stream -> incremental fork_resolving_sink
     -> finalized-only publish gate. Returns the checkpointed winners
-    frame (number, hash, block_time). Split out so bench.py can
-    attribute the replay's cost to harness-vs-composition (the funnel
-    treatment; r10 verdict task #4)."""
+    frame (number, hash, block_time). Split from _dump_replay_gold so
+    the composition's plan can be pinned on its own
+    (tests/test_plan_quality.py) without the harness; the harness's
+    cost shows in the bench sidecar's build_s, since it runs inside the
+    builder."""
     from polkadot_etl_spark.streaming.pipeline import (
         block_candidates_stream,
         fork_resolving_sink,

@@ -18,13 +18,17 @@ from pyspark.sql.window import Window
 from polkadot_etl_spark.operators.asof import asof_join
 from polkadot_etl_spark.operators.band import band_join_best_match
 from polkadot_etl_spark.operators.topn import top_n_per_group
-from polkadot_etl_spark.queries.fmt import d_date, d_decsum, d_ts, s_date, s_dbl, s_ts
+from polkadot_etl_spark.queries.fmt import (
+    d_date,
+    d_decsum,
+    d_ts,
+    s_date,
+    s_dbl,
+    s_decsum,
+    s_ts,
+)
 from polkadot_etl_spark.queries.registry import query
 from polkadot_etl_spark.sources.tables import load_table
-
-
-def _decsum(c) -> F.Column:
-    return F.sum(c.cast("decimal(38,10)")).cast("double")
 
 
 def _ts_us(c):
@@ -282,7 +286,7 @@ def left_join_dim_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = (
         load_table(spark, sf_dir, "customer")
         .groupBy("c_nationkey")
-        .agg(F.count(F.lit(1)).alias("n_cust"), _decsum(F.col("c_acctbal")).alias("sum_bal"))
+        .agg(F.count(F.lit(1)).alias("n_cust"), s_decsum(F.col("c_acctbal")).alias("sum_bal"))
     )
     # broadcast the AGGREGATED side: a LeftOuter join can only build its
     # right (non-preserved) side, so a broadcast hint on the preserved dim
@@ -325,7 +329,7 @@ def daily_order_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.groupBy(s_date("o_orderdate").alias("order_day")).agg(
         F.count(F.lit(1)).alias("num_orders"),
         F.countDistinct("o_custkey").alias("num_custs"),
-        _decsum(F.col("o_totalprice")).alias("total_usd"),
+        s_decsum(F.col("o_totalprice")).alias("total_usd"),
         F.count(F.when(F.col("o_orderstatus") == "F", 1)).alias("num_finished"),
     )
 
@@ -357,7 +361,7 @@ def trailing_rollups(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(in30, 1)).alias("num_orders_30d"),
         F.count(F.lit(1)).alias("num_orders_all"),
         F.sum(F.when(in30, F.col("o_totalprice").cast("decimal(38,10)"))).cast("double").alias("usd_30d"),
-        _decsum(F.col("o_totalprice")).alias("usd_all"),
+        s_decsum(F.col("o_totalprice")).alias("usd_all"),
     )
 
 
@@ -383,7 +387,7 @@ def monthly_rollup_having(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("num_orders"),
             F.countDistinct("o_custkey").alias("num_custs"),
-            _decsum(F.col("o_totalprice")).alias("total_usd"),
+            s_decsum(F.col("o_totalprice")).alias("total_usd"),
         )
         .where(F.col("__month") <= F.lit("2000-12-31"))
         .select(
@@ -492,8 +496,8 @@ def fee_distribution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
     s = l.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        _decsum(F.col("l_extendedprice")).alias("s1"),
-        _decsum(F.col("l_extendedprice") * F.col("l_extendedprice")).alias("s2"),
+        s_decsum(F.col("l_extendedprice")).alias("s1"),
+        s_decsum(F.col("l_extendedprice") * F.col("l_extendedprice")).alias("s2"),
     )
     std = F.sqrt(
         F.greatest(
@@ -553,7 +557,7 @@ def channel_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy("event_type", s_date("ts").alias("log_dt"))
         .agg(
             F.count(F.lit(1)).alias("cnt"),
-            _decsum(F.coalesce(F.col("value"), F.lit(0.0))).alias("sum_value"),
+            s_decsum(F.coalesce(F.col("value"), F.lit(0.0))).alias("sum_value"),
         )
         .where(F.col("log_dt") < "2024-01-30")
     )
@@ -595,7 +599,7 @@ def ohlcv_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("value").alias("high"),
         F.min("value").alias("low"),
         F.max(F.when(F.col("rn_d") == 1, F.col("value"))).alias("close"),
-        _decsum(F.col("value")).alias("volume"),
+        s_decsum(F.col("value")).alias("volume"),
         F.count(F.lit(1)).alias("n_trades"),
     )
 
@@ -653,7 +657,7 @@ def size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return o.groupBy(bucket.alias("bucket")).agg(
         F.count(F.lit(1)).alias("n_orders"),
-        _decsum(F.col("o_totalprice")).alias("sum_usd"),
+        s_decsum(F.col("o_totalprice")).alias("sum_usd"),
     )
 
 
@@ -680,8 +684,8 @@ def customer_lifetime_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         s_date(F.min("o_orderdate")).alias("first_order"),
         s_date(F.max("o_orderdate")).alias("last_order"),
         F.count(F.lit(1)).alias("n_orders"),
-        _decsum(F.col("o_totalprice")).alias("sum_usd"),
-        (_decsum(F.col("o_totalprice")) / F.count(F.lit(1))).alias("avg_usd"),
+        s_decsum(F.col("o_totalprice")).alias("sum_usd"),
+        (s_decsum(F.col("o_totalprice")) / F.count(F.lit(1))).alias("avg_usd"),
         F.countDistinct("o_orderpriority").alias("n_priorities"),
     )
 
@@ -841,7 +845,7 @@ def rollup_daily_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.rollup("event_type", s_date("ts").alias("log_dt"))
         .agg(
             F.count(F.lit(1)).alias("cnt"),
-            _decsum(F.coalesce(F.col("value"), F.lit(0.0))).alias("sum_value"),
+            s_decsum(F.coalesce(F.col("value"), F.lit(0.0))).alias("sum_value"),
         )
         .select(
             F.coalesce("event_type", F.lit("<all>")).alias("event_type"),

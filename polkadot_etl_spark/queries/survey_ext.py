@@ -15,13 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from polkadot_etl_spark.queries.fmt import d_date, d_decsum, d_ts, s_date, s_ts
+from polkadot_etl_spark.queries.fmt import d_date, d_decsum, d_ts, s_date, s_decsum, s_ts
 from polkadot_etl_spark.queries.registry import query
 from polkadot_etl_spark.sources.tables import load_table
-
-
-def _decsum(c) -> F.Column:
-    return F.sum(c.cast("decimal(38,10)")).cast("double")
 
 
 @query(
@@ -84,8 +80,8 @@ def fuzzy_confidence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks = e.where(F.col("event_type") == "click")
     stats = clicks.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n"),
-        _decsum(F.col("value")).alias("s1"),
-        _decsum(F.col("value") * F.col("value")).alias("s2"),
+        s_decsum(F.col("value")).alias("s1"),
+        s_decsum(F.col("value") * F.col("value")).alias("s2"),
     )
     raw_std = F.sqrt(
         F.greatest(
@@ -253,7 +249,7 @@ def per_block_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.count(F.when(F.col("event_type") == "purchase", 1)).alias("n_purchases"),
         F.countDistinct("event_type").alias("n_types"),
-        _decsum(F.col("value")).alias("sum_value"),
+        s_decsum(F.col("value")).alias("sum_value"),
     )
 
 
@@ -565,6 +561,6 @@ def jdbc_derby_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_suppliers"),
             F.min("s_suppkey").cast("bigint").alias("min_suppkey"),
             F.max("s_suppkey").cast("bigint").alias("max_suppkey"),
-            _decsum(F.col("s_acctbal")).alias("total_acctbal"),
+            s_decsum(F.col("s_acctbal")).alias("total_acctbal"),
         )
     )

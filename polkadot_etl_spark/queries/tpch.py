@@ -15,14 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from polkadot_etl_spark.queries.fmt import d_dbl, d_decsum, s_date, s_dbl
+from polkadot_etl_spark.queries.fmt import d_dbl, d_decsum, s_date, s_dbl, s_decsum
 from polkadot_etl_spark.queries.registry import query
 from polkadot_etl_spark.sources.tables import load_table
-
-
-def _decsum(c) -> F.Column:
-    """Exact (associative) decimal sum emitted as double — see fmt.py."""
-    return F.sum(c.cast("decimal(38,10)")).cast("double")
 
 
 @query(
@@ -50,15 +45,15 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return l.groupBy("l_returnflag", "l_linestatus").agg(
-        _decsum(F.col("l_quantity")).alias("sum_qty"),
-        _decsum(F.col("l_extendedprice")).alias("sum_base_price"),
-        _decsum(disc_price).alias("sum_disc_price"),
-        _decsum(charge).alias("sum_charge"),
+        s_decsum(F.col("l_quantity")).alias("sum_qty"),
+        s_decsum(F.col("l_extendedprice")).alias("sum_base_price"),
+        s_decsum(disc_price).alias("sum_disc_price"),
+        s_decsum(charge).alias("sum_charge"),
         # avg = exact-decimal-sum ÷ count: one IEEE division on identical
         # operands in both engines — no ROUND boundary hazard.
-        (_decsum(F.col("l_quantity")) / F.count(F.lit(1))).alias("avg_qty"),
-        (_decsum(F.col("l_extendedprice")) / F.count(F.lit(1))).alias("avg_price"),
-        (_decsum(F.col("l_discount")) / F.count(F.lit(1))).alias("avg_disc"),
+        (s_decsum(F.col("l_quantity")) / F.count(F.lit(1))).alias("avg_qty"),
+        (s_decsum(F.col("l_extendedprice")) / F.count(F.lit(1))).alias("avg_price"),
+        (s_decsum(F.col("l_discount")) / F.count(F.lit(1))).alias("avg_disc"),
         F.count(F.lit(1)).alias("count_order"),
     )
 
@@ -142,7 +137,7 @@ def tpch_q5_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(
-            _decsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+            s_decsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -171,7 +166,7 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_quantity") < 24)
     )
     return l.agg(
-        _decsum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"),
+        s_decsum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
@@ -278,7 +273,7 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .agg(
-            (F.lit(100.0) * _decsum(promo) / _decsum(disc_price)).alias("promo_revenue_pct"),
+            (F.lit(100.0) * s_decsum(promo) / s_decsum(disc_price)).alias("promo_revenue_pct"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -319,7 +314,7 @@ def tpch_q18_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(l, o.o_orderkey == l.l_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(_decsum(F.col("l_quantity")).alias("sum_qty"))
+        .agg(s_decsum(F.col("l_quantity")).alias("sum_qty"))
         .select(
             "c_name",
             "c_custkey",
@@ -376,7 +371,7 @@ def tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             "supp_nation", "cust_nation", F.year("l_shipdate").cast("bigint").alias("l_year")
         )
-        .agg(_decsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(s_decsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
     )
 
 
@@ -431,14 +426,14 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     l = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#1")
     pavg = l.groupBy(F.col("l_partkey").alias("a_partkey")).agg(
-        (_decsum(F.col("l_quantity")) / F.count(F.lit(1))).alias("avg_qty")
+        (s_decsum(F.col("l_quantity")) / F.count(F.lit(1))).alias("avg_qty")
     )
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .join(pavg, l.l_partkey == pavg.a_partkey)
         .where(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
         .agg(
-            (_decsum(F.col("l_extendedprice")) / 7.0).alias("avg_yearly"),
+            (s_decsum(F.col("l_extendedprice")) / 7.0).alias("avg_yearly"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -470,7 +465,7 @@ def tpch_q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFra
         | ((F.col("p_brand") == "Brand#3") & F.col("p_size").between(1, 35) & F.col("l_quantity").between(20, 30))
     )
     return j.where(br).agg(
-        _decsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+        s_decsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
@@ -499,7 +494,7 @@ def tpch_q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataF
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     avg_bal = c.where(F.col("c_acctbal") > 0.0).agg(
-        (_decsum(F.col("c_acctbal")) / F.count(F.lit(1))).alias("a")
+        (s_decsum(F.col("c_acctbal")) / F.count(F.lit(1))).alias("a")
     )
     return (
         c.crossJoin(F.broadcast(avg_bal))
@@ -508,7 +503,7 @@ def tpch_q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataF
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            _decsum(F.col("c_acctbal")).alias("totacctbal"),
+            s_decsum(F.col("c_acctbal")).alias("totacctbal"),
         )
     )
 
@@ -561,7 +556,7 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n2), F.col("s_nationkey") == F.col("n2_key"))
         .groupBy(F.year("o_orderdate").cast("bigint").alias("o_year"))
         .agg(
-            (_decsum(target) / _decsum(disc)).alias("mkt_share"),
+            (s_decsum(target) / s_decsum(disc)).alias("mkt_share"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -609,7 +604,7 @@ def tpch_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("bigint").alias("o_year"),
         )
-        .agg(_decsum(profit).alias("sum_profit"))
+        .agg(s_decsum(profit).alias("sum_profit"))
     )
 
 
@@ -640,7 +635,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = load_table(spark, sf_dir, "supplier")
     revenue = l.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        _decsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("total_revenue")
+        s_decsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("total_revenue")
     )
     top = revenue.agg(F.max("total_revenue").alias("max_rev"))
     return (
@@ -800,9 +795,9 @@ def tpch_q20_excess_supply_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     sq = (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .groupBy("l_suppkey")
-        .agg(_decsum(F.col("l_quantity")).alias("sum_qty"))
+        .agg(s_decsum(F.col("l_quantity")).alias("sum_qty"))
     )
-    cut = sq.agg((_decsum(F.col("sum_qty")) / F.count(F.lit(1))).alias("mean_qty"))
+    cut = sq.agg((s_decsum(F.col("sum_qty")) / F.count(F.lit(1))).alias("mean_qty"))
     keep = sq.crossJoin(F.broadcast(cut)).where(F.col("sum_qty") > 1.05 * F.col("mean_qty"))
     return (
         s.join(keep, s.s_suppkey == keep.l_suppkey, "left_semi")

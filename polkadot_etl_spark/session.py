@@ -10,8 +10,10 @@ Here those are Catalyst/Tungsten features we simply enable:
   atomic day-partition loads (substrateetl.js:6553-6572).
 - Arrow execution keeps any Python-side work (pandas UDFs) batched.
 
-At cluster scale the same builder is used; only master/shuffle-partition
-settings differ (pass ``shuffle_partitions`` sized ~2-3x total cores).
+At cluster scale the same builder is used; only the master and a few
+settings differ, each passed in ``extra_conf`` (applied last, so it
+overrides any default here): e.g. ``spark.sql.shuffle.partitions`` sized
+~2-3x total cores (the default is one per ``SPARK_GRAFT_CPUS``).
 """
 
 from __future__ import annotations
@@ -29,7 +31,6 @@ _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def get_spark(
     app_name: str = "polkadot-etl-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-safe defaults.
@@ -42,8 +43,6 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -52,7 +51,7 @@ def get_spark(
         # timestamps; pin the session to UTC so epoch math matches the
         # DuckDB oracle exactly.
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", cpus)
         # Adaptive execution: runtime partition coalescing + skew-join
         # splitting. At 100 TB this is what absorbs hot keys (e.g. the
         # reference's skewed from_pub_key distributions).
@@ -72,12 +71,9 @@ def get_spark(
         # the split/advisory grains for the MB-scale local files does NOT
         # help — the test parquet is single-row-group, so a scan cannot
         # split below one task, and a 1 MB AQE advisory grain slowed the
-        # iterative CC queries; the env override below exists for real
-        # deployments with different storage grains.)
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(128 * 1024 * 1024)),
-        )
+        # iterative CC queries; a deployment with a different storage
+        # grain passes it in extra_conf.)
+        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # Quieter local runs.
         .config("spark.ui.enabled", "false")

@@ -1,20 +1,22 @@
 """bench.reconcile_budgets — the self-healing budget contract (the gap
 the r6 AND r7 verdicts flagged: the newest query shipped unguarded after
-every manual regeneration) — as pure file/dict logic, plus the shared
-benchutil instruments every timing tool runs before it measures (the
-box-speed probe and the session warmup) and the BENCH_DETAIL.json
-sidecar's agreement with itself."""
+every manual regeneration) — and bench.speed_ratio, the box-speed rule
+budget verdicts are normalized by, as pure file/dict logic, plus the
+shared benchutil instruments every timing tool runs (the box-speed
+probe, the session warmup and the build/write timing split) and the
+BENCH_DETAIL.json sidecar's agreement with itself."""
 
 from __future__ import annotations
 
 import json
 import re
 import sys
+import time
 import warnings
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-from bench import _budget_of, reconcile_budgets  # noqa: E402
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+from bench import _budget_of, reconcile_budgets, speed_ratio  # noqa: E402
 
 from tests.conftest import SF_DIR  # noqa: E402
 
@@ -75,6 +77,18 @@ def test_no_budget_file_is_silent(tmp_path):
     p = tmp_path / "none.json"
     over, no_budget = reconcile_budgets({"q": 1.0}, str(p), False, True, 0.1)
     assert over == {} and no_budget == [] and not p.exists()
+
+
+def test_speed_ratio_normalizes_by_nt_then_1t_else_raw():
+    then = {"box_speed_1t": 300, "box_speed_nt": 1200, "box_probe_threads": 8}
+    # same thread count: the full-parallel stamp normalizes
+    now = {"box_speed_1t": 200, "box_speed_nt": 600, "box_probe_threads": 8}
+    assert speed_ratio(then, now) == 2.0
+    # thread counts differ: nt stamps are not comparable, 1t is
+    now = {"box_speed_1t": 200, "box_speed_nt": 600, "box_probe_threads": 4}
+    assert speed_ratio(then, now) == 1.5
+    # budgets stamped before the probe existed: raw verdict only
+    assert speed_ratio({}, now) is None
 
 
 def test_box_speed_probe_shape(spark):
@@ -156,6 +170,44 @@ def test_warm_session_is_one_python_wave_per_core_slot(spark):
     ]
 
 
+def test_noop_timing_splits_build_from_write(spark, monkeypatch):
+    """benchutil.time_noop_split times the builder apart from the write:
+    a builder that runs an eager localCheckpoint job before returning a
+    cheap frame shows that job in its build share, and time_noop_min
+    returns exactly the per-iteration build + write sums."""
+    from polkadot_etl_spark import benchutil
+
+    inside: list[float] = []
+
+    def build(spark, sf_dir):
+        t0 = time.perf_counter()
+        (
+            spark.range(0, 200_000, 1, 4)
+            .selectExpr("id % 97 AS k")
+            .groupBy("k")
+            .count()
+            .localCheckpoint(eager=True)
+        )
+        inside.append(time.perf_counter() - t0)
+        return spark.range(1)
+
+    recorded = []
+    real = benchutil.time_noop_split
+
+    def spy(*args, **kwargs):
+        recorded.append(real(*args, **kwargs))
+        return recorded[-1]
+
+    monkeypatch.setattr(benchutil, "time_noop_split", spy)
+    totals = benchutil.time_noop_min(build, spark, SF_DIR)
+    (splits,) = recorded
+    assert totals == [b + w for b, w in splits]
+    assert len(splits) == len(inside) >= benchutil.BASE_ITERS
+    for (build_s, write_s), job_s in zip(splits, inside):
+        assert build_s >= job_s > 0, (build_s, job_s)
+        assert write_s > 0
+
+
 def test_bench_detail_sidecar_agrees_with_itself():
     """BENCH_DETAIL.json is checked only against itself, never against
     prose or another file, so it holds after any bench.py run."""
@@ -166,5 +218,8 @@ def test_bench_detail_sidecar_agrees_with_itself():
     assert detail["value"] == round(sum(queries.values()), 3)
     assert set(detail["over_budget"]) <= set(queries)
     assert detail["box_probe_threads"] > 0
+    build_s = detail["build_s"]
+    assert set(build_s) == set(queries)
+    assert all(0 <= build_s[q] <= queries[q] for q in queries)
     sha = detail.get("git_sha")
     assert sha is None or re.fullmatch(r"[0-9a-f]{40}", sha), sha

@@ -1,20 +1,29 @@
 """Per-query optimization loop helper (r13): time named queries through
-the bench's own noop-sink discipline and/or dump their formatted plans.
+the bench's own noop-sink discipline, judge them against their
+checked-in budgets, and/or dump their formatted plans.
 
 Usage:
     python tools_profile.py q1 q2 ...               # time each (min of N)
     python tools_profile.py --explain-dir plans/r13 --suffix _before q1 ...
-    python tools_profile.py --iters 3 q1
+    python tools_profile.py --iters 5 q1            # re-measure a breach
     SPARK_GRAFT_CONF='spark.foo=bar;spark.baz=qux' python tools_profile.py q1
 
-Timing uses benchutil.time_noop_min (identical methodology to bench.py)
+Timing uses benchutil.time_noop_split (identical methodology to bench.py)
 at $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS], after
 the same warm_session, so numbers here are comparable to BENCH_DETAIL.
+
+At the budgets' own scale factor each timed query also gets its
+BENCH_BUDGETS.json verdict, raw and normalized by box speed
+(bench.speed_ratio): when a query is over its raw budget, this sitting's
+box is probed once (benchutil.box_speed_probe) and the budget is scaled
+by the generating sitting's stamped speed over this one's, so box drift
+reads apart from a real regression. Run breaches on an idle box.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 import time
@@ -29,7 +38,12 @@ def main() -> int:
     ap.add_argument("--no-time", action="store_true")
     args = ap.parse_args()
 
-    from polkadot_etl_spark.benchutil import time_noop_min, warm_session
+    from bench import _BUDGET_PATH, scale_factor, speed_ratio
+    from polkadot_etl_spark.benchutil import (
+        box_speed_probe,
+        time_noop_split,
+        warm_session,
+    )
     from polkadot_etl_spark.queries import QUERIES
     from polkadot_etl_spark.session import get_spark
 
@@ -39,13 +53,25 @@ def main() -> int:
         if "=" in kv:
             k, v = kv.split("=", 1)
             extra[k.strip()] = v.strip()
-    spark = get_spark(app_name="tools-profile", extra_conf=extra or None)
-    warm_session(spark, sf_dir)
 
     missing = [n for n in args.names if n not in QUERIES]
     if missing:
         print(f"unknown queries: {missing}", file=sys.stderr)
         return 2
+
+    budget_doc: dict = {}
+    if os.path.exists(_BUDGET_PATH):
+        with open(_BUDGET_PATH) as fh:
+            budget_doc = json.load(fh)
+    if abs(scale_factor(sf_dir) - budget_doc.get("sf", -1.0)) > 1e-9:
+        budget_doc = {}  # budgets hold at their own scale factor only
+    budgets: dict[str, float] = budget_doc.get("budgets", {})
+    box_then: dict = budget_doc.get("box_speed") or {}
+
+    print(f"# loadavg_1m at start: {os.getloadavg()[0]:.2f}")
+    spark = get_spark(app_name="tools-profile", extra_conf=extra or None)
+    warm_session(spark, sf_dir)
+    box_now: "dict | None" = None
 
     for name in args.names:
         spec = QUERIES[name]
@@ -63,14 +89,36 @@ def main() -> int:
             with open(path, "w") as fh:
                 fh.write(plan)
             print(f"# {name}: plan -> {path} (build {build_s:.2f}s)")
-        if not args.no_time:
-            spark.sparkContext.setJobDescription(f"profile: {name}")
-            times = time_noop_min(spec.build, spark, sf_dir, base_iters=args.iters)
-            spark.sparkContext.setJobDescription(None)
-            print(
-                f"{name}: min={min(times):.3f}s iters="
-                + ",".join(f"{t:.3f}" for t in times)
-            )
+        if args.no_time:
+            continue
+        spark.sparkContext.setJobDescription(f"profile: {name}")
+        splits = time_noop_split(spec.build, spark, sf_dir, base_iters=args.iters)
+        spark.sparkContext.setJobDescription(None)
+        times = [b + w for b, w in splits]
+        m = min(times)
+        b = budgets.get(name)
+        if b is None:
+            verdict = "no budget at this sf"
+        elif m <= b:
+            verdict = f"UNDER budget {b:.2f}s"
+        else:
+            if box_now is None:
+                box_now = box_speed_probe(spark)
+                print(f"# box speed now: {box_now}")
+                print(f"# box speed at budget generation: {box_then or 'UNSTAMPED'}")
+            ratio = speed_ratio(box_then, box_now)
+            verdict = f"OVER budget {b:.2f}s"
+            if ratio:
+                b_norm = b * ratio
+                verdict += (
+                    f", ratio {ratio:.3f}, UNDER normalized ({b_norm:.2f}s): box drift"
+                    if m <= b_norm
+                    else f", ratio {ratio:.3f}, OVER normalized ({b_norm:.2f}s): REAL"
+                )
+        print(
+            f"{name}: min={m:.3f}s build={splits[times.index(m)][0]:.3f}s "
+            f"{verdict} iters=" + ",".join(f"{t:.3f}" for t in times)
+        )
     return 0
 
 

@@ -31,11 +31,18 @@ def upsert_day_partitioned(
 ) -> None:
     """MERGE ``updates`` into the day-partitioned parquet table at
     ``path``: rows matching on ``keys`` are replaced, new keys are
-    inserted; only the partitions present in ``updates`` are rewritten."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    inserted; only the partitions present in ``updates`` are rewritten.
+
+    Dynamic overwrite is a writer option, so the caller's session keeps
+    its own ``spark.sql.sources.partitionOverwriteMode``."""
     up = updates.withColumn(partition_col, F.to_date(F.col(time_col)))
     if not os.path.isdir(path):
-        up.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+        (
+            up.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .parquet(path)
+        )
         return
     days = [r[0].isoformat() for r in up.select(partition_col).dropDuplicates().collect()]
     existing = (
@@ -48,6 +55,7 @@ def upsert_day_partitioned(
         kept.unionByName(up)
         .repartition(partition_col)
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
         .parquet(path)
     )

@@ -478,21 +478,23 @@ class ParallelParser(ChainParser):
         return acct.alias("account"), asset.alias("asset_id")
 
     @staticmethod
-    def liquid_staking_exchange_rate(decorated_val: Column) -> Column:
+    def liquid_staking_exchange_rate(decorated_val: str) -> Column:
         """liquidStaking:exchangeRate — 18-decimal fixed-point, possibly
-        hex (parallel.js:417-424 getLiquidStakingExchangeRateVal)."""
+        hex (parallel.js:417-424 getLiquidStakingExchangeRateVal), from
+        the SQL text of the decorated value."""
         from polkadot_etl_spark.plans.feeds import _u128_from_maybe_hex
 
-        return _u128_from_maybe_hex(decorated_val).cast("double") / 1e18
+        return F.expr(_u128_from_maybe_hex(decorated_val)).cast("double") / 1e18
 
     @staticmethod
-    def oracle_price(decorated_val: Column):
+    def oracle_price(decorated_val: str):
         """oracle:values → (raw_price, price_ts): value is a u128 hex,
-        timestamp is ms → floor seconds (parallel.js:246-255)."""
+        timestamp is ms → floor seconds (parallel.js:246-255); the
+        decorated value is given as SQL text."""
         from polkadot_etl_spark.plans.feeds import _u128_from_maybe_hex
 
-        raw = _u128_from_maybe_hex(F.get_json_object(decorated_val, "$.value"))
-        ts = (F.get_json_object(decorated_val, "$.timestamp").try_cast("long") / 1000).cast("long")
+        raw = F.expr(_u128_from_maybe_hex(f"get_json_object({decorated_val}, '$.value')"))
+        ts = (F.get_json_object(F.expr(decorated_val), "$.timestamp").try_cast("long") / 1000).cast("long")
         return raw.alias("raw_price"), ts.alias("price_ts")
 
 

@@ -33,12 +33,21 @@ from pyspark.sql.window import Window
 _VERIFIED_STATUS = ("Reasonable", "KnownGood")  # identityManager.js:88
 
 
-def _u128_hex_to_str(hex32: Column) -> Column:
-    """Exact base-10 digit string for a FULL-RANGE u128 given as 32
-    big-endian hex chars.  hi*2^64+lo does not fit decimal(38,0) (u128
-    max ≈ 3.4e38 > 10^38-1), so assemble in base-10^12 limbs — every
-    intermediate stays < 10^31 and the result is exact up to 2^128-1.
-    Identity used: 2^64 = 18446744*10^12 + 73709551616.
+def _u128_hex_to_str(hex_body: str) -> str:
+    """SQL text: the exact base-10 digit string of ``hex_body``, the SQL
+    text of an unprefixed big-endian hex string of up to 32 digits (a
+    FULL-RANGE u128); NULL when it is wider, because lpad TRUNCATES a
+    longer string and would silently decode a prefix.  hi*2^64+lo does
+    not fit decimal(38,0) (u128 max ≈ 3.4e38 > 10^38-1), so assemble in
+    base-10^12 limbs — every intermediate stays < 10^31 and the result
+    is exact up to 2^128-1.  Identity used: 2^64 = 18446744*10^12 +
+    73709551616.
+
+    This is the one u128 decode.  It is SQL text because a cold build
+    of the snapshot plans makes several of these trees, and each
+    Column-API node costs py4j round trips (README pitfall "Large
+    expression trees cost py4j, not JVM"); the text parses to the same
+    Catalyst expression in one call.
 
     Codegen note (r11 verdict: janino 64 KB): expressions under a
     When branch are excluded from subexpression elimination, so every
@@ -48,40 +57,45 @@ def _u128_hex_to_str(hex32: Column) -> Column:
     never carries a leading zero when positive, and when high is 0 the
     strip reduces '0' + the zero-padded low limb to the bare digits,
     exactly the branch's cast-through-decimal(12,0) result. This halves
-    the expansion factor (~10 -> ~5 copies of hex32 per call)."""
-    import decimal
-
-    H = F.conv(F.substring(hex32, 1, 16), 16, 10).cast("decimal(20,0)")
-    L = F.conv(F.substring(hex32, 17, 16), 16, 10).cast("decimal(20,0)")
-    # t = H*73709551616 + L  ≤ 1.36e30, exact in decimal(31,0)
-    t = (H * F.lit(decimal.Decimal(73709551616)) + L).cast("decimal(31,0)")
+    the expansion factor (~10 -> ~5 copies of the padded body per call;
+    each copy reads the input twice, in the width guard and the lpad)."""
+    b = f"CASE WHEN length({hex_body}) <= 32 THEN lpad({hex_body}, 32, '0') END"
+    hi = f"CAST(conv(substring({b}, 1, 16), 16, 10) AS DECIMAL(20,0))"
+    lo = f"CAST(conv(substring({b}, 17, 16), 16, 10) AS DECIMAL(20,0))"
+    # t = hi*73709551616 + lo  ≤ 1.36e30, exact in decimal(31,0)
+    t = f"CAST({hi} * 73709551616BD + {lo} AS DECIMAL(31,0))"
     # split t into base-10^12 digits by string slicing (no decimal division,
     # whose Spark result scale rules would round)
-    t_str = F.lpad(t.cast("string"), 31, "0")
-    t_hi = F.substring(t_str, 1, 19).cast("decimal(20,0)")
-    t_lo_str = F.substring(t_str, 20, 12)
-    # high = H*18446744 + carry  ≤ 3.41e26, exact in decimal(27,0)
-    high = (H * F.lit(decimal.Decimal(18446744)) + t_hi).cast("decimal(27,0)")
-    return F.regexp_replace(
-        F.concat(high.cast("string"), t_lo_str), "^0+(?=[0-9])", ""
+    t_str = f"lpad(CAST({t} AS STRING), 31, '0')"
+    t_hi = f"CAST(substring({t_str}, 1, 19) AS DECIMAL(20,0))"
+    # high = hi*18446744 + carry  ≤ 3.41e26, exact in decimal(27,0)
+    high = f"CAST({hi} * 18446744BD + {t_hi} AS DECIMAL(27,0))"
+    return (
+        f"regexp_replace(concat(CAST({high} AS STRING), substring({t_str}, 20, 12)),"
+        " '^0+(?=[0-9])', '')"
     )
 
 
-def _u128_from_maybe_hex(c: Column) -> Column:
-    """Exact decimal(38,0) from a decimal string OR a 0x-hex string (EVM
-    chains emit hex balances, moonbeam.js:888 dechexToInt) — via the
-    full-range limb string so values past 2^63 stay exact.  The published
-    column contract is decimal(38,0) (BigQuery NUMERIC twin), so the
-    astronomically-unlikely balances ≥ 10^38 (> total issuance of any
-    real chain by ~19 orders of magnitude) overflow to NULL here; callers
-    needing the untruncated value use _u128_hex_to_str directly."""
-    hex_body = F.lpad(F.regexp_replace(c, "^0x", ""), 32, "0")
-    # try_cast, not cast: under ANSI mode (Spark 4 default) a plain cast
-    # of a legal u128 ≥ 10^38 THROWS and fails the task; the published
-    # column contract is NULL there (callers wanting the exact value use
-    # _u128_hex_to_str / the *_raw string duals)
-    from_hex = _u128_hex_to_str(hex_body).try_cast("decimal(38,0)")
-    return F.when(c.startswith("0x"), from_hex).otherwise(c.try_cast("decimal(38,0)"))
+def _u128_from_maybe_hex(c: str) -> str:
+    """SQL text: exact decimal(38,0) from the SQL text ``c`` of a decimal
+    string OR a 0x-hex string (EVM chains emit hex balances,
+    moonbeam.js:888 dechexToInt) — via the full-range limb string so
+    values past 2^63 stay exact.  The published column contract is
+    decimal(38,0) (BigQuery NUMERIC twin), so the astronomically-unlikely
+    balances ≥ 10^38 (> total issuance of any real chain by ~19 orders
+    of magnitude) overflow to NULL here, as does hex wider than u128;
+    callers needing the untruncated value use _u128_hex_to_str
+    directly.
+
+    try_cast, not cast: under ANSI mode (Spark 4 default) a plain cast
+    of a legal u128 ≥ 10^38 THROWS and fails the task; the published
+    column contract is NULL there (callers wanting the exact value use
+    _u128_hex_to_str / the *_raw string duals)."""
+    from_hex = _u128_hex_to_str(f"regexp_replace({c}, '^0x', '')")
+    return (
+        f"CASE WHEN startswith({c}, '0x') THEN try_cast({from_hex} AS DECIMAL(38,0))"
+        f" ELSE try_cast({c} AS DECIMAL(38,0)) END"
+    )
 
 
 def _dechex_int(c: Column) -> Column:
@@ -156,7 +170,7 @@ def reward_feed(
         F.col(order_col).alias("__ord"),
         era_raw.alias("__era_raw"),
         F.when(is_reward, F.get(F.col("__d"), account_index)).alias("account"),
-        F.when(is_reward, _u128_from_maybe_hex(F.get(F.col("__d"), amount_index))).alias("__raw"),
+        F.when(is_reward, F.expr(_u128_from_maybe_hex(f"get(__d, {amount_index})"))).alias("__raw"),
         F.when(is_reward, contract).alias("smart_contract"),
         F.when(F.col("method") == "Slashed", F.lit(-1)).otherwise(F.lit(1)).alias("__sign"),
     )

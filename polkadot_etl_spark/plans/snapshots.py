@@ -24,15 +24,26 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from polkadot_etl_spark.schemas import SNAPSHOTS
 
 
-def canonical_hour_ts(ts: Column) -> Column:
-    """priceManager.js:1035 canonicalTS = floor(unix/3600)*3600, as a
-    timestamp column (integer epoch math — pushes into codegen)."""
-    return F.timestamp_seconds(F.floor(F.unix_timestamp(ts) / 3600) * 3600)
+def _sql_lit(v) -> str:
+    """A Python None, int or str as a Spark SQL literal."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, int) and not isinstance(v, bool):
+        return str(v)
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise TypeError(f"no SQL literal for {v!r}")
+
+
+def canonical_hour_ts(ts: str) -> str:
+    """priceManager.js:1035 canonicalTS = floor(unix/3600)*3600, as SQL
+    text of a timestamp over the SQL text ``ts`` (integer epoch math —
+    pushes into codegen)."""
+    return f"timestamp_seconds(floor(unix_timestamp({ts}) / 3600) * 3600)"
 
 
 def snapshot_rows(
@@ -42,68 +53,69 @@ def snapshot_rows(
     storage: str,
     source: str,
     chain: dict,
-    block_number: Column,
-    block_hash: Column,
-    ts: Column,
-    track: Column | None = None,
-    track_val: Column | None = None,
-    kv: Column | None = None,
-    kv_str: Column | None = None,
-    pv: Column | None = None,
-    pv_str: Column | None = None,
-    address_ss58: Column | None = None,
-    address_pubkey: Column | None = None,
+    block_number: str,
+    block_hash: str,
+    ts: str,
+    track: str | None = None,
+    track_val: str | None = None,
+    kv: str | None = None,
+    kv_str: str | None = None,
+    pv: str | None = None,
+    pv_str: str | None = None,
+    address_ss58: str | None = None,
+    address_pubkey: str | None = None,
     dedup_first_per_hour: bool = False,
     order_col: str | None = None,
 ) -> DataFrame:
     """Normalize observation rows into the published snapshots contract.
 
-    ``kv``/``pv`` are struct Columns (packed to JSON via to_json, so the
-    blob is canonical and engine-stable for integral/string fields);
-    ``chain`` supplies the relay_chain/para_id/id/chain_name identity
-    literals.  With ``dedup_first_per_hour`` the reference's `hit` rule
-    keeps only the earliest observation (by ``order_col``) per
-    (track_val, canonical hour)."""
-    null_s = F.lit(None).cast("string")
-    out = observations.select(
-        F.lit(chain.get("relay_chain")).alias("relay_chain"),
-        F.lit(str(chain.get("para_id"))).alias("para_id"),
-        F.lit(chain.get("id")).alias("id"),
-        F.lit(chain.get("chain_name")).alias("chain_name"),
-        canonical_hour_ts(ts).alias("ts"),
-        block_number.cast("long").alias("block_number"),
-        block_hash.alias("block_hash"),
-        (address_ss58 if address_ss58 is not None else null_s).alias("address_ss58"),
-        (address_pubkey if address_pubkey is not None else null_s).alias("address_pubkey"),
-        F.lit(section).alias("section"),
-        F.lit(storage).alias("storage"),
-        (track if track is not None else null_s).alias("track"),
-        (track_val if track_val is not None else null_s).alias("track_val"),
-        (
-            F.to_json(kv)
-            if kv is not None
-            else (kv_str if kv_str is not None else null_s)
-        ).alias("kv"),
+    Every column argument is SQL text over ``observations``' columns:
+    the projection is one ``selectExpr``, so a cold build parses it in
+    a few py4j calls instead of one or more per Column-API node.
+    ``kv``/``pv`` are struct expressions (packed to JSON via to_json, so
+    the blob is canonical and engine-stable for integral/string
+    fields); ``chain`` supplies the relay_chain/para_id/id/chain_name
+    identity literals.  With ``dedup_first_per_hour`` the reference's
+    `hit` rule keeps only the earliest observation (by ``order_col``)
+    per (track_val, canonical hour)."""
+    def text(e: str | None) -> str:
+        return "CAST(NULL AS STRING)" if e is None else e
+
+    out = observations.selectExpr(
+        f"{_sql_lit(chain.get('relay_chain'))} AS relay_chain",
+        f"{_sql_lit(str(chain.get('para_id')))} AS para_id",
+        f"{_sql_lit(chain.get('id'))} AS id",
+        f"{_sql_lit(chain.get('chain_name'))} AS chain_name",
+        f"{canonical_hour_ts(ts)} AS ts",
+        f"CAST({block_number} AS BIGINT) AS block_number",
+        f"{block_hash} AS block_hash",
+        f"{text(address_ss58)} AS address_ss58",
+        f"{text(address_pubkey)} AS address_pubkey",
+        f"{_sql_lit(section)} AS section",
+        f"{_sql_lit(storage)} AS storage",
+        f"{text(track)} AS track",
+        f"{text(track_val)} AS track_val",
+        f"{f'to_json({kv})' if kv is not None else text(kv_str)} AS kv",
         # pv is a struct packed to JSON; pv_str is an already-scalar pv
         # (e.g. a bare issuance string, snapshot/hydradx.js:192)
-        (
-            F.to_json(pv)
-            if pv is not None
-            else (pv_str if pv_str is not None else null_s)
-        ).alias("pv"),
-        F.lit(source).alias("source"),
-        *( [F.col(order_col).alias("__ord")] if order_col else [] ),
+        f"{f'to_json({pv})' if pv is not None else text(pv_str)} AS pv",
+        f"{_sql_lit(source)} AS source",
+        *([f"{order_col} AS __ord"] if order_col else []),
     )
     if dedup_first_per_hour:
-        w = Window.partitionBy("track_val", "ts").orderBy(F.col("__ord").asc())
         out = (
-            out.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
+            out.selectExpr(
+                "*",
+                "row_number() OVER (PARTITION BY track_val, ts ORDER BY __ord ASC) AS __rn",
+            )
+            .where("__rn = 1")
             .drop("__rn")
         )
     if order_col:
         out = out.drop("__ord")
-    return out.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in SNAPSHOTS.fields])
+    return out.selectExpr(
+        *[f"CAST({f.name} AS {f.dataType.simpleString()}) AS {f.name}" for f in SNAPSHOTS.fields]
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -111,19 +123,21 @@ def snapshot_rows(
 # ---------------------------------------------------------------------------
 
 
-def _dechex_str(c: Column) -> Column:
-    """paraTool.dechexToIntStr: '0x1a2' → '418', decimal strings pass
-    through — full u128 range via the base-10^12 limb decode (the
-    snapshot pv contract keeps big balances as exact strings, e.g.
-    snapshot/hydradx.js:176-180)."""
+def _dechex_str(c: str) -> str:
+    """SQL text of paraTool.dechexToIntStr over the SQL text ``c``:
+    '0x1a2' → '418', decimal strings pass through — full u128 range via
+    the base-10^12 limb decode (the snapshot pv contract keeps big
+    balances as exact strings, e.g. snapshot/hydradx.js:176-180); hex
+    wider than u128 is NULL (visible bad data)."""
     from polkadot_etl_spark.plans.feeds import _u128_hex_to_str
 
-    # lpad TRUNCATES strings longer than its target length — a hex body
-    # wider than u128 must surface as NULL (visible bad data), never as
-    # a silently prefix-truncated number.
-    raw = F.regexp_replace(c, "^0x", "")
-    hex_body = F.when(F.length(raw) <= 32, F.lpad(raw, 32, "0"))
-    return F.when(c.startswith("0x"), _u128_hex_to_str(hex_body)).otherwise(c)
+    from_hex = _u128_hex_to_str(f"regexp_replace({c}, '^0x', '')")
+    return f"CASE WHEN startswith({c}, '0x') THEN {from_hex} ELSE {c} END"
+
+
+def _value_dechex(path: str) -> str:
+    """SQL text: dechexToIntStr of the ``value`` JSON field at ``path``."""
+    return _dechex_str(f"get_json_object(value, '{path}')")
 
 
 class ChainSnapshotter:
@@ -142,22 +156,25 @@ class ChainSnapshotter:
     chain_decimals = 10
     source = "polkaholic"  # setSnapshotSource (snapshot/hydradx.js:25)
 
-    def _decimalized(self, c: Column) -> Column:
-        """dechexToInt(v) / 10**chainDecimals as a double. The exact
-        decimal STRING parses into a double before ONE IEEE division,
-        so both engines see identical values (decimal→double direct
-        casts differ by 1 ulp across engines)."""
-        return _dechex_str(c).cast("double") / F.lit(float(10**self.chain_decimals))
+    def _decimalized(self, c: str) -> Column:
+        """dechexToInt(c) / 10**chainDecimals as a double, for the SQL
+        text ``c``. The exact decimal STRING parses into a double before
+        ONE IEEE division, so both engines see identical values
+        (decimal→double direct casts differ by 1 ulp across engines)."""
+        return F.expr(f"CAST({_dechex_str(c)} AS DOUBLE) / {10**self.chain_decimals}D")
 
     def _memo(self, site: str, build):
         """Corpus-independent Column-tree memo for the track builders
         (r14, the gar-parser pattern — see plans/exprmemo.py): each
         builder's select lists are pure functions of the snapshotter
         CLASS (track maps, chain_decimals), not of the data, yet their
-        construction dominated the snapshot queries' build time
-        (~16.6k py4j round trips / ~4.5 s per relay build, cProfile).
-        Keyed per concrete class so subclass knobs (e.g. Kusama's 12
-        decimals) can never be served another chain's trees."""
+        construction dominated the snapshot queries' build time (r14:
+        ~16.6k py4j round trips / ~4.5 s per relay build). A cold
+        snapshots_relay_opengov build now makes ~4.4k (~18k before the
+        u128 decode became SQL text and get_spark turned PySpark's
+        per-call origin capture off). Keyed per concrete class so
+        subclass knobs (e.g. Kusama's 12 decimals) can never be served
+        another chain's trees."""
         from polkadot_etl_spark.plans.exprmemo import expr_cache
 
         return expr_cache(
@@ -172,9 +189,9 @@ class ChainSnapshotter:
             storage=storage,
             source=self.source,
             chain=self.chain,
-            block_number=F.lit(block["number"]),
-            block_hash=F.lit(block["hash"]),
-            ts=F.lit(block["ts"]).cast("timestamp"),
+            block_number=_sql_lit(block["number"]),
+            block_hash=_sql_lit(block["hash"]),
+            ts=f"CAST({_sql_lit(block['ts'])} AS TIMESTAMP)",
             **kw,
         )
 
@@ -186,29 +203,25 @@ class ChainSnapshotter:
         (snapshot/interlay.js:31-47) and bifrost's tokens/vtokenMinting
         maps (snapshot/bifrost.js:74-130): track_val = the currency-id
         JSON itself, pv = the dechexToIntStr issuance string."""
-        cur = F.get_json_object("key_args", "$[0]")
         return self._rows(
-            entries.withColumn("__cur", cur),
+            entries.selectExpr("*", "get_json_object(key_args, '$[0]') AS __cur"),
             section=section,
             storage=storage,
             block=block,
-            track=F.lit(track),
-            track_val=F.col("__cur"),
-            kv_str=F.col("__cur"),
-            pv_str=_dechex_str(F.col("value")),
+            track=_sql_lit(track),
+            track_val="__cur",
+            kv_str="__cur",
+            pv_str=_dechex_str("value"),
         )
 
     @staticmethod
-    def _ticker(entries: DataFrame, asset_registry: DataFrame, id_col: Column) -> DataFrame:
-        """assetMap.get(assetID)?.symbol — broadcast dim decoration; ids
-        missing from the registry keep a NULL ticker exactly like the
-        reference's optional-chaining miss (hydradx.js:152)."""
-        dim = F.broadcast(
-            asset_registry.select(
-                F.col("asset_id").alias("__aid"), F.col("symbol").alias("__ticker")
-            )
-        )
-        return entries.join(dim, id_col == F.col("__aid"), "left")
+    def _ticker(entries: DataFrame, asset_registry: DataFrame, id_sql: str) -> DataFrame:
+        """assetMap.get(assetID)?.symbol — broadcast dim decoration on the
+        asset id given as SQL text; ids missing from the registry keep a
+        NULL ticker exactly like the reference's optional-chaining miss
+        (hydradx.js:152)."""
+        dim = F.broadcast(asset_registry.selectExpr("asset_id AS __aid", "symbol AS __ticker"))
+        return entries.join(dim, F.expr(f"{id_sql} = __aid"), "left")
 
 
 class HydradxSnapshotter(ChainSnapshotter):
@@ -227,26 +240,26 @@ class HydradxSnapshotter(ChainSnapshotter):
         """omnipool.assets → track 'omniasset' (hydradx.js:195-216):
         track_val = asset id, kv = {id, ticker}, pv = state with
         hubReserve/shares/protocolShares/cap dechex-normalized."""
-        aid = F.get_json_object("key_args", "$[0]").cast("long")
-        e = self._ticker(entries.withColumn("__id", aid), asset_registry, aid)
-        pv = F.struct(
-            _dechex_str(F.get_json_object("value", "$.hubReserve")).alias("hubReserve"),
-            _dechex_str(F.get_json_object("value", "$.shares")).alias("shares"),
-            _dechex_str(F.get_json_object("value", "$.protocolShares")).alias(
-                "protocolShares"
-            ),
-            _dechex_str(F.get_json_object("value", "$.cap")).alias("cap"),
-            F.get_json_object("value", "$.tradable").alias("tradable"),
+        aid = "CAST(get_json_object(key_args, '$[0]') AS BIGINT)"
+        e = self._ticker(entries.selectExpr("*", f"{aid} AS __id"), asset_registry, aid)
+        pv = ", ".join(
+            [
+                *(
+                    f"{_value_dechex('$.' + f)} AS {f}"
+                    for f in ("hubReserve", "shares", "protocolShares", "cap")
+                ),
+                "get_json_object(value, '$.tradable') AS tradable",
+            ]
         )
         return self._rows(
             e,
             section="omnipool",
             storage="assets",
             block=block,
-            track=F.lit("omniasset"),
-            track_val=F.col("__id").cast("string"),
-            kv=F.struct(F.col("__id").alias("id"), F.col("__ticker").alias("ticker")),
-            pv=pv,
+            track="'omniasset'",
+            track_val="CAST(__id AS STRING)",
+            kv="struct(__id AS id, __ticker AS ticker)",
+            pv=f"struct({pv})",
         )
 
     def omnipool_positions(self, entries: DataFrame, asset_registry: DataFrame,
@@ -255,26 +268,36 @@ class HydradxSnapshotter(ChainSnapshotter):
         keyed by position NFT id, track_val = the position's assetId, the
         price pair splits into price_1/price_2 (both dechex-normalized,
         array dropped)."""
-        pos_id = F.get_json_object("key_args", "$[0]").cast("long")
-        aid = F.get_json_object("value", "$.assetId").cast("long")
-        e = self._ticker(entries.withColumn("__pid", pos_id).withColumn("__aid2", aid),
-                         asset_registry, aid)
-        pv = F.struct(
-            F.col("__aid2").alias("assetId"),
-            _dechex_str(F.get_json_object("value", "$.amount")).alias("amount"),
-            _dechex_str(F.get_json_object("value", "$.shares")).alias("shares"),
-            _dechex_str(F.get_json_object("value", "$.price[0]")).alias("price_1"),
-            _dechex_str(F.get_json_object("value", "$.price[1]")).alias("price_2"),
+        aid = "CAST(get_json_object(value, '$.assetId') AS BIGINT)"
+        e = self._ticker(
+            entries.selectExpr("*", "CAST(get_json_object(key_args, '$[0]') AS BIGINT) AS __pid")
+            .selectExpr("*", f"{aid} AS __aid2"),
+            asset_registry,
+            aid,
+        )
+        pv = ", ".join(
+            [
+                "__aid2 AS assetId",
+                *(
+                    f"{_value_dechex(path)} AS {name}"
+                    for path, name in (
+                        ("$.amount", "amount"),
+                        ("$.shares", "shares"),
+                        ("$.price[0]", "price_1"),
+                        ("$.price[1]", "price_2"),
+                    )
+                ),
+            ]
         )
         return self._rows(
             e,
             section="omnipool",
             storage="positions",
             block=block,
-            track=F.lit("liquidity"),
-            track_val=F.col("__aid2").cast("string"),
-            kv=F.struct(F.col("__pid").alias("id"), F.col("__ticker").alias("ticker")),
-            pv=pv,
+            track="'liquidity'",
+            track_val="CAST(__aid2 AS STRING)",
+            kv="struct(__pid AS id, __ticker AS ticker)",
+            pv=f"struct({pv})",
         )
 
 
@@ -487,8 +510,8 @@ class AstarSnapshotter(ChainSnapshotter):
             "address_ss58",
             "dapp_type",
             "dapp_address",
-            self._decimalized(F.col("__voting")).alias("voting"),
-            self._decimalized(F.col("__bae")).alias("build_and_earn"),
+            self._decimalized("__voting").alias("voting"),
+            self._decimalized("__bae").alias("build_and_earn"),
             F.col("__era").cast("int").alias("era"),
             F.col("__period").cast("int").alias("period"),
             F.col("__loyal").cast("boolean").alias("loyal"),
@@ -589,9 +612,9 @@ class ShibuyaSnapshotter(AstarSnapshotter):
             F.get_json_object(cur, "$.voting").alias("__cur_voting"),
         )
         s2 = s1.select(
-            self._decimalized(F.col("__total_locked")).alias("total_locked"),
-            self._decimalized(F.col("__unlocking")).alias("unlocking"),
-            self._decimalized(F.col("__cur_voting")).alias("cur_voting"),
+            self._decimalized("__total_locked").alias("total_locked"),
+            self._decimalized("__unlocking").alias("unlocking"),
+            self._decimalized("__cur_voting").alias("cur_voting"),
             F.get_json_object(cur, "$.buildAndEarn").alias("__cur_bae"),
             F.get_json_object(cur, "$.era").cast("int").alias("cur_era"),
             F.get_json_object(cur, "$.period").cast("int").alias("cur_period"),
@@ -604,11 +627,11 @@ class ShibuyaSnapshotter(AstarSnapshotter):
             "total_locked",
             "unlocking",
             "cur_voting",
-            self._decimalized(F.col("__cur_bae")).alias("cur_build_and_earn"),
+            self._decimalized("__cur_bae").alias("cur_build_and_earn"),
             "cur_era",
             "cur_period",
-            self._decimalized(F.col("__next_voting")).alias("next_voting"),
-            self._decimalized(F.col("__next_bae")).alias("next_build_and_earn"),
+            self._decimalized("__next_voting").alias("next_voting"),
+            self._decimalized("__next_bae").alias("next_build_and_earn"),
             "next_era",
             "next_period",
         )
@@ -773,10 +796,10 @@ class RelaySnapshotter(ChainSnapshotter):
                 "__std",
                 "__spa",
                 "__byte",
-                self._decimalized(F.col("__bal")).alias("__bal_d"),
-                self._decimalized(F.col("__aye")).alias("__aye_d"),
-                self._decimalized(F.col("__nay")).alias("__nay_d"),
-                self._decimalized(F.col("__abstain")).alias("__abstain_d"),
+                self._decimalized("__bal").alias("__bal_d"),
+                self._decimalized("__aye").alias("__aye_d"),
+                self._decimalized("__nay").alias("__nay_d"),
+                self._decimalized("__abstain").alias("__abstain_d"),
             ]
             std, spa, byte = F.col("__std"), F.col("__spa"), F.col("__byte")
             weight = F.when(byte % 16 == 0, F.lit(0.1)).otherwise(
@@ -831,24 +854,25 @@ class RelaySnapshotter(ChainSnapshotter):
         k = self._keyed(entries)
 
         def _cols():
-            c = F.get_json_object("value", "$.casting")
+            c_sql = "get_json_object(value, '$.casting')"
+            d_sql = f"get_json_object({c_sql}, '$.delegations')"
+            c = F.expr(c_sql)
             votes = F.from_json(c, "struct<votes: array<string>>")["votes"]
             voted = F.transform(votes, lambda p: F.get_json_object(p, "$[0]"))
-            d = F.get_json_object(c, "$.delegations")
             return c.isNotNull(), [
                 "voter",
                 "track_id",
                 self._track_name(F.col("track_id")).alias("track"),
                 F.size(votes).cast("long").alias("voted_cnt"),
                 F.array_join(voted, ",").alias("voted"),
-                self._decimalized(F.get_json_object(d, "$.votes")).alias(
+                self._decimalized(f"get_json_object({d_sql}, '$.votes')").alias(
                     "delegations_votes"
                 ),
-                self._decimalized(F.get_json_object(d, "$.capital")).alias(
+                self._decimalized(f"get_json_object({d_sql}, '$.capital')").alias(
                     "delegations_capital"
                 ),
                 F.get_json_object(c, "$.prior[0]").cast("long").alias("prior_bn"),
-                self._decimalized(F.get_json_object(c, "$.prior[1]")).alias(
+                self._decimalized(f"get_json_object({c_sql}, '$.prior[1]')").alias(
                     "prior_balance"
                 ),
             ]
@@ -881,13 +905,13 @@ class RelaySnapshotter(ChainSnapshotter):
                 "track_id",
                 self._track_name(F.col("track_id")).alias("track"),
                 "target",
-                self._decimalized(F.col("__balance")).alias("balance"),
+                self._decimalized("__balance").alias("balance"),
                 "conviction",
                 F.element_at(_map_lit(_CONVICTION_WEIGHTS), F.col("conviction")).alias(
                     "conviction_weight"
                 ),
                 F.col("__prior_bn").cast("long").alias("prior_bn"),
-                self._decimalized(F.col("__prior_bal")).alias("prior_balance"),
+                self._decimalized("__prior_bal").alias("prior_balance"),
             ]
             return d, F.col("__d").isNotNull(), sel_raw, sel_out
 
@@ -919,8 +943,8 @@ class RelaySnapshotter(ChainSnapshotter):
             sel_dec = [
                 "delegatee",
                 "track_id",
-                self._decimalized(F.col("__votes")).alias("votes"),
-                self._decimalized(F.col("__capital")).alias("capital"),
+                self._decimalized("__votes").alias("votes"),
+                self._decimalized("__capital").alias("capital"),
             ]
             grp = [F.col("target").alias("delegatee"), "track_id"]
             agg = [
@@ -972,34 +996,35 @@ class RelaySnapshotter(ChainSnapshotter):
             ref_id = F.get_json_object("key_args", "$[0]").cast("long")
             m = F.from_json(F.col("value"), "map<string,string>")
             status = F.element_at(F.map_keys(m), 1)
-            detail = F.element_at(F.map_values(m), 1)
+            detail_sql = "element_at(map_values(from_json(value, 'map<string,string>')), 1)"
+            detail = F.expr(detail_sql)
             # killed rows deliberately carry NO moment: the reference's
             # closed-branch guard excludes killed too (polkadot.js:61
             # `referendumStatus != 'ongoing' && != 'killed'`), so the kill
             # block at detail[0] is dropped there as well — parity, not loss
             closed = status.isin("ongoing", "killed") == F.lit(False)
-            dep = F.get_json_object(detail, "$[1]")
-            sub = F.get_json_object(detail, "$.submissionDeposit")
-            dec = F.get_json_object(detail, "$.decisionDeposit")
-            tally = F.get_json_object(detail, "$.tally")
+            dep, sub, dec, tally = (
+                f"get_json_object({detail_sql}, '{path}')"
+                for path in ("$[1]", "$.submissionDeposit", "$.decisionDeposit", "$.tally")
+            )
             return [
                 ref_id.alias("ref_id"),
                 status.alias("status"),
                 F.when(closed, F.get_json_object(detail, "$[0]").cast("long")).alias(
                     "moment"
                 ),
-                F.when(closed, F.get_json_object(dep, "$.who"))
-                .otherwise(F.get_json_object(sub, "$.who"))
+                F.when(closed, F.get_json_object(F.expr(dep), "$.who"))
+                .otherwise(F.get_json_object(F.expr(sub), "$.who"))
                 .alias("depositor"),
-                F.when(closed, self._decimalized(F.get_json_object(dep, "$.amount")))
-                .otherwise(self._decimalized(F.get_json_object(sub, "$.amount")))
+                F.when(closed, self._decimalized(f"get_json_object({dep}, '$.amount')"))
+                .otherwise(self._decimalized(f"get_json_object({sub}, '$.amount')"))
                 .alias("submission_deposit"),
-                self._decimalized(F.get_json_object(dec, "$.amount")).alias(
+                self._decimalized(f"get_json_object({dec}, '$.amount')").alias(
                     "decision_deposit"
                 ),
-                self._decimalized(F.get_json_object(tally, "$.ayes")).alias("tally_ayes"),
-                self._decimalized(F.get_json_object(tally, "$.nays")).alias("tally_nays"),
-                self._decimalized(F.get_json_object(tally, "$.support")).alias(
+                self._decimalized(f"get_json_object({tally}, '$.ayes')").alias("tally_ayes"),
+                self._decimalized(f"get_json_object({tally}, '$.nays')").alias("tally_nays"),
+                self._decimalized(f"get_json_object({tally}, '$.support')").alias(
                     "tally_support"
                 ),
             ]
@@ -1027,8 +1052,8 @@ class RelaySnapshotter(ChainSnapshotter):
                 "proposal_id",
                 "proposer",
                 "beneficiary",
-                self._decimalized(F.col("__value")).alias("value"),
-                self._decimalized(F.col("__bond")).alias("bond"),
+                self._decimalized("__value").alias("value"),
+                self._decimalized("__bond").alias("bond"),
             ]
             return ~pid.isin(*self.TREASURY_BLACKLIST), sel_raw, sel_out
 
@@ -1048,9 +1073,9 @@ class RelaySnapshotter(ChainSnapshotter):
             return [
                 F.get_json_object("key_args", "$[0]").cast("long").alias("bounty_id"),
                 F.get_json_object("value", "$.proposer").alias("proposer"),
-                self._decimalized(F.get_json_object("value", "$.value")).alias("value"),
-                self._decimalized(F.get_json_object("value", "$.fee")).alias("fee"),
-                self._decimalized(F.get_json_object("value", "$.curatorDeposit")).alias(
+                self._decimalized("get_json_object(value, '$.value')").alias("value"),
+                self._decimalized("get_json_object(value, '$.fee')").alias("fee"),
+                self._decimalized("get_json_object(value, '$.curatorDeposit')").alias(
                     "curator_deposit"
                 ),
                 status.alias("bounty_status"),
@@ -1081,8 +1106,8 @@ class RelaySnapshotter(ChainSnapshotter):
             ).alias("__era")
             balances = ("erasTotalStake", "totalIssuance")
             metric = F.when(
-                F.col("name").isin(*balances), self._decimalized(F.col("value"))
-            ).otherwise(_dechex_str(F.col("value")).cast("double"))
+                F.col("name").isin(*balances), self._decimalized("value")
+            ).otherwise(F.expr(_dechex_str("value")).cast("double"))
             sel = [
                 F.col("name").alias("metric"),
                 metric.alias("value"),

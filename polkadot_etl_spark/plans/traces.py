@@ -88,26 +88,31 @@ def _u32_at(v: str, byte_off: int):
     return F.expr(f"cast(conv({_le2be(f'substr({v}, {2*byte_off+1}, 8)')}, 16, 10) as bigint)")
 
 
-def _u128_at(v: str, byte_off: int):
-    """LE u128 at byte offset → decimal(38,0), NULL if > 38 digits (the
-    exact-string dual column is u128_raw_at, full-range).
+def _u128_be(v: str, byte_off: int) -> str:
+    """SQL expr: the LE u128 at byte offset inside hex string v, as
+    big-endian hex."""
+    return _le2be(f"substr({v}, {2 * byte_off + 1}, 32)")
+
+
+def _u128_num(be: str):
+    """Big-endian u128 hex column → decimal(38,0), NULL if > 38 digits
+    (the exact-string dual column is u128_raw, full-range).
 
     Routed through the exact limb string + try_cast: the direct
     hi*2^64+lo decimal arithmetic THROWS under ANSI mode (Spark 4
     default) when a legal u128 exceeds 10^38 — one hot account would
     fail the whole task instead of NULLing one column."""
-    return u128_raw_at(v, byte_off).try_cast("decimal(38,0)")
+    return u128_raw(be).try_cast("decimal(38,0)")
 
 
-def u128_raw_at(v: str, byte_off: int):
-    """LE u128 at byte offset → EXACT base-10 string over the FULL u128
-    range (the *_raw STRING dual columns of schema/balances.json:54 —
-    kept as strings precisely because u128 max ≈ 3.4e38 overflows the
+def u128_raw(be: str):
+    """Big-endian u128 hex column → EXACT base-10 string over the FULL
+    u128 range (the *_raw STRING dual columns of schema/balances.json:54
+    — kept as strings precisely because u128 max ≈ 3.4e38 overflows the
     38-digit NUMERIC/decimal column)."""
     from polkadot_etl_spark.plans.feeds import _u128_hex_to_str
 
-    be = F.expr(_le2be(f"substr({v}, {2 * byte_off + 1}, 32)"))
-    return _u128_hex_to_str(be)
+    return F.expr(_u128_hex_to_str(be))
 
 
 def storage_keys_dim(spark, entries: list[tuple[str, str, str]]) -> DataFrame:
@@ -144,6 +149,16 @@ def parse_traces(traces: DataFrame, keys_dim: DataFrame) -> DataFrame:
         F.broadcast(keys_dim), F.substring("__k", 1, 64) == F.col("prefix"), "left"
     )
     is_account = (F.col("section") == "System") & (F.col("storage") == "Account")
+    # The u128 fields land as big-endian hex attributes first: each
+    # exact decode reads its input ten times, and the byte reversal is
+    # a higher-order function, evaluated (interpreted) per reference.
+    # The seam holds because the multi-referenced attributes are not
+    # cheap to recompute, so CollapseProject keeps both projections.
+    u128s = ("free", "reserved", "frozen")
+    j = j.select(
+        "*",
+        *[F.expr(_u128_be("__v", 16 * (i + 1))).alias(f"__{f}_be") for i, f in enumerate(u128s)],
+    )
     return j.select(
         *traces.columns,
         "section",
@@ -159,12 +174,8 @@ def parse_traces(traces: DataFrame, keys_dim: DataFrame) -> DataFrame:
         F.when(is_account, _u32_at("__v", 4)).alias("consumers"),
         F.when(is_account, _u32_at("__v", 8)).alias("providers"),
         F.when(is_account, _u32_at("__v", 12)).alias("sufficients"),
-        F.when(is_account, _u128_at("__v", 16)).alias("free"),
-        F.when(is_account, _u128_at("__v", 32)).alias("reserved"),
-        F.when(is_account, _u128_at("__v", 48)).alias("frozen"),
+        *[F.when(is_account, _u128_num(f"__{f}_be")).alias(f) for f in u128s],
         # exact-string duals (schema/balances.json free_raw/... rationale:
         # full u128 doesn't fit the 38-digit numeric column)
-        F.when(is_account, u128_raw_at("__v", 16)).alias("free_raw"),
-        F.when(is_account, u128_raw_at("__v", 32)).alias("reserved_raw"),
-        F.when(is_account, u128_raw_at("__v", 48)).alias("frozen_raw"),
+        *[F.when(is_account, u128_raw(f"__{f}_be")).alias(f"{f}_raw") for f in u128s],
     )

@@ -79,20 +79,20 @@ class ContractRegistry:
 # ---------------------------------------------------------------------------
 
 
-def _dechex_str(c):
-    """Exact integer string from a decimal or 0x-hex string (the
-    reference's dechexToIntStr on gas/storage limits).  Hex inputs route
-    through the base-10^12 limb assembly so the FULL u128 range is exact
-    (hi*2^64+lo cast to decimal(38,0) would NULL out values ≥ 10^38)."""
-    from pyspark.sql import functions as F
-
+def _dechex_str(c: str) -> str:
+    """SQL text: exact integer string from the SQL text ``c`` of a
+    decimal or 0x-hex string (the reference's dechexToIntStr on
+    gas/storage limits).  Hex inputs route through the base-10^12 limb
+    assembly so the FULL u128 range is exact (hi*2^64+lo cast to
+    decimal(38,0) would NULL out values ≥ 10^38); hex wider than u128
+    is NULL.  try_cast: ANSI mode (Spark 4 default) would otherwise
+    THROW on a decimal string past 38 digits instead of yielding NULL."""
     from polkadot_etl_spark.plans.feeds import _u128_hex_to_str
 
-    hex_body = F.lpad(F.regexp_replace(c, "^0x", ""), 32, "0")
-    # try_cast: ANSI mode (Spark 4 default) would otherwise THROW on a
-    # decimal string past 38 digits instead of yielding NULL
-    return F.when(c.startswith("0x"), _u128_hex_to_str(hex_body)).otherwise(
-        c.try_cast("decimal(38,0)").cast("string")
+    from_hex = _u128_hex_to_str(f"regexp_replace({c}, '^0x', '')")
+    return (
+        f"CASE WHEN startswith({c}, '0x') THEN {from_hex}"
+        f" ELSE CAST(try_cast({c} AS DECIMAL(38,0)) AS STRING) END"
     )
 
 
@@ -235,11 +235,13 @@ def contractscall_table(calls, contracts_dim, registry=None):
         "block_number",
         "block_hash",
         "address_pub_key",
-        F.when(gas.isNotNull(), _dechex_str(gas)).otherwise(F.lit("0")).alias("gas_limit"),
-        F.when(F.length(sdl) > 4, _dechex_str(sdl)).otherwise(F.lit("0")).alias(
+        F.when(gas.isNotNull(), F.expr(_dechex_str("__gas"))).otherwise(F.lit("0")).alias(
+            "gas_limit"
+        ),
+        F.when(F.length(sdl) > 4, F.expr(_dechex_str("__sdl"))).otherwise(F.lit("0")).alias(
             "storage_deposit_limit"
         ),
-        F.coalesce(_dechex_str(F.col("__value")), F.lit("0")).alias("value"),
+        F.coalesce(F.expr(_dechex_str("__value")), F.lit("0")).alias("value"),
         "caller_pub_key",
         "__calldata",
     )
@@ -259,8 +261,8 @@ def contractscall_table(calls, contracts_dim, registry=None):
 
 def _native_arg_exprs(cd, specs):
     """Per-arg (value_expr, valid_expr) decoding fixed-width SCALE args
-    straight from the calldata hex (layout: '0x' + 8 selector chars +
-    args).  LE ints byte-reverse via substring concat then conv; u128
+    straight from the calldata hex column named ``cd`` (layout: '0x' +
+    8 selector chars + args).  LE ints byte-reverse via substring concat then conv; u128
     goes through the base-10^12 limb assembly (_u128_hex_to_str), exact
     over the FULL u128 range — the earlier decimal(38,0) route NULLed
     legal values ≥ 10^38 while the Python codec tier returned them."""
@@ -272,17 +274,18 @@ def _native_arg_exprs(cd, specs):
     off = 0  # byte offset inside the args blob
     for n, kind in specs:
         sl = F.substring(cd, 11 + 2 * off, 2 * n)
-        if kind == "uint":
+        if kind == "uint" and n > 8:
+            sl_sql = f"substring({cd}, {11 + 2 * off}, {2 * n})"
+            rev = ", ".join(f"substring({sl_sql}, {2 * i + 1}, 2)" for i in reversed(range(n)))
+            exprs.append((F.expr(_u128_hex_to_str(f"concat({rev})")), F.lit(True)))
+        elif kind == "uint":
             rev = (
                 F.concat(*[F.substring(sl, 2 * i + 1, 2) for i in reversed(range(n))])
                 if n > 1
                 else sl
             )
-            if n <= 8:
-                val = F.conv(rev, 16, 10)  # Spark conv is unsigned-64 exact
-            else:
-                val = _u128_hex_to_str(F.lpad(rev, 32, "0"))
-            exprs.append((val, F.lit(True)))
+            # Spark conv is unsigned-64 exact
+            exprs.append((F.conv(rev, 16, 10), F.lit(True)))
         elif kind == "bool":
             val = F.when(sl == "01", F.lit("true")).otherwise(F.lit("false"))
             exprs.append((val, sl.isin("00", "01")))
@@ -346,7 +349,7 @@ def _with_decoded_call(out, registry):
             for sel, m in sorted(registry.messages(h).items()):
                 specs = [fixed_width(t) for t in m.arg_types]
                 parts = [F.lit('{"args": {')]
-                arg_exprs, total = _native_arg_exprs(cd, specs)
+                arg_exprs, total = _native_arg_exprs("__calldata", specs)
                 for i, (val, _) in enumerate(arg_exprs):
                     if i:
                         parts.append(F.lit(", "))

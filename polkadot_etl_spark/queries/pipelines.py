@@ -2040,8 +2040,7 @@ def snapshots_pricefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polkadot_etl_spark.plans.snapshots import snapshot_rows
 
     e = load_table(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
-    k = F.col("event_id")
-    sym = F.concat(F.lit("TKN"), (k % 7).cast("string"))
+    sym = "concat('TKN', CAST(event_id % 7 AS STRING))"
     snaps = snapshot_rows(
         e,
         section="pricefeed",
@@ -2053,15 +2052,13 @@ def snapshots_pricefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "id": "polkadot",
             "chain_name": "Polkadot",
         },
-        block_number=k % 1000000,
-        block_hash=F.concat(F.lit("0xb"), k.cast("string")),
-        ts=F.col("ts"),
-        track=F.lit("coingecko"),
+        block_number="event_id % 1000000",
+        block_hash="concat('0xb', CAST(event_id AS STRING))",
+        ts="ts",
+        track="'coingecko'",
         track_val=sym,
-        kv=F.struct(sym.alias("asset")),
-        pv=F.struct(
-            F.lit(10).alias("decimals"), (k % 100000).alias("price_raw")
-        ),
+        kv=f"struct({sym} AS asset)",
+        pv="struct(10 AS decimals, event_id % 100000 AS price_raw)",
         dedup_first_per_hour=True,
         order_col="event_id",
     )
@@ -2268,12 +2265,12 @@ def snapshots_staking_era(spark: SparkSession, sf_dir: str) -> DataFrame:
             "id": "polkadot",
             "chain_name": "Polkadot",
         },
-        block_number=F.lit(1000) + F.col("era") * 100,
-        block_hash=F.concat(F.lit("0xera"), F.col("era").cast("string")),
-        ts=F.timestamp_seconds(F.lit(1700000000) + F.col("era") * 3600),
-        track=F.lit("era"),
-        track_val=F.col("era").cast("string"),
-        pv=F.struct(F.col("total"), F.col("weights")),
+        block_number="1000 + era * 100",
+        block_hash="concat('0xera', CAST(era AS STRING))",
+        ts="timestamp_seconds(1700000000 + era * 3600)",
+        track="'era'",
+        track_val="CAST(era AS STRING)",
+        pv="struct(total, weights)",
     )
     return snaps.select(
         *[s_ts(c).alias(c) if c == "ts" else F.col(c) for c in snaps.columns]
@@ -3569,62 +3566,46 @@ def snapshots_hydradx_omnipool(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry = HydraGarParser().parse_gar(_hydra_gar_entries(spark, sf_dir))
     block = {"number": 5000000, "hash": "0x5f", "ts": "2023-06-01 12:34:56"}
 
-    nat = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").cast("long").alias("k")
-    )
-    k = F.col("k")
-    ks = k.cast("string")
+    # The inputs are SQL text, like the snapshot tracks they feed: a cold
+    # build parses each select in a few py4j calls.
+    nat = load_table(spark, sf_dir, "nation").selectExpr("CAST(n_nationkey AS BIGINT) AS k")
 
-    def hexs(c: Column) -> Column:
-        return F.concat(F.lit("0x"), F.lower(F.hex(c)))
+    def dq(e: str) -> str:
+        return f"""concat('"', {e}, '"')"""
 
-    def dq(c: Column) -> Column:
-        return F.concat(F.lit('"'), c, F.lit('"'))
+    def hex_or_dec(e: str, every: int) -> str:
+        """0x-hex on every ``every``-th key, decimal otherwise."""
+        return (
+            f"CASE WHEN k % {every} = 0 THEN concat('0x', lower(hex({e})))"
+            f" ELSE CAST({e} AS STRING) END"
+        )
 
-    hub = k * 1000000007 + 5
-    omni_assets = nat.select(
-        F.concat(F.lit('["'), ks, F.lit('"]')).alias("key_args"),
-        F.concat(
-            F.lit('{"hubReserve":'),
-            dq(F.when(k % 2 == 0, hexs(hub)).otherwise(hub.cast("string"))),
-            F.lit(',"shares":'),
-            dq((k * 500 + 1).cast("string")),
-            F.lit(',"protocolShares":'),
-            dq(F.when(k % 3 == 0, hexs(k * 7)).otherwise((k * 7).cast("string"))),
-            F.lit(',"cap":"500000000000000000","tradable":'),
-            dq(F.concat(F.lit("ok"), (k % 3).cast("string"))),
-            F.lit("}"),
-        ).alias("value"),
+    omni_assets = nat.selectExpr(
+        """concat('["', CAST(k AS STRING), '"]') AS key_args""",
+        f"""concat('{{"hubReserve":', {dq(hex_or_dec("k * 1000000007 + 5", 2))},"""
+        f""" ',"shares":', {dq("CAST(k * 500 + 1 AS STRING)")},"""
+        f""" ',"protocolShares":', {dq(hex_or_dec("k * 7", 3))},"""
+        """ ',"cap":"500000000000000000","tradable":',"""
+        f""" {dq("concat('ok', CAST(k % 3 AS STRING))")}, '}}') AS value""",
     )
 
     sup = (
         load_table(spark, sf_dir, "supplier")
-        .select(F.col("s_suppkey").cast("long").alias("k"))
-        .where(F.col("k") < 25)
+        .selectExpr("CAST(s_suppkey AS BIGINT) AS k")
+        .where("k < 25")
     )
-    amount = k * 1000000000000 + 11
-    positions = sup.select(
-        F.concat(F.lit('["'), (k + 9000).cast("string"), F.lit('"]')).alias("key_args"),
-        F.concat(
-            F.lit('{"assetId":'),
-            (k % 25).cast("string"),
-            F.lit(',"amount":'),
-            dq(F.when(k % 2 == 0, hexs(amount)).otherwise(amount.cast("string"))),
-            F.lit(',"shares":'),
-            dq((k * 13 + 1).cast("string")),
-            F.lit(',"price":['),
-            dq(F.when(k % 3 == 0, hexs(k * 3 + 1)).otherwise((k * 3 + 1).cast("string"))),
-            F.lit(","),
-            dq((k * 5 + 2).cast("string")),
-            F.lit("]}"),
-        ).alias("value"),
+    positions = sup.selectExpr(
+        """concat('["', CAST(k + 9000 AS STRING), '"]') AS key_args""",
+        f"""concat('{{"assetId":', CAST(k % 25 AS STRING),"""
+        f""" ',"amount":', {dq(hex_or_dec("k * 1000000000000 + 11", 2))},"""
+        f""" ',"shares":', {dq("CAST(k * 13 + 1 AS STRING)")},"""
+        f""" ',"price":[', {dq(hex_or_dec("k * 3 + 1", 3))},"""
+        f""" ',', {dq("CAST(k * 5 + 2 AS STRING)")}, ']}}') AS value""",
     )
 
-    issuance = nat.select(
-        F.concat(F.lit('[{"token":'), ks, F.lit("}]")).alias("key_args"),
-        F.when(k % 2 == 0, hexs(k * 11 + 3))
-        .otherwise((k * 11 + 3).cast("string"))
-        .alias("value"),
+    issuance = nat.selectExpr(
+        """concat('[{"token":', CAST(k AS STRING), '}]') AS key_args""",
+        f"{hex_or_dec('k * 11 + 3', 2)} AS value",
     )
 
     snap = HydradxSnapshotter()

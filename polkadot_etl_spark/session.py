@@ -75,6 +75,12 @@ def get_spark(
         # grain passes it in extra_conf.)
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        # No per-call origin capture: with it on, PySpark wraps Column
+        # and functions calls in about ten extra py4j round trips each
+        # (README pitfall "Large expression trees cost py4j, not JVM").
+        # Errors keep their error class but lose the Python file:line of
+        # their DataFrame query context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Quieter local runs.
         .config("spark.ui.enabled", "false")
     )

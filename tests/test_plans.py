@@ -1333,10 +1333,10 @@ class TestChainParsers:
               hex(15 * 10**17))],
             "ov: string, xr: string",
         )
-        price = vals.select(*ParallelParser.oracle_price(vals.ov)).first()
+        price = vals.select(*ParallelParser.oracle_price("ov")).first()
         assert int(price.raw_price) == 0x03A2AE9D185FA4B3
         assert price.price_ts == 1653303666
-        xr = vals.select(ParallelParser.liquid_staking_exchange_rate(vals.xr).alias("r")).first()
+        xr = vals.select(ParallelParser.liquid_staking_exchange_rate("xr").alias("r")).first()
         assert xr.r == pytest.approx(1.5)
 
     def test_parallel_decorate_asset(self, spark):
@@ -1425,6 +1425,41 @@ class TestUpsertMerge:
         upsert_day_partitioned(spark, path, upd, ["k"], "ts")
         got2 = {r.k: r.v for r in spark.read.parquet(path).collect()}
         assert got2 == got
+
+    def test_upsert_leaves_a_static_session_static(self, spark, oracle, tmp_path):
+        """The upsert's dynamic overwrite is a writer option: a session
+        set to static overwrite stays static, the partitions an update
+        does not touch survive, and merge_upsert_state still matches its
+        oracle there."""
+        from pyspark.sql import functions as F
+
+        from polkadot_etl_spark.operators.merge import upsert_day_partitioned
+        from polkadot_etl_spark.queries import QUERIES
+        from tests.conftest import SF_DIR, compare_frames
+
+        key = "spark.sql.sources.partitionOverwriteMode"
+        clone = spark.newSession()
+        clone.conf.set(key, "static")
+        path = str(tmp_path / "tbl")
+
+        def mk(rows):
+            return clone.createDataFrame(rows, "k: long, v: string, ts: string").withColumn(
+                "ts", F.to_timestamp("ts")
+            )
+
+        upsert_day_partitioned(
+            clone, path, mk([(1, "a", "2024-01-01 01:00:00"), (3, "c", "2024-01-02 01:00:00")]),
+            ["k"], "ts",
+        )
+        upsert_day_partitioned(clone, path, mk([(2, "b", "2024-01-01 02:00:00")]), ["k"], "ts")
+        assert clone.conf.get(key) == "static"
+        got = {r.k: r.v for r in clone.read.parquet(path).collect()}
+        assert got == {1: "a", 2: "b", 3: "c"}  # 2024-01-02 was not touched
+        spec = QUERIES["merge_upsert_state"]
+        compare_frames(
+            spec.build(clone, SF_DIR).toPandas(), oracle.execute(spec.oracle).df(), spec.name
+        )
+        assert clone.conf.get(key) == "static"
 
     def test_merge_upsert_state_dir_lives_as_long_as_its_session(self, spark):
         """merge_upsert_state returns a frame that reads its state dir
@@ -2175,9 +2210,9 @@ class TestPublishedContracts:
             obs, section="pricefeed", storage="price", source="t",
             chain={"relay_chain": "polkadot", "para_id": 0, "id": "p",
                    "chain_name": "P"},
-            block_number=F.col("k"), block_hash=F.col("sym"), ts=F.col("ts"),
-            track_val=F.col("sym"),
-            pv=F.struct(F.col("k").alias("price_raw")),
+            block_number="k", block_hash="sym", ts="ts",
+            track_val="sym",
+            pv="struct(k AS price_raw)",
             dedup_first_per_hour=True, order_col="k",
         ).collect()
         kept = {(r.track_val, str(r.ts), r.block_number) for r in out}
@@ -2439,19 +2474,27 @@ def test_moonbeam_kusama_snapshotters_are_config_subclasses(spark):
 
 def test_dechex_str_over_width_hex_is_null_not_truncated(spark):
     """lpad truncates long strings — a hex body wider than u128 must
-    surface as NULL, never as a prefix-truncated number."""
-    from pyspark.sql import functions as F
+    surface as NULL from every caller of the one u128 decode, never as a
+    prefix-truncated number."""
+    import decimal
 
-    from polkadot_etl_spark.plans.snapshots import _dechex_str
+    from polkadot_etl_spark.plans import feeds, snapshots, wasm
 
     df = spark.createDataFrame(
-        [("0x" + "ff" * 16,), ("0x" + "01" + "00" * 16,), ("123",)],
+        [("0x" + "ff" * 16,), ("0x" + "01" + "00" * 16,), ("0x1" + "0" * 33,), ("123",)],
         "v string",
     )
-    got = [r.d for r in df.select(_dechex_str(F.col("v")).alias("d")).collect()]
-    assert got[0] == str((1 << 128) - 1)  # max u128 still decodes
-    assert got[1] is None  # 17-byte hex: NULL, not a mangled prefix
-    assert got[2] == "123"
+    rows = df.selectExpr(
+        f"{feeds._u128_from_maybe_hex('v')} AS feeds",
+        f"{wasm._dechex_str('v')} AS wasm",
+        f"{snapshots._dechex_str('v')} AS snapshots",
+    ).collect()
+    # max u128 still decodes; 17 bytes and 2^132 (34 digits) are NULL
+    u128_max = str((1 << 128) - 1)
+    assert [r.snapshots for r in rows] == [u128_max, None, None, "123"]
+    assert [r.wasm for r in rows] == [u128_max, None, None, "123"]
+    # feeds' contract is decimal(38,0), which 2^128-1 overflows to NULL
+    assert [r.feeds for r in rows] == [None, None, None, decimal.Decimal(123)]
 
 
 def test_newest_per_key_same_bn_conflict_is_deterministic(spark):

@@ -4,7 +4,7 @@ checked-in budgets, and/or dump their formatted plans.
 
 Usage:
     python tools_profile.py q1 q2 ...               # time each (min of N)
-    python tools_profile.py --explain-dir plans/r13 --suffix _before q1 ...
+    python tools_profile.py --explain-dir /tmp/plans --suffix _before q1 ...
     python tools_profile.py --iters 5 q1            # re-measure a breach
     SPARK_GRAFT_CONF='spark.foo=bar;spark.baz=qux' python tools_profile.py q1
 

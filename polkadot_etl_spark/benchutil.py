@@ -101,6 +101,18 @@ def warm_session(spark: SparkSession, sf_dir: str) -> None:
     spark.range(0, slots, 1, slots).mapInPandas(lambda it: it, "id long").collect()
 
 
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """Classes Janino has compiled in this JVM so far and the seconds it
+    spent compiling them: whole-stage code compiled on the driver and,
+    on a local master, the projections compiled in tasks. Take deltas
+    around a run; a warm repeat that still compiles missed the codegen
+    cache (README pitfall "Spark keeps 100 generated classes per JVM")."""
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return metrics.METRIC_COMPILATION_TIME().getCount(), codegen.compileTime() / 1e9
+
+
 def time_noop_split(
     build, spark: SparkSession, sf_dir: str, base_iters: int = BASE_ITERS
 ) -> list[tuple[float, float]]:

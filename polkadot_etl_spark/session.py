@@ -81,6 +81,12 @@ def get_spark(
         # Errors keep their error class but lose the Python file:line of
         # their DataFrame query context.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Keep every generated class compiled once per JVM: Spark's LRU
+        # holds 100, fewer than one 8-query interactive mix compiles, so
+        # warm repeats recompiled most of their classes (README pitfall
+        # "Spark keeps 100 generated classes per JVM"). Static: read
+        # once per JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # Quieter local runs.
         .config("spark.ui.enabled", "false")
     )

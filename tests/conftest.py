@@ -5,8 +5,12 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import json
 import math
 import os
+import subprocess
+import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
@@ -16,6 +20,7 @@ from polkadot_etl_spark.session import get_spark
 from polkadot_etl_spark.sources.tables import TABLES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+REPO = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="session")
@@ -91,3 +96,19 @@ def compare_frames(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name: str)
     if s != o:
         diffs = [(a, b) for a, b in zip(s, o) if a != b][:5]
         raise AssertionError(f"{name}: value mismatch, first diffs (spark, oracle): {diffs}")
+
+
+def run_fresh_process(script: str, cwd) -> dict:
+    """Run ``script`` in a new Python process, so its session starts a
+    new JVM (static confs are read once per JVM), with a 1 GB driver
+    heap; return the JSON object printed on its last stdout line."""
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=cwd,
+        env=dict(os.environ, SPARK_DRIVER_MEMORY="1g"),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1])

@@ -8,16 +8,9 @@ query that etl_publish builds cold every pass is held to a budget here.
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
 import textwrap
-from pathlib import Path
 
-from tests.conftest import SF_DIR
-
-REPO = Path(__file__).resolve().parents[1]
+from tests.conftest import REPO, SF_DIR, run_fresh_process
 
 
 def test_cold_snapshot_build_round_trip_budget(tmp_path):
@@ -61,17 +54,7 @@ def test_cold_snapshot_build_round_trip_budget(tmp_path):
         spark.stop()
         """
     )
-    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
-    proc = subprocess.run(
-        [sys.executable, "-c", script],
-        cwd=tmp_path,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=300,
-    )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    got = run_fresh_process(script, tmp_path)
     assert got["debugging"] == "false"
     assert got["error"] == "DIVIDE_BY_ZERO"
     assert got["calls"] < 1500, got

@@ -18,6 +18,13 @@ BENCH_BUDGETS.json verdict, raw and normalized by box speed
 box is probed once (benchutil.box_speed_probe) and the budget is scaled
 by the generating sitting's stamped speed over this one's, so box drift
 reads apart from a real regression. Run breaches on an idle box.
+
+Each timed query also reports its codegen: the classes Janino compiled
+in each iteration and the compile seconds over all of them
+(benchutil.codegen_compiles). A warm iteration should compile nothing;
+a query whose last iteration still compiled is flagged, because its
+generated source changes from run to run or the codegen cache is too
+small for what the session has run.
 """
 
 from __future__ import annotations
@@ -41,6 +48,7 @@ def main() -> int:
     from bench import _BUDGET_PATH, scale_factor, speed_ratio
     from polkadot_etl_spark.benchutil import (
         box_speed_probe,
+        codegen_compiles,
         time_noop_split,
         warm_session,
     )
@@ -91,9 +99,18 @@ def main() -> int:
             print(f"# {name}: plan -> {path} (build {build_s:.2f}s)")
         if args.no_time:
             continue
+        marks = []  # codegen counters as each iteration starts, then at the end
+
+        def build(spark, sf_dir, build=spec.build):
+            marks.append(codegen_compiles(spark))
+            return build(spark, sf_dir)
+
         spark.sparkContext.setJobDescription(f"profile: {name}")
-        splits = time_noop_split(spec.build, spark, sf_dir, base_iters=args.iters)
+        splits = time_noop_split(build, spark, sf_dir, base_iters=args.iters)
         spark.sparkContext.setJobDescription(None)
+        marks.append(codegen_compiles(spark))
+        classes = [b[0] - a[0] for a, b in zip(marks, marks[1:])]
+        compile_s = marks[-1][1] - marks[0][1]
         times = [b + w for b, w in splits]
         m = min(times)
         b = budgets.get(name)
@@ -118,6 +135,8 @@ def main() -> int:
         print(
             f"{name}: min={m:.3f}s build={splits[times.index(m)][0]:.3f}s "
             f"{verdict} iters=" + ",".join(f"{t:.3f}" for t in times)
+            + " codegen=" + ",".join(map(str, classes)) + f" classes in {compile_s:.2f}s"
+            + (", LAST ITERATION COMPILED" if classes[-1] else "")
         )
     return 0
 

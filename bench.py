@@ -163,17 +163,17 @@ def reconcile_budgets(
 def speed_ratio(box_then: dict, box_now: dict) -> "float | None":
     """How much slower this sitting's box is than the one that stamped
     the budgets (> 1: slower), from benchutil.box_speed_probe stamps, or
-    None when the budgets are unstamped (a raw verdict only). Queries
-    run at full parallelism, so the nt stamp normalizes; nt stamps are
-    only comparable at the same thread count, so on a
-    ``box_probe_threads`` mismatch the thread-count-free 1t stamp does.
-    A breach under ``budget * ratio`` is box drift, not code."""
+    None when no stamp can normalize (a raw verdict only). Queries run
+    at full parallelism, so only the nt stamp normalizes, and nt stamps
+    compare only at the same ``box_probe_threads``: on a mismatch the
+    ratio is None, because the 1t stamp cannot correct for cores (a
+    32-thread budget "normalized" by single-thread speed judged a
+    4-core box against half the time bench.py measured there). A
+    breach under ``budget * ratio`` is box drift, not code."""
     if box_then.get("box_speed_nt") and (
         box_then.get("box_probe_threads") == box_now.get("box_probe_threads")
     ):
         return box_then["box_speed_nt"] / box_now["box_speed_nt"]
-    if box_then.get("box_speed_1t"):
-        return box_then["box_speed_1t"] / box_now["box_speed_1t"]
     return None
 
 

@@ -5,6 +5,8 @@ idiom had once been copy-pasted three times).
 bench.py and tools_profile.py time through ``time_noop_split``,
 scaling_card.py through ``time_noop_min``; parallel_card.py keeps its
 own CPU-time loop and, like perfbench, calls only ``warm_session``.
+``py4j_round_trips`` counts a builder's py4j calls for tools_profile.py
+and tests/test_build_round_trips.py.
 
 The discipline (bench.py's, unchanged):
 - warmup: one parquet-footer read + one Arrow/pandas-UDF wave of one
@@ -31,6 +33,8 @@ from __future__ import annotations
 
 import gc
 import time
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -111,6 +115,30 @@ def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
     metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
     codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     return metrics.METRIC_COMPILATION_TIME().getCount(), codegen.compileTime() / 1e9
+
+
+@contextmanager
+def py4j_round_trips() -> Iterator[list[int]]:
+    """Count the py4j round trips made inside the block: every call
+    that reaches the JVM sends one command
+    (``ClientServerConnection.send_command``), so the count around a
+    builder is its plan-construction cost (README pitfall "Large
+    expression trees cost py4j, not JVM"). Yields a one-item list that
+    holds the running count."""
+    import py4j.clientserver as cs
+
+    send = cs.ClientServerConnection.send_command
+    calls = [0]
+
+    def counting(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    cs.ClientServerConnection.send_command = counting
+    try:
+        yield calls
+    finally:
+        cs.ClientServerConnection.send_command = send
 
 
 def time_noop_split(

@@ -1,10 +1,12 @@
-"""Corpus-independent Column-tree memo (r14; factored out of
-plans/garparsers.py so the snapshot extractors can share it).
+"""Corpus-independent Column-tree memo of the GAR parsers
+(plans/garparsers.py, plans/xcmgar.py), its only owners: the snapshot
+extractors build their tracks as SQL text, which is cheap enough to
+build on every call, and hold no memo.
 
-Building a large registry/snapshot frame costs thousands of py4j round
-trips — and most of that construction rebuilds the SAME name-based
-expression trees on every invocation (the selects are pure functions of
-the builder class + knobs, not of the data). Column objects are
+Building a large registry frame through the Column API costs thousands
+of py4j round trips — and most of that construction rebuilds the SAME
+name-based expression trees on every invocation (the selects are pure
+functions of the parser class + knobs, not of the data). Column objects are
 immutable unresolved trees: reusing one across plans yields a
 byte-identical plan (name resolution happens at analysis, per plan). So
 each corpus-independent tree is built ONCE per (SparkContext, site) and

@@ -149,37 +149,24 @@ class ChainSnapshotter:
     Spark shape: every track is a pure projection (native JSON access +
     to_json packing); ticker decoration joins the chain's asset registry
     dim by broadcast — the reference's in-process assetMap
-    (snapshot/hydradx.js:45-66 readAssetsFromFile)."""
+    (snapshot/hydradx.js:45-66 readAssetsFromFile). Track expressions
+    are SQL text (selectExpr / F.expr), so a cold build parses each
+    projection in a few py4j calls and nothing is memoized: every call
+    builds its trees from its own class's knobs (Kusama's 12 decimals
+    stay Kusama's)."""
 
     chain: dict = {"relay_chain": "polkadot", "para_id": 0, "id": "polkadot-0",
                    "chain_name": "Polkadot"}
     chain_decimals = 10
     source = "polkaholic"  # setSnapshotSource (snapshot/hydradx.js:25)
 
-    def _decimalized(self, c: str) -> Column:
-        """dechexToInt(c) / 10**chainDecimals as a double, for the SQL
-        text ``c``. The exact decimal STRING parses into a double before
-        ONE IEEE division, so both engines see identical values
-        (decimal→double direct casts differ by 1 ulp across engines)."""
-        return F.expr(f"CAST({_dechex_str(c)} AS DOUBLE) / {10**self.chain_decimals}D")
-
-    def _memo(self, site: str, build):
-        """Corpus-independent Column-tree memo for the track builders
-        (r14, the gar-parser pattern — see plans/exprmemo.py): each
-        builder's select lists are pure functions of the snapshotter
-        CLASS (track maps, chain_decimals), not of the data, yet their
-        construction dominated the snapshot queries' build time (r14:
-        ~16.6k py4j round trips / ~4.5 s per relay build). A cold
-        snapshots_relay_opengov build now makes ~4.4k (~18k before the
-        u128 decode became SQL text and get_spark turned PySpark's
-        per-call origin capture off). Keyed per concrete class so
-        subclass knobs (e.g. Kusama's 12 decimals) can never be served
-        another chain's trees."""
-        from polkadot_etl_spark.plans.exprmemo import expr_cache
-
-        return expr_cache(
-            (site, type(self).__qualname__, self.chain_decimals), build
-        )
+    def _decimalized(self, c: str) -> str:
+        """SQL text of dechexToInt(c) / 10**chainDecimals as a double,
+        for the SQL text ``c``. The exact decimal STRING parses into a
+        double before ONE IEEE division, so both engines see identical
+        values (decimal→double direct casts differ by 1 ulp across
+        engines)."""
+        return f"CAST({_dechex_str(c)} AS DOUBLE) / {10**self.chain_decimals}D"
 
     def _rows(self, obs: DataFrame, *, section: str, storage: str, block: dict,
               **kw) -> DataFrame:
@@ -493,28 +480,27 @@ class AstarSnapshotter(ChainSnapshotter):
         interpreted evaluation. A raw column is referenced ~20x by its
         decode, which keeps CollapseProject from folding the seam back
         into one over-budget Project."""
-        dapp = F.get_json_object("key_args", "$[1]")
-        dmap = F.from_json(dapp, "map<string,string>")
-        staked = F.get_json_object("value", "$.staked")
-        raw = entries.select(
-            F.get_json_object("key_args", "$[0]").alias("address_ss58"),
-            F.element_at(F.map_keys(dmap), 1).alias("dapp_type"),
-            F.element_at(F.map_values(dmap), 1).alias("dapp_address"),
-            F.get_json_object(staked, "$.voting").alias("__voting"),
-            F.get_json_object(staked, "$.buildAndEarn").alias("__bae"),
-            F.get_json_object(staked, "$.era").alias("__era"),
-            F.get_json_object(staked, "$.period").alias("__period"),
-            F.get_json_object("value", "$.loyalStaker").alias("__loyal"),
+        dmap = "from_json(get_json_object(key_args, '$[1]'), 'map<string,string>')"
+        staked = "get_json_object(value, '$.staked')"
+        raw = entries.selectExpr(
+            "get_json_object(key_args, '$[0]') AS address_ss58",
+            f"element_at(map_keys({dmap}), 1) AS dapp_type",
+            f"element_at(map_values({dmap}), 1) AS dapp_address",
+            f"get_json_object({staked}, '$.voting') AS __voting",
+            f"get_json_object({staked}, '$.buildAndEarn') AS __bae",
+            f"get_json_object({staked}, '$.era') AS __era",
+            f"get_json_object({staked}, '$.period') AS __period",
+            "get_json_object(value, '$.loyalStaker') AS __loyal",
         )
-        return raw.select(
+        return raw.selectExpr(
             "address_ss58",
             "dapp_type",
             "dapp_address",
-            self._decimalized("__voting").alias("voting"),
-            self._decimalized("__bae").alias("build_and_earn"),
-            F.col("__era").cast("int").alias("era"),
-            F.col("__period").cast("int").alias("period"),
-            F.col("__loyal").cast("boolean").alias("loyal"),
+            f"{self._decimalized('__voting')} AS voting",
+            f"{self._decimalized('__bae')} AS build_and_earn",
+            "CAST(__era AS INT) AS era",
+            "CAST(__period AS INT) AS period",
+            "CAST(__loyal AS BOOLEAN) AS loyal",
         )
 
     def integrated_dapps(self, entries: DataFrame) -> DataFrame:
@@ -595,9 +581,9 @@ class ShibuyaSnapshotter(AstarSnapshotter):
         """dappStaking.currentEraInfo singleton → one typed row:
         {totalLocked, unlocking, currentStakeAmount: {voting,
         buildAndEarn, era, period}, nextStakeAmount: {...}}."""
-        v = F.col("value")
-        cur = F.get_json_object(v, "$.currentStakeAmount")
-        nxt = F.get_json_object(v, "$.nextStakeAmount")
+        cur = "get_json_object(value, '$.currentStakeAmount')"
+        nxt = "get_json_object(value, '$.nextStakeAmount')"
+        dec = self._decimalized
         # Six balance decodes exceed the ~4-trees-per-method codegen
         # budget (see staker_info's codegen note), so they stage 3 + 3.
         # Each stage also EXTRACTS the next stage's raw strings — the
@@ -605,33 +591,33 @@ class ShibuyaSnapshotter(AstarSnapshotter):
         # from folding the seams back into one over-budget Project
         # (a pure decode/decode split would collapse: its pass-through
         # aliases are cheap and its decoded aliases are used once).
-        s1 = entries.select(
+        s1 = entries.selectExpr(
             "value",
-            F.get_json_object(v, "$.totalLocked").alias("__total_locked"),
-            F.get_json_object(v, "$.unlocking").alias("__unlocking"),
-            F.get_json_object(cur, "$.voting").alias("__cur_voting"),
+            "get_json_object(value, '$.totalLocked') AS __total_locked",
+            "get_json_object(value, '$.unlocking') AS __unlocking",
+            f"get_json_object({cur}, '$.voting') AS __cur_voting",
         )
-        s2 = s1.select(
-            self._decimalized("__total_locked").alias("total_locked"),
-            self._decimalized("__unlocking").alias("unlocking"),
-            self._decimalized("__cur_voting").alias("cur_voting"),
-            F.get_json_object(cur, "$.buildAndEarn").alias("__cur_bae"),
-            F.get_json_object(cur, "$.era").cast("int").alias("cur_era"),
-            F.get_json_object(cur, "$.period").cast("int").alias("cur_period"),
-            F.get_json_object(nxt, "$.voting").alias("__next_voting"),
-            F.get_json_object(nxt, "$.buildAndEarn").alias("__next_bae"),
-            F.get_json_object(nxt, "$.era").cast("int").alias("next_era"),
-            F.get_json_object(nxt, "$.period").cast("int").alias("next_period"),
+        s2 = s1.selectExpr(
+            f"{dec('__total_locked')} AS total_locked",
+            f"{dec('__unlocking')} AS unlocking",
+            f"{dec('__cur_voting')} AS cur_voting",
+            f"get_json_object({cur}, '$.buildAndEarn') AS __cur_bae",
+            f"CAST(get_json_object({cur}, '$.era') AS INT) AS cur_era",
+            f"CAST(get_json_object({cur}, '$.period') AS INT) AS cur_period",
+            f"get_json_object({nxt}, '$.voting') AS __next_voting",
+            f"get_json_object({nxt}, '$.buildAndEarn') AS __next_bae",
+            f"CAST(get_json_object({nxt}, '$.era') AS INT) AS next_era",
+            f"CAST(get_json_object({nxt}, '$.period') AS INT) AS next_period",
         )
-        return s2.select(
+        return s2.selectExpr(
             "total_locked",
             "unlocking",
             "cur_voting",
-            self._decimalized("__cur_bae").alias("cur_build_and_earn"),
+            f"{dec('__cur_bae')} AS cur_build_and_earn",
             "cur_era",
             "cur_period",
-            self._decimalized("__next_voting").alias("next_voting"),
-            self._decimalized("__next_bae").alias("next_build_and_earn"),
+            f"{dec('__next_voting')} AS next_voting",
+            f"{dec('__next_bae')} AS next_build_and_earn",
             "next_era",
             "next_period",
         )
@@ -660,23 +646,23 @@ class ShibuyaSnapshotter(AstarSnapshotter):
 
 
 # OpenGov track registry + conviction lock scale (snapshot/polkadot.js:4-37)
-_OPENGOV_TRACKS = {
-    0: "Root", 1: "WhitelistedCaller", 2: "WishForChange", 10: "StakingAdmin",
-    11: "Treasurer", 12: "LeaseAdmin", 13: "FellowshipAdmin", 14: "GeneralAdmin",
-    15: "AuctionAdmin", 20: "ReferendumCanceller", 21: "ReferendumKiller",
-    30: "SmallTipper", 31: "BigTipper", 32: "SmallSpender", 33: "MediumSpender",
-    34: "BigSpender",
-}
-_CONVICTION_WEIGHTS = {"None": 0.1, "Locked1x": 1.0, "Locked2x": 2.0,
-                       "Locked3x": 3.0, "Locked4x": 4.0, "Locked5x": 5.0,
-                       "Locked6x": 6.0}
-
-
-def _map_lit(mapping: dict) -> Column:
-    pairs = []
-    for k, v in mapping.items():
-        pairs.extend([F.lit(k), F.lit(v)])
-    return F.create_map(*pairs)
+# as SQL map literals; doubles carry the D suffix (a bare 0.1 is a decimal)
+_OPENGOV_TRACKS = (
+    "map(0, 'Root', 1, 'WhitelistedCaller', 2, 'WishForChange', 10, 'StakingAdmin', "
+    "11, 'Treasurer', 12, 'LeaseAdmin', 13, 'FellowshipAdmin', 14, 'GeneralAdmin', "
+    "15, 'AuctionAdmin', 20, 'ReferendumCanceller', 21, 'ReferendumKiller', "
+    "30, 'SmallTipper', 31, 'BigTipper', 32, 'SmallSpender', 33, 'MediumSpender', "
+    "34, 'BigSpender')"
+)
+_CONVICTION_WEIGHTS = (
+    "map('None', 0.1D, 'Locked1x', 1.0D, 'Locked2x', 2.0D, 'Locked3x', 3.0D, "
+    "'Locked4x', 4.0D, 'Locked5x', 5.0D, 'Locked6x', 6.0D)"
+)
+_CONVICTION_NAMES = (
+    "map(0.1D, 'None', 1.0D, 'Locked1x', 2.0D, 'Locked2x', 3.0D, 'Locked3x', "
+    "4.0D, 'Locked4x', 5.0D, 'Locked5x', 6.0D, 'Locked6x')"
+)
+_TRACK = f"element_at({_OPENGOV_TRACKS}, CAST(track_id AS INT)) AS track"
 
 
 class RelaySnapshotter(ChainSnapshotter):
@@ -708,23 +694,13 @@ class RelaySnapshotter(ChainSnapshotter):
              "chain_name": "Polkadot"}
     chain_decimals = 10
 
-    def _track_name(self, track_id: Column) -> Column:
-        return F.element_at(_map_lit(_OPENGOV_TRACKS), track_id.cast("int"))
-
     # -------------------------------------------------------- votingFor
 
     def _keyed(self, entries: DataFrame) -> DataFrame:
-        return entries.select(
-            *self._memo(
-                "_keyed",
-                lambda: [
-                    F.get_json_object("key_args", "$[0]").alias("voter"),
-                    F.get_json_object("key_args", "$[1]")
-                    .cast("int")
-                    .alias("track_id"),
-                    F.col("value"),
-                ],
-            )
+        return entries.selectExpr(
+            "get_json_object(key_args, '$[0]') AS voter",
+            "CAST(get_json_object(key_args, '$[1]') AS INT) AS track_id",
+            "value",
         )
 
     def casting_votes(self, entries: DataFrame) -> DataFrame:
@@ -732,8 +708,6 @@ class RelaySnapshotter(ChainSnapshotter):
         votes decode the vote byte (aye >= 128; conviction = byte % 16,
         0 → 0.1 'None'); split carries aye/nay at conviction None;
         splitAbstain adds the abstain balance (polkadot.js:122-177)."""
-        k = self._keyed(entries)
-
         # Codegen-bounded staging (see staker_info's codegen note): the
         # original single Project inlined the detail JSON into ~6 dechex
         # trees — in-branch expressions are excluded from subexpression
@@ -744,105 +718,75 @@ class RelaySnapshotter(ChainSnapshotter):
         # budget) → the tiny conditional assembly. Every seam column is
         # multi-referenced downstream, which is what keeps
         # CollapseProject from folding the stages back together.
-        def _cols():
-            votes = F.from_json(
-                F.get_json_object("value", "$.casting"),
-                "struct<votes: array<string>>",
-            )["votes"]
-            pred = F.get_json_object("value", "$.casting").isNotNull()
-            sel_explode = ["voter", "track_id", F.explode(votes).alias("pair")]
-            sel_pair = [
+        dec = self._decimalized
+        casting = "get_json_object(value, '$.casting')"
+        votes = f"from_json({casting}, 'struct<votes: array<string>>').votes"
+        weight = "CASE WHEN __byte % 16 = 0 THEN 0.1D ELSE CAST(__byte % 16 AS DOUBLE) END"
+        return (
+            self._keyed(entries)
+            .where(f"{casting} IS NOT NULL")
+            .selectExpr("voter", "track_id", f"explode({votes}) AS pair")
+            .selectExpr(
                 "voter",
                 "track_id",
-                F.get_json_object("pair", "$[0]").cast("long").alias("poll_id"),
-                F.get_json_object("pair", "$[1]").alias("detail"),
-            ]
-            sel_a = [
+                "CAST(get_json_object(pair, '$[0]') AS BIGINT) AS poll_id",
+                "get_json_object(pair, '$[1]') AS detail",
+            )
+            .selectExpr(
                 "voter",
                 "track_id",
                 "poll_id",
-                F.get_json_object("detail", "$.standard").alias("__std"),
-                F.get_json_object("detail", "$.split").alias("__spl"),
-                F.get_json_object("detail", "$.splitAbstain").alias("__spa"),
-            ]
-            sel_b = [
+                "get_json_object(detail, '$.standard') AS __std",
+                "get_json_object(detail, '$.split') AS __spl",
+                "get_json_object(detail, '$.splitAbstain') AS __spa",
+            )
+            .selectExpr(
                 "voter",
                 "track_id",
                 "poll_id",
                 "__std",
                 "__spa",
-                F.conv(
-                    F.regexp_replace(F.get_json_object("__std", "$.vote"), "^0x", ""),
-                    16,
-                    10,
-                )
-                .cast("int")
-                .alias("__byte"),
-                F.get_json_object("__std", "$.balance").alias("__bal"),
-                F.coalesce(
-                    F.get_json_object("__spl", "$.aye"),
-                    F.get_json_object("__spa", "$.aye"),
-                ).alias("__aye"),
-                F.coalesce(
-                    F.get_json_object("__spl", "$.nay"),
-                    F.get_json_object("__spa", "$.nay"),
-                ).alias("__nay"),
-                F.get_json_object("__spa", "$.abstain").alias("__abstain"),
-            ]
-            sel_c = [
+                "CAST(conv(regexp_replace(get_json_object(__std, '$.vote'), '^0x', ''),"
+                " 16, 10) AS INT) AS __byte",
+                "get_json_object(__std, '$.balance') AS __bal",
+                "coalesce(get_json_object(__spl, '$.aye'), get_json_object(__spa, '$.aye'))"
+                " AS __aye",
+                "coalesce(get_json_object(__spl, '$.nay'), get_json_object(__spa, '$.nay'))"
+                " AS __nay",
+                "get_json_object(__spa, '$.abstain') AS __abstain",
+            )
+            .selectExpr(
                 "voter",
                 "track_id",
                 "poll_id",
                 "__std",
                 "__spa",
                 "__byte",
-                self._decimalized("__bal").alias("__bal_d"),
-                self._decimalized("__aye").alias("__aye_d"),
-                self._decimalized("__nay").alias("__nay_d"),
-                self._decimalized("__abstain").alias("__abstain_d"),
-            ]
-            std, spa, byte = F.col("__std"), F.col("__spa"), F.col("__byte")
-            weight = F.when(byte % 16 == 0, F.lit(0.1)).otherwise(
-                (byte % 16).cast("double")
+                f"{dec('__bal')} AS __bal_d",
+                f"{dec('__aye')} AS __aye_d",
+                f"{dec('__nay')} AS __nay_d",
+                f"{dec('__abstain')} AS __abstain_d",
             )
-            vote_type = F.when(
-                std.isNotNull(), F.when(byte >= 128, "aye").otherwise("nay")
-            ).when(spa.isNotNull(), F.lit("splitAbstain")).otherwise(F.lit("split"))
-            sel_out = [
+            .selectExpr(
                 "voter",
                 "track_id",
-                self._track_name(F.col("track_id")).alias("track"),
+                _TRACK,
                 "poll_id",
-                vote_type.alias("vote_type"),
-                F.when(std.isNotNull(), F.element_at(_map_lit({0.1: "None", 1.0: "Locked1x", 2.0: "Locked2x", 3.0: "Locked3x", 4.0: "Locked4x", 5.0: "Locked5x", 6.0: "Locked6x"}), weight))
-                .otherwise(F.lit("None"))
-                .alias("conviction"),
-                F.when(std.isNotNull(), weight).otherwise(F.lit(0.1)).alias(
-                    "conviction_weight"
-                ),
-                F.when(
-                    std.isNotNull(),
-                    F.when(byte >= 128, F.col("__bal_d")).otherwise(F.lit(0.0)),
-                )
-                .otherwise(F.col("__aye_d"))
-                .alias("aye"),
-                F.when(
-                    std.isNotNull(),
-                    F.when(byte < 128, F.col("__bal_d")).otherwise(F.lit(0.0)),
-                )
-                .otherwise(F.col("__nay_d"))
-                .alias("nay"),
-                F.when(spa.isNotNull(), F.col("__abstain_d"))
-                .otherwise(F.lit(0.0))
-                .alias("abstain"),
-            ]
-            return pred, sel_explode, sel_pair, sel_a, sel_b, sel_c, sel_out
-
-        pred, sel_explode, sel_pair, sel_a, sel_b, sel_c, sel_out = self._memo(
-            "casting_votes", _cols
+                "CASE WHEN __std IS NOT NULL THEN"
+                " CASE WHEN __byte >= 128 THEN 'aye' ELSE 'nay' END"
+                " WHEN __spa IS NOT NULL THEN 'splitAbstain' ELSE 'split' END AS vote_type",
+                f"CASE WHEN __std IS NOT NULL THEN element_at({_CONVICTION_NAMES}, {weight})"
+                " ELSE 'None' END AS conviction",
+                f"CASE WHEN __std IS NOT NULL THEN {weight} ELSE 0.1D END AS conviction_weight",
+                "CASE WHEN __std IS NOT NULL THEN"
+                " CASE WHEN __byte >= 128 THEN __bal_d ELSE 0.0D END"
+                " ELSE __aye_d END AS aye",
+                "CASE WHEN __std IS NOT NULL THEN"
+                " CASE WHEN __byte < 128 THEN __bal_d ELSE 0.0D END"
+                " ELSE __nay_d END AS nay",
+                "CASE WHEN __spa IS NOT NULL THEN __abstain_d ELSE 0.0D END AS abstain",
+            )
         )
-        e = k.where(pred).select(*sel_explode).select(*sel_pair)
-        return e.select(*sel_a).select(*sel_b).select(*sel_c).select(*sel_out)
 
     def casting_summary(self, entries: DataFrame) -> DataFrame:
         """One row per (voter, track) casting record — the granularity
@@ -851,34 +795,21 @@ class RelaySnapshotter(ChainSnapshotter):
         lock [bn, balance]; polkadot.js:214-226, 439-448). The per-poll
         decode lives in casting_votes; this is the record-level
         summary."""
-        k = self._keyed(entries)
-
-        def _cols():
-            c_sql = "get_json_object(value, '$.casting')"
-            d_sql = f"get_json_object({c_sql}, '$.delegations')"
-            c = F.expr(c_sql)
-            votes = F.from_json(c, "struct<votes: array<string>>")["votes"]
-            voted = F.transform(votes, lambda p: F.get_json_object(p, "$[0]"))
-            return c.isNotNull(), [
-                "voter",
-                "track_id",
-                self._track_name(F.col("track_id")).alias("track"),
-                F.size(votes).cast("long").alias("voted_cnt"),
-                F.array_join(voted, ",").alias("voted"),
-                self._decimalized(f"get_json_object({d_sql}, '$.votes')").alias(
-                    "delegations_votes"
-                ),
-                self._decimalized(f"get_json_object({d_sql}, '$.capital')").alias(
-                    "delegations_capital"
-                ),
-                F.get_json_object(c, "$.prior[0]").cast("long").alias("prior_bn"),
-                self._decimalized(f"get_json_object({c_sql}, '$.prior[1]')").alias(
-                    "prior_balance"
-                ),
-            ]
-
-        pred, sel = self._memo("casting_summary", _cols)
-        return k.where(pred).select(*sel)
+        dec = self._decimalized
+        c = "get_json_object(value, '$.casting')"
+        d = f"get_json_object({c}, '$.delegations')"
+        votes = f"from_json({c}, 'struct<votes: array<string>>').votes"
+        return self._keyed(entries).where(f"{c} IS NOT NULL").selectExpr(
+            "voter",
+            "track_id",
+            _TRACK,
+            f"CAST(size({votes}) AS BIGINT) AS voted_cnt",
+            f"array_join(transform({votes}, p -> get_json_object(p, '$[0]')), ',') AS voted",
+            dec(f"get_json_object({d}, '$.votes')") + " AS delegations_votes",
+            dec(f"get_json_object({d}, '$.capital')") + " AS delegations_capital",
+            f"CAST(get_json_object({c}, '$.prior[0]') AS BIGINT) AS prior_bn",
+            dec(f"get_json_object({c}, '$.prior[1]')") + " AS prior_balance",
+        )
 
     def delegations(self, entries: DataFrame) -> DataFrame:
         """delegating branch → (voter, track, target, balance,
@@ -887,37 +818,32 @@ class RelaySnapshotter(ChainSnapshotter):
         # Codegen-bounded staging (see staker_info's codegen note):
         # raw strings first, the two balance decodes over plain
         # attributes second.
-        k = self._keyed(entries)
-
-        def _cols():
-            d = F.get_json_object("value", "$.delegating")
-            sel_raw = [
+        dec = self._decimalized
+        return (
+            self._keyed(entries)
+            .selectExpr("*", "get_json_object(value, '$.delegating') AS __d")
+            .where("__d IS NOT NULL")
+            .selectExpr(
                 "voter",
                 "track_id",
-                F.get_json_object("__d", "$.target").alias("target"),
-                F.get_json_object("__d", "$.conviction").alias("conviction"),
-                F.get_json_object("__d", "$.balance").alias("__balance"),
-                F.get_json_object("__d", "$.prior[0]").alias("__prior_bn"),
-                F.get_json_object("__d", "$.prior[1]").alias("__prior_bal"),
-            ]
-            sel_out = [
+                "get_json_object(__d, '$.target') AS target",
+                "get_json_object(__d, '$.conviction') AS conviction",
+                "get_json_object(__d, '$.balance') AS __balance",
+                "get_json_object(__d, '$.prior[0]') AS __prior_bn",
+                "get_json_object(__d, '$.prior[1]') AS __prior_bal",
+            )
+            .selectExpr(
                 "voter",
                 "track_id",
-                self._track_name(F.col("track_id")).alias("track"),
+                _TRACK,
                 "target",
-                self._decimalized("__balance").alias("balance"),
+                f"{dec('__balance')} AS balance",
                 "conviction",
-                F.element_at(_map_lit(_CONVICTION_WEIGHTS), F.col("conviction")).alias(
-                    "conviction_weight"
-                ),
-                F.col("__prior_bn").cast("long").alias("prior_bn"),
-                self._decimalized("__prior_bal").alias("prior_balance"),
-            ]
-            return d, F.col("__d").isNotNull(), sel_raw, sel_out
-
-        d, pred, sel_raw, sel_out = self._memo("delegations", _cols)
-        raw = k.withColumn("__d", d).where(pred).select(*sel_raw)
-        return raw.select(*sel_out)
+                f"element_at({_CONVICTION_WEIGHTS}, conviction) AS conviction_weight",
+                "CAST(__prior_bn AS BIGINT) AS prior_bn",
+                f"{dec('__prior_bal')} AS prior_balance",
+            )
+        )
 
     def delegatees(self, entries: DataFrame) -> DataFrame:
         """The delegatee rollup (polkadot.js:183-206, 267-297): an
@@ -926,64 +852,52 @@ class RelaySnapshotter(ChainSnapshotter):
         delegating — the stats live on the target's storage) or (b) at
         least one delegator names it; delegators aggregate into a
         sorted roster; average_conviction = round(votes/capital, 4)."""
-        k = self._keyed(entries)
-
+        dec = self._decimalized
         # Codegen-bounded staging (see staker_info's codegen note).
-        def _cols():
-            own = F.coalesce(
-                F.get_json_object("value", "$.casting.delegations"),
-                F.get_json_object("value", "$.delegating.delegations"),
-            )
-            sel_raw = [
-                F.col("voter").alias("delegatee"),
-                "track_id",
-                F.get_json_object("__d", "$.votes").alias("__votes"),
-                F.get_json_object("__d", "$.capital").alias("__capital"),
-            ]
-            sel_dec = [
-                "delegatee",
-                "track_id",
-                self._decimalized("__votes").alias("votes"),
-                self._decimalized("__capital").alias("capital"),
-            ]
-            grp = [F.col("target").alias("delegatee"), "track_id"]
-            agg = [
-                F.count(F.lit(1)).alias("delegators_cnt"),
-                F.array_join(F.array_sort(F.collect_list("voter")), ",").alias(
-                    "delegators"
-                ),
-            ]
-            votes = F.coalesce(F.col("votes"), F.lit(0.0))
-            capital = F.coalesce(F.col("capital"), F.lit(0.0))
-            sel_out = [
-                "delegatee",
-                "track_id",
-                self._track_name(F.col("track_id")).alias("track"),
-                votes.alias("delegations_votes"),
-                capital.alias("delegations_capital"),
-                # guard capital > 0 too: junk delegations {votes>0,
-                # capital:0} would otherwise emit Infinity
-                F.when((votes > 0) & (capital > 0), F.round(votes / capital, 4))
-                .otherwise(F.lit(0.0))
-                .alias("avg_conviction"),
-                F.coalesce(F.col("delegators_cnt"), F.lit(0)).cast("long").alias(
-                    "delegators_cnt"
-                ),
-                F.coalesce(F.col("delegators"), F.lit("")).alias("delegators"),
-            ]
-            return own, sel_raw, sel_dec, grp, agg, sel_out
-
-        own, sel_raw, sel_dec, grp, agg, sel_out = self._memo("delegatees", _cols)
         stats = (
-            k.withColumn("__d", own)
-            .where(F.col("__d").isNotNull())
-            .select(*sel_raw)
-            .select(*sel_dec)
-            .where(F.col("votes") > 0)
+            self._keyed(entries)
+            .selectExpr(
+                "*",
+                "coalesce(get_json_object(value, '$.casting.delegations'),"
+                " get_json_object(value, '$.delegating.delegations')) AS __d",
+            )
+            .where("__d IS NOT NULL")
+            .selectExpr(
+                "voter AS delegatee",
+                "track_id",
+                "get_json_object(__d, '$.votes') AS __votes",
+                "get_json_object(__d, '$.capital') AS __capital",
+            )
+            .selectExpr(
+                "delegatee",
+                "track_id",
+                f"{dec('__votes')} AS votes",
+                f"{dec('__capital')} AS capital",
+            )
+            .where("votes > 0")
         )
-        incoming = self.delegations(entries).groupBy(*grp).agg(*agg)
-        merged = stats.join(incoming, ["delegatee", "track_id"], "full_outer")
-        return merged.select(*sel_out)
+        incoming = (
+            self.delegations(entries)
+            .groupBy(F.expr("target AS delegatee"), "track_id")
+            .agg(
+                F.expr("count(1) AS delegators_cnt"),
+                F.expr("array_join(array_sort(collect_list(voter)), ',') AS delegators"),
+            )
+        )
+        votes, capital = "coalesce(votes, 0.0D)", "coalesce(capital, 0.0D)"
+        return stats.join(incoming, ["delegatee", "track_id"], "full_outer").selectExpr(
+            "delegatee",
+            "track_id",
+            _TRACK,
+            f"{votes} AS delegations_votes",
+            f"{capital} AS delegations_capital",
+            # guard capital > 0 too: junk delegations {votes>0,
+            # capital:0} would otherwise emit Infinity
+            f"CASE WHEN {votes} > 0 AND {capital} > 0 THEN round({votes} / {capital}, 4)"
+            " ELSE 0.0D END AS avg_conviction",
+            "CAST(coalesce(delegators_cnt, 0) AS BIGINT) AS delegators_cnt",
+            "coalesce(delegators, '') AS delegators",
+        )
 
     # -------------------------------------------------------- referenda
 
@@ -992,44 +906,35 @@ class RelaySnapshotter(ChainSnapshotter):
         (Object.keys[0]); non-ongoing/killed rows carry [moment,
         {who, amount}]; ongoing rows carry submission/decision deposits
         and the tally (polkadot.js:48-93)."""
-        def _cols():
-            ref_id = F.get_json_object("key_args", "$[0]").cast("long")
-            m = F.from_json(F.col("value"), "map<string,string>")
-            status = F.element_at(F.map_keys(m), 1)
-            detail_sql = "element_at(map_values(from_json(value, 'map<string,string>')), 1)"
-            detail = F.expr(detail_sql)
-            # killed rows deliberately carry NO moment: the reference's
-            # closed-branch guard excludes killed too (polkadot.js:61
-            # `referendumStatus != 'ongoing' && != 'killed'`), so the kill
-            # block at detail[0] is dropped there as well — parity, not loss
-            closed = status.isin("ongoing", "killed") == F.lit(False)
-            dep, sub, dec, tally = (
-                f"get_json_object({detail_sql}, '{path}')"
-                for path in ("$[1]", "$.submissionDeposit", "$.decisionDeposit", "$.tally")
-            )
-            return [
-                ref_id.alias("ref_id"),
-                status.alias("status"),
-                F.when(closed, F.get_json_object(detail, "$[0]").cast("long")).alias(
-                    "moment"
-                ),
-                F.when(closed, F.get_json_object(F.expr(dep), "$.who"))
-                .otherwise(F.get_json_object(F.expr(sub), "$.who"))
-                .alias("depositor"),
-                F.when(closed, self._decimalized(f"get_json_object({dep}, '$.amount')"))
-                .otherwise(self._decimalized(f"get_json_object({sub}, '$.amount')"))
-                .alias("submission_deposit"),
-                self._decimalized(f"get_json_object({dec}, '$.amount')").alias(
-                    "decision_deposit"
-                ),
-                self._decimalized(f"get_json_object({tally}, '$.ayes')").alias("tally_ayes"),
-                self._decimalized(f"get_json_object({tally}, '$.nays')").alias("tally_nays"),
-                self._decimalized(f"get_json_object({tally}, '$.support')").alias(
-                    "tally_support"
-                ),
-            ]
-
-        return entries.select(*self._memo("referenda", _cols))
+        dec = self._decimalized
+        m = "from_json(value, 'map<string,string>')"
+        status = f"element_at(map_keys({m}), 1)"
+        detail = f"element_at(map_values({m}), 1)"
+        # killed rows deliberately carry NO moment: the reference's
+        # closed-branch guard excludes killed too (polkadot.js:61
+        # `referendumStatus != 'ongoing' && != 'killed'`), so the kill
+        # block at detail[0] is dropped there as well — parity, not loss
+        closed = f"({status} IN ('ongoing', 'killed')) = false"
+        dep, sub, dd, tally = (
+            f"get_json_object({detail}, '{path}')"
+            for path in ("$[1]", "$.submissionDeposit", "$.decisionDeposit", "$.tally")
+        )
+        closed_amount = dec(f"get_json_object({dep}, '$.amount')")
+        sub_amount = dec(f"get_json_object({sub}, '$.amount')")
+        return entries.selectExpr(
+            "CAST(get_json_object(key_args, '$[0]') AS BIGINT) AS ref_id",
+            f"{status} AS status",
+            f"CASE WHEN {closed} THEN CAST(get_json_object({detail}, '$[0]') AS BIGINT) END"
+            " AS moment",
+            f"CASE WHEN {closed} THEN get_json_object({dep}, '$.who')"
+            f" ELSE get_json_object({sub}, '$.who') END AS depositor",
+            f"CASE WHEN {closed} THEN {closed_amount} ELSE {sub_amount} END"
+            " AS submission_deposit",
+            dec(f"get_json_object({dd}, '$.amount')") + " AS decision_deposit",
+            dec(f"get_json_object({tally}, '$.ayes')") + " AS tally_ayes",
+            dec(f"get_json_object({tally}, '$.nays')") + " AS tally_nays",
+            dec(f"get_json_object({tally}, '$.support')") + " AS tally_support",
+        )
 
     # ------------------------------------------------ treasury / bounty
 
@@ -1039,53 +944,43 @@ class RelaySnapshotter(ChainSnapshotter):
         """treasury.proposals minus the hand-kept blacklist
         (polkadot.js:491)."""
         # Codegen-bounded staging (see staker_info's codegen note).
-        def _cols():
-            pid = F.get_json_object("key_args", "$[0]")
-            sel_raw = [
-                pid.cast("long").alias("proposal_id"),
-                F.get_json_object("value", "$.proposer").alias("proposer"),
-                F.get_json_object("value", "$.beneficiary").alias("beneficiary"),
-                F.get_json_object("value", "$.value").alias("__value"),
-                F.get_json_object("value", "$.bond").alias("__bond"),
-            ]
-            sel_out = [
+        pid = "get_json_object(key_args, '$[0]')"
+        blacklist = ", ".join(map(_sql_lit, self.TREASURY_BLACKLIST))
+        return (
+            entries.where(f"NOT {pid} IN ({blacklist})")
+            .selectExpr(
+                f"CAST({pid} AS BIGINT) AS proposal_id",
+                "get_json_object(value, '$.proposer') AS proposer",
+                "get_json_object(value, '$.beneficiary') AS beneficiary",
+                "get_json_object(value, '$.value') AS __value",
+                "get_json_object(value, '$.bond') AS __bond",
+            )
+            .selectExpr(
                 "proposal_id",
                 "proposer",
                 "beneficiary",
-                self._decimalized("__value").alias("value"),
-                self._decimalized("__bond").alias("bond"),
-            ]
-            return ~pid.isin(*self.TREASURY_BLACKLIST), sel_raw, sel_out
-
-        pred, sel_raw, sel_out = self._memo("treasury_proposals", _cols)
-        return entries.where(pred).select(*sel_raw).select(*sel_out)
+                f"{self._decimalized('__value')} AS value",
+                f"{self._decimalized('__bond')} AS bond",
+            )
+        )
 
     def bounties(self, entries: DataFrame) -> DataFrame:
         """bounties.bounties: value/fee/curatorDeposit decimalize; the
         status is a single-key variant whose detail may carry curator
         and updateDue (polkadot.js:232-254 process_bounties)."""
-        def _cols():
-            sm = F.from_json(
-                F.get_json_object("value", "$.status"), "map<string,string>"
-            )
-            status = F.element_at(F.map_keys(sm), 1)
-            detail = F.element_at(F.map_values(sm), 1)
-            return [
-                F.get_json_object("key_args", "$[0]").cast("long").alias("bounty_id"),
-                F.get_json_object("value", "$.proposer").alias("proposer"),
-                self._decimalized("get_json_object(value, '$.value')").alias("value"),
-                self._decimalized("get_json_object(value, '$.fee')").alias("fee"),
-                self._decimalized("get_json_object(value, '$.curatorDeposit')").alias(
-                    "curator_deposit"
-                ),
-                status.alias("bounty_status"),
-                F.get_json_object(detail, "$.curator").alias("curator"),
-                F.get_json_object(detail, "$.updateDue").cast("long").alias(
-                    "update_due"
-                ),
-            ]
-
-        return entries.select(*self._memo("bounties", _cols))
+        dec = self._decimalized
+        sm = "from_json(get_json_object(value, '$.status'), 'map<string,string>')"
+        detail = f"element_at(map_values({sm}), 1)"
+        return entries.selectExpr(
+            "CAST(get_json_object(key_args, '$[0]') AS BIGINT) AS bounty_id",
+            "get_json_object(value, '$.proposer') AS proposer",
+            dec("get_json_object(value, '$.value')") + " AS value",
+            dec("get_json_object(value, '$.fee')") + " AS fee",
+            dec("get_json_object(value, '$.curatorDeposit')") + " AS curator_deposit",
+            f"element_at(map_keys({sm}), 1) AS bounty_status",
+            f"get_json_object({detail}, '$.curator') AS curator",
+            f"CAST(get_json_object({detail}, '$.updateDue') AS BIGINT) AS update_due",
+        )
 
     # ---------------------------------------------------------- staking
 
@@ -1100,27 +995,19 @@ class RelaySnapshotter(ChainSnapshotter):
         # aggregate to exactly ONE era row: a missing currentEra yields a
         # NULL era (metrics still surface, visibly era-less) and
         # duplicated singleton fetches cannot double the metric rows
-        def _cols():
-            era_agg = F.max(
-                F.when(F.col("name") == "currentEra", F.col("value").cast("long"))
-            ).alias("__era")
-            balances = ("erasTotalStake", "totalIssuance")
-            metric = F.when(
-                F.col("name").isin(*balances), self._decimalized("value")
-            ).otherwise(F.expr(_dechex_str("value")).cast("double"))
-            sel = [
-                F.col("name").alias("metric"),
-                metric.alias("value"),
-                F.col("__era").alias("era"),
-            ]
-            return era_agg, sel
-
-        era_agg, sel = self._memo("staking_info", _cols)
-        era = singletons.agg(era_agg)
+        era = singletons.agg(
+            F.expr("max(CASE WHEN name = 'currentEra' THEN CAST(value AS BIGINT) END) AS __era")
+        )
         return (
-            singletons.where(F.col("name") != "currentEra")
+            singletons.where("name != 'currentEra'")
             .crossJoin(F.broadcast(era))
-            .select(*sel)
+            .selectExpr(
+                "name AS metric",
+                "CASE WHEN name IN ('erasTotalStake', 'totalIssuance')"
+                f" THEN {self._decimalized('value')}"
+                f" ELSE CAST({_dechex_str('value')} AS DOUBLE) END AS value",
+                "__era AS era",
+            )
         )
 
 

@@ -4884,282 +4884,31 @@ def snapshots_dappstaking_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stakers.unionByName(ei).unionByName(ps)
 
 
-def _sro_exprs() -> dict:
-    """snapshots_relay_opengov's corpus-independent Column trees (r14,
-    the gar/snapshot memo pattern — plans/exprmemo.py): the synthesized
-    votingFor/referenda/treasury/bounty entry values and the eight
-    20-column contract wrappers are pure functions of the generator key
-    k and the track-builder output names; building them was ~half the
-    query's ~4.5 s py4j build floor. Called once per SparkContext via
-    expr_cache; every invocation still assembles and analyzes its own
-    plan over the parquet scans."""
-    null_s = F.lit(None).cast("string")
-    null_d = F.lit(None).cast("double")
-    null_l = F.lit(None).cast("long")
-    k = F.col("k")
-    ks = k.cast("string")
-    track_id = F.element_at(
-        F.array(F.lit(0), F.lit(1), F.lit(10), F.lit(30), F.lit(34)),
-        (k % 5).cast("int") + 1,
-    )
-    voter = F.concat(F.lit("v"), ks)
-    key_args = F.concat(
-        F.lit('["'), voter, F.lit('", '), track_id.cast("string"), F.lit("]")
-    )
+# snapshots_relay_opengov's 20-column output contract: every track's
+# rows land in these columns, in this order; a track leaves the ones it
+# does not name NULL
+_SRO_CONTRACT = (
+    ("kind", "STRING"), ("track", "STRING"), ("track_val", "STRING"),
+    ("address", "STRING"), ("target", "STRING"), ("status", "STRING"),
+    ("conviction", "STRING"), ("conviction_weight", "DOUBLE"), ("aye", "DOUBLE"),
+    ("nay", "DOUBLE"), ("abstain", "DOUBLE"), ("support", "DOUBLE"),
+    ("votes", "DOUBLE"), ("capital", "DOUBLE"), ("avg_conviction", "DOUBLE"),
+    ("delegators", "STRING"), ("n", "BIGINT"), ("amount", "DOUBLE"),
+    ("deposit", "DOUBLE"), ("fee", "DOUBLE"),
+)
 
-    # casting value: standard vote byte 128+k%7 (aye) or k%7 (nay), then
-    # a split (k%6!=0) or splitAbstain (k%6==0) second vote; plancks are
-    # k-scaled integrals so every /1e10 is exact
-    byte = F.when(k % 2 == 0, k % 7 + 128).otherwise(k % 7)
-    vote_hex = F.concat(F.lit("0x"), F.lower(F.hex(byte)))
-    second = F.when(
-        k % 6 == 0,
-        F.concat(
-            F.lit('{"splitAbstain":{"aye":'), (k * 1000000000).cast("string"),
-            F.lit(',"nay":'), (k * 500000000).cast("string"),
-            F.lit(',"abstain":'), (k * 2000000000).cast("string"), F.lit("}}"),
-        ),
-    ).otherwise(
-        F.concat(
-            F.lit('{"split":{"aye":'), (k * 1000000000).cast("string"),
-            F.lit(',"nay":'), (k * 500000000).cast("string"), F.lit("}}"),
-        )
-    )
-    deleg_stats = F.when(
-        k % 9 == 0,
-        F.concat(
-            F.lit('{"votes":'), (k * 100 * 10000000000).cast("string"),
-            F.lit(',"capital":'), (k * 40 * 10000000000).cast("string"),
-            F.lit("}"),
-        ),
-    ).otherwise(F.lit('{"votes":0,"capital":0}'))
-    casting_val = F.concat(
-        F.lit('{"casting":{"votes":[['), ks,
-        F.lit(',{"standard":{"vote":"'), vote_hex, F.lit('","balance":'),
-        (k * 10000000000).cast("string"), F.lit("}}],["),
-        (k + 1000).cast("string"), F.lit(","), second,
-        F.lit(']],"delegations":'), deleg_stats,
-        F.lit(',"prior":['), ks, F.lit(","), (k * 10000000000).cast("string"),
-        F.lit("]}}"),
-    )
-    conv_name = F.when(k % 11 == 0, F.lit("None")).otherwise(
-        F.concat(F.lit("Locked"), (k % 6 + 1).cast("string"), F.lit("x"))
-    )
-    delegating_val = F.concat(
-        F.lit('{"delegating":{"balance":'), (k * 2 * 10000000000).cast("string"),
-        F.lit(',"target":"v'), (k % 10).cast("string"),
-        F.lit('","conviction":"'), conv_name,
-        F.lit('","delegations":{"votes":0,"capital":0},"prior":[0,0]}}'),
-    )
-    voting_cols = [
-        key_args.alias("key_args"),
-        F.when(k % 3 == 0, casting_val).otherwise(delegating_val).alias("value"),
-    ]
 
-    votes_sel = [
-        F.lit("voter").alias("kind"),
-        F.col("track"),
-        F.col("poll_id").cast("string").alias("track_val"),
-        F.col("voter").alias("address"),
-        null_s.alias("target"),
-        F.col("vote_type").alias("status"),
-        "conviction", "conviction_weight", "aye", "nay", "abstain",
-        null_d.alias("support"), null_d.alias("votes"), null_d.alias("capital"),
-        null_d.alias("avg_conviction"), null_s.alias("delegators"),
-        null_l.alias("n"), null_d.alias("amount"), null_d.alias("deposit"),
-        null_d.alias("fee"),
-    ]
-    # record-level casting summary: kind='caster', one row per (voter,
-    # track) — delegators carries the voted-poll csv, n the vote count,
-    # amount/deposit the prior lock [bn, balance]
-    casters_sel = [
-        F.lit("caster").alias("kind"),
-        F.col("track"),
-        F.col("track").alias("track_val"),
-        F.col("voter").alias("address"),
-        null_s.alias("target"), null_s.alias("status"),
-        null_s.alias("conviction"), null_d.alias("conviction_weight"),
-        null_d.alias("aye"), null_d.alias("nay"), null_d.alias("abstain"),
-        null_d.alias("support"),
-        F.col("delegations_votes").alias("votes"),
-        F.col("delegations_capital").alias("capital"),
-        null_d.alias("avg_conviction"),
-        F.col("voted").alias("delegators"),
-        F.col("voted_cnt").alias("n"),
-        F.col("prior_bn").cast("double").alias("amount"),
-        F.col("prior_balance").alias("deposit"),
-        null_d.alias("fee"),
-    ]
-    delegators_sel = [
-        F.lit("delegator").alias("kind"),
-        F.col("track"),
-        F.col("track").alias("track_val"),
-        F.col("voter").alias("address"),
-        F.col("target"),
-        null_s.alias("status"),
-        "conviction", "conviction_weight",
-        null_d.alias("aye"), null_d.alias("nay"), null_d.alias("abstain"),
-        null_d.alias("support"), null_d.alias("votes"), null_d.alias("capital"),
-        null_d.alias("avg_conviction"), null_s.alias("delegators"),
-        F.col("prior_bn").alias("n"),
-        F.col("balance").alias("amount"),
-        F.col("prior_balance").alias("deposit"),
-        null_d.alias("fee"),
-    ]
-    delegatees_sel = [
-        F.lit("delegatee").alias("kind"),
-        F.col("track"),
-        F.col("track").alias("track_val"),
-        F.col("delegatee").alias("address"),
-        null_s.alias("target"), null_s.alias("status"),
-        null_s.alias("conviction"), null_d.alias("conviction_weight"),
-        null_d.alias("aye"), null_d.alias("nay"), null_d.alias("abstain"),
-        null_d.alias("support"),
-        F.col("delegations_votes").alias("votes"),
-        F.col("delegations_capital").alias("capital"),
-        "avg_conviction", "delegators",
-        F.col("delegators_cnt").alias("n"),
-        null_d.alias("amount"), null_d.alias("deposit"), null_d.alias("fee"),
-    ]
+def _sro_rows(df: DataFrame, kind: str, **cols: str) -> DataFrame:
+    """``df`` as snapshots_relay_opengov rows of ``kind``: each named
+    contract column is the given SQL text over ``df``, every other one a
+    typed NULL — one selectExpr."""
+    cols["kind"] = f"'{kind}'"
 
-    # referenda: status by k % 4 over the nation keys
-    ongoing_val = F.concat(
-        F.lit('{"ongoing":{"submissionDeposit":{"who":"d'), ks,
-        F.lit('","amount":'), (k * 10000000000 + 5000000000).cast("string"),
-        F.lit('},"decisionDeposit":{"who":"d'), ks, F.lit('","amount":'),
-        (k * 2 * 10000000000).cast("string"),
-        F.lit('},"tally":{"ayes":'), (k * 7 * 10000000000).cast("string"),
-        F.lit(',"nays":'), (k * 3 * 10000000000).cast("string"),
-        F.lit(',"support":'), (k * 5 * 10000000000).cast("string"),
-        F.lit("}}}"),
-    )
-    closed_val = F.concat(
-        F.when(k % 4 == 1, F.lit('{"approved":[')).otherwise(
-            F.lit('{"rejected":[')
-        ),
-        (k + 100000).cast("string"),
-        F.lit(',{"who":"d'), ks, F.lit('","amount":'),
-        (k * 10000000000).cast("string"), F.lit("},null]}"),
-    )
-    killed_val = F.concat(
-        F.lit('{"killed":['), (k + 200000).cast("string"), F.lit("]}")
-    )
-    ref_cols = [
-        F.concat(F.lit("["), ks, F.lit("]")).alias("key_args"),
-        F.when(k % 4 == 0, ongoing_val)
-        .when(k % 4 == 3, killed_val)
-        .otherwise(closed_val)
-        .alias("value"),
-    ]
-    refs_sel = [
-        F.lit("referendum").alias("kind"),
-        F.lit("referenda").alias("track"),
-        F.col("ref_id").cast("string").alias("track_val"),
-        F.col("depositor").alias("address"),
-        null_s.alias("target"),
-        F.col("status"),
-        null_s.alias("conviction"), null_d.alias("conviction_weight"),
-        F.col("tally_ayes").alias("aye"), F.col("tally_nays").alias("nay"),
-        null_d.alias("abstain"), F.col("tally_support").alias("support"),
-        null_d.alias("votes"), null_d.alias("capital"),
-        null_d.alias("avg_conviction"), null_s.alias("delegators"),
-        F.col("moment").alias("n"),
-        F.col("submission_deposit").alias("amount"),
-        F.col("decision_deposit").alias("deposit"),
-        null_d.alias("fee"),
-    ]
+    def col(name: str, sql_type: str) -> str:
+        sql = cols.get(name, f"CAST(NULL AS {sql_type})")
+        return name if sql == name else f"{sql} AS {name}"
 
-    treas_cols = [
-        F.concat(F.lit('["'), ks, F.lit('"]')).alias("key_args"),
-        F.concat(
-            F.lit('{"proposer":"p'), ks, F.lit('","value":'),
-            (k * 10000000000).cast("string"),
-            F.lit(',"beneficiary":"b'), ks, F.lit('","bond":'),
-            (k * 1000000000).cast("string"), F.lit("}"),
-        ).alias("value"),
-    ]
-    treas_sel = [
-        F.lit("treasury").alias("kind"),
-        F.lit("treasury").alias("track"),
-        F.col("proposal_id").cast("string").alias("track_val"),
-        F.col("beneficiary").alias("address"),
-        F.col("proposer").alias("target"),
-        null_s.alias("status"),
-        null_s.alias("conviction"), null_d.alias("conviction_weight"),
-        null_d.alias("aye"), null_d.alias("nay"), null_d.alias("abstain"),
-        null_d.alias("support"), null_d.alias("votes"), null_d.alias("capital"),
-        null_d.alias("avg_conviction"), null_s.alias("delegators"),
-        null_l.alias("n"),
-        F.col("value").alias("amount"),
-        F.col("bond").alias("deposit"),
-        null_d.alias("fee"),
-    ]
-
-    # bounties over region keys: status variant embeds curator/updateDue
-    status_json = (
-        F.when(k % 3 == 0, F.lit('{"proposed":{}}'))
-        .when(
-            k % 3 == 1,
-            F.concat(
-                F.lit('{"active":{"curator":"c'), ks, F.lit('","updateDue":'),
-                (k + 300000).cast("string"), F.lit("}}"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.lit('{"pendingPayout":{"curator":"c'), ks,
-                F.lit('","unlockAt":9}}'),
-            )
-        )
-    )
-    bounty_cols = [
-        F.concat(F.lit("["), ks, F.lit("]")).alias("key_args"),
-        F.concat(
-            F.lit('{"proposer":"p'), ks, F.lit('","value":'),
-            (k * 5 * 10000000000).cast("string"),
-            F.lit(',"fee":'), (k * 10000000000).cast("string"),
-            F.lit(',"curatorDeposit":'), (k * 5000000000).cast("string"),
-            F.lit(',"bond":'), (k * 1000000000).cast("string"),
-            F.lit(',"status":'), status_json, F.lit("}"),
-        ).alias("value"),
-    ]
-    bounty_sel = [
-        F.lit("bounty").alias("kind"),
-        F.lit("bounty").alias("track"),
-        F.col("bounty_id").cast("string").alias("track_val"),
-        F.col("proposer").alias("address"),
-        F.col("curator").alias("target"),
-        F.col("bounty_status").alias("status"),
-        null_s.alias("conviction"), null_d.alias("conviction_weight"),
-        null_d.alias("aye"), null_d.alias("nay"), null_d.alias("abstain"),
-        null_d.alias("support"), null_d.alias("votes"), null_d.alias("capital"),
-        null_d.alias("avg_conviction"), null_s.alias("delegators"),
-        F.col("update_due").alias("n"),
-        F.col("value").alias("amount"),
-        F.col("curator_deposit").alias("deposit"),
-        F.col("fee"),
-    ]
-    staking_sel = [
-        F.lit("staking").alias("kind"),
-        F.lit("era").alias("track"),
-        F.col("metric").alias("track_val"),
-        null_s.alias("address"), null_s.alias("target"), null_s.alias("status"),
-        null_s.alias("conviction"), null_d.alias("conviction_weight"),
-        null_d.alias("aye"), null_d.alias("nay"), null_d.alias("abstain"),
-        null_d.alias("support"), null_d.alias("votes"), null_d.alias("capital"),
-        null_d.alias("avg_conviction"), null_s.alias("delegators"),
-        F.col("era").alias("n"),
-        F.col("value").alias("amount"),
-        null_d.alias("deposit"), null_d.alias("fee"),
-    ]
-    return {
-        "voting_cols": voting_cols, "votes_sel": votes_sel,
-        "casters_sel": casters_sel, "delegators_sel": delegators_sel,
-        "delegatees_sel": delegatees_sel, "ref_cols": ref_cols,
-        "refs_sel": refs_sel, "treas_cols": treas_cols,
-        "treas_sel": treas_sel, "bounty_cols": bounty_cols,
-        "bounty_sel": bounty_sel, "staking_sel": staking_sel,
-    }
+    return df.selectExpr(*(col(n, t) for n, t in _SRO_CONTRACT))
 
 
 @query(
@@ -5375,33 +5124,110 @@ UNION ALL SELECT * FROM staking_rows
     tags=("pipeline", "snapshot", "window", "functions"),
 )
 def snapshots_relay_opengov(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from polkadot_etl_spark.plans.exprmemo import expr_cache
     from polkadot_etl_spark.plans.snapshots import RelaySnapshotter
 
     snap = RelaySnapshotter()
-    X = expr_cache(("snapshots_relay_opengov",), _sro_exprs)
 
     cu = (
         load_table(spark, sf_dir, "customer")
         .where(F.col("c_custkey") < 60)
         .select(F.col("c_custkey").cast("long").alias("k"))
     )
+    # votingFor entries keyed [voter, track]. casting value: standard
+    # vote byte 128+k%7 (aye) or k%7 (nay), then a split (k%6!=0) or
+    # splitAbstain (k%6==0) second vote; plancks are k-scaled integrals
+    # so every /1e10 is exact
+    byte = "CASE WHEN k % 2 = 0 THEN k % 7 + 128 ELSE k % 7 END"
+    second = """CASE WHEN k % 6 = 0
+        THEN concat('{"splitAbstain":{"aye":', CAST(k * 1000000000 AS STRING),
+                    ',"nay":', CAST(k * 500000000 AS STRING),
+                    ',"abstain":', CAST(k * 2000000000 AS STRING), '}}')
+        ELSE concat('{"split":{"aye":', CAST(k * 1000000000 AS STRING),
+                    ',"nay":', CAST(k * 500000000 AS STRING), '}}') END"""
+    deleg_stats = """CASE WHEN k % 9 = 0
+        THEN concat('{"votes":', CAST(k * 100 * 10000000000 AS STRING),
+                    ',"capital":', CAST(k * 40 * 10000000000 AS STRING), '}')
+        ELSE '{"votes":0,"capital":0}' END"""
+    casting_val = """concat('{"casting":{"votes":[[', CAST(k AS STRING),
+        ',{"standard":{"vote":"', concat('0x', lower(hex(""" + byte + """))),
+        '","balance":', CAST(k * 10000000000 AS STRING),
+        '}}],[', CAST(k + 1000 AS STRING), ',', """ + second + """,
+        ']],"delegations":', """ + deleg_stats + """,
+        ',"prior":[', CAST(k AS STRING), ',', CAST(k * 10000000000 AS STRING), ']}}')"""
+    delegating_val = """concat('{"delegating":{"balance":', CAST(k * 2 * 10000000000 AS STRING),
+        ',"target":"v', CAST(k % 10 AS STRING), '","conviction":"',
+        CASE WHEN k % 11 = 0 THEN 'None'
+             ELSE concat('Locked', CAST(k % 6 + 1 AS STRING), 'x') END,
+        '","delegations":{"votes":0,"capital":0},"prior":[0,0]}}')"""
     # materialize the synthesized votingFor walk ONCE: four consumers
     # (per-poll votes, casting summaries, delegating rows, and the
     # delegatee rollup's two branches) would otherwise each re-run the
     # scan + JSON synthesis subtree (semdedup_prune precedent)
-    voting_for = cu.select(*X["voting_cols"]).localCheckpoint(eager=True)
+    voting_for = cu.selectExpr(
+        """concat('["', concat('v', CAST(k AS STRING)), '", ',
+                  CAST(element_at(array(0, 1, 10, 30, 34), CAST(k % 5 AS INT) + 1) AS STRING),
+                  ']') AS key_args""",
+        f"CASE WHEN k % 3 = 0 THEN {casting_val} ELSE {delegating_val} END AS value",
+    ).localCheckpoint(eager=True)
 
-    votes_df = snap.casting_votes(voting_for).select(*X["votes_sel"])
-    casters_df = snap.casting_summary(voting_for).select(*X["casters_sel"])
-    delegators_df = snap.delegations(voting_for).select(*X["delegators_sel"])
-    delegatees_df = snap.delegatees(voting_for).select(*X["delegatees_sel"])
+    votes_df = _sro_rows(
+        snap.casting_votes(voting_for), "voter",
+        track="track", track_val="CAST(poll_id AS STRING)", address="voter",
+        status="vote_type", conviction="conviction",
+        conviction_weight="conviction_weight", aye="aye", nay="nay",
+        abstain="abstain",
+    )
+    # record-level casting summary: kind='caster', one row per (voter,
+    # track) — delegators carries the voted-poll csv, n the vote count,
+    # amount/deposit the prior lock [bn, balance]
+    casters_df = _sro_rows(
+        snap.casting_summary(voting_for), "caster",
+        track="track", track_val="track", address="voter",
+        votes="delegations_votes", capital="delegations_capital",
+        delegators="voted", n="voted_cnt", amount="CAST(prior_bn AS DOUBLE)",
+        deposit="prior_balance",
+    )
+    delegators_df = _sro_rows(
+        snap.delegations(voting_for), "delegator",
+        track="track", track_val="track", address="voter", target="target",
+        conviction="conviction", conviction_weight="conviction_weight",
+        n="prior_bn", amount="balance", deposit="prior_balance",
+    )
+    delegatees_df = _sro_rows(
+        snap.delegatees(voting_for), "delegatee",
+        track="track", track_val="track", address="delegatee",
+        votes="delegations_votes", capital="delegations_capital",
+        avg_conviction="avg_conviction", delegators="delegators",
+        n="delegators_cnt",
+    )
 
+    # referenda: status by k % 4 over the nation keys
+    ongoing_val = """concat('{"ongoing":{"submissionDeposit":{"who":"d', CAST(k AS STRING),
+        '","amount":', CAST(k * 10000000000 + 5000000000 AS STRING),
+        '},"decisionDeposit":{"who":"d', CAST(k AS STRING),
+        '","amount":', CAST(k * 2 * 10000000000 AS STRING),
+        '},"tally":{"ayes":', CAST(k * 7 * 10000000000 AS STRING),
+        ',"nays":', CAST(k * 3 * 10000000000 AS STRING),
+        ',"support":', CAST(k * 5 * 10000000000 AS STRING), '}}}')"""
+    closed_val = """concat(CASE WHEN k % 4 = 1 THEN '{"approved":[' ELSE '{"rejected":[' END,
+        CAST(k + 100000 AS STRING), ',{"who":"d', CAST(k AS STRING),
+        '","amount":', CAST(k * 10000000000 AS STRING), '},null]}')"""
+    killed_val = """concat('{"killed":[', CAST(k + 200000 AS STRING), ']}')"""
     na = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("long").alias("k")
     )
-    ref_entries = na.select(*X["ref_cols"])
-    refs_df = snap.referenda(ref_entries).select(*X["refs_sel"])
+    ref_entries = na.selectExpr(
+        "concat('[', CAST(k AS STRING), ']') AS key_args",
+        f"CASE WHEN k % 4 = 0 THEN {ongoing_val} WHEN k % 4 = 3 THEN {killed_val}"
+        f" ELSE {closed_val} END AS value",
+    )
+    refs_df = _sro_rows(
+        snap.referenda(ref_entries), "referendum",
+        track="'referenda'", track_val="CAST(ref_id AS STRING)",
+        address="depositor", status="status", aye="tally_ayes",
+        nay="tally_nays", support="tally_support", n="moment",
+        amount="submission_deposit", deposit="decision_deposit",
+    )
 
     # treasury: suppliers < 30 plus the blacklisted 309 (must drop)
     sup = (
@@ -5410,14 +5236,43 @@ def snapshots_relay_opengov(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s_suppkey").cast("long").alias("k"))
         .unionByName(spark.createDataFrame([(309,)], "k long"))
     )
-    treas_entries = sup.select(*X["treas_cols"])
-    treas_df = snap.treasury_proposals(treas_entries).select(*X["treas_sel"])
+    treas_entries = sup.selectExpr(
+        """concat('["', CAST(k AS STRING), '"]') AS key_args""",
+        """concat('{"proposer":"p', CAST(k AS STRING),
+                  '","value":', CAST(k * 10000000000 AS STRING),
+                  ',"beneficiary":"b', CAST(k AS STRING),
+                  '","bond":', CAST(k * 1000000000 AS STRING), '}') AS value""",
+    )
+    treas_df = _sro_rows(
+        snap.treasury_proposals(treas_entries), "treasury",
+        track="'treasury'", track_val="CAST(proposal_id AS STRING)",
+        address="beneficiary", target="proposer", amount="value", deposit="bond",
+    )
 
+    # bounties over region keys: status variant embeds curator/updateDue
+    status_json = """CASE WHEN k % 3 = 0 THEN '{"proposed":{}}'
+        WHEN k % 3 = 1 THEN concat('{"active":{"curator":"c', CAST(k AS STRING),
+                                   '","updateDue":', CAST(k + 300000 AS STRING), '}}')
+        ELSE concat('{"pendingPayout":{"curator":"c', CAST(k AS STRING),
+                    '","unlockAt":9}}') END"""
     rg = load_table(spark, sf_dir, "region").select(
         F.col("r_regionkey").cast("long").alias("k")
     )
-    bounty_entries = rg.select(*X["bounty_cols"])
-    bounty_df = snap.bounties(bounty_entries).select(*X["bounty_sel"])
+    bounty_entries = rg.selectExpr(
+        "concat('[', CAST(k AS STRING), ']') AS key_args",
+        """concat('{"proposer":"p', CAST(k AS STRING),
+                  '","value":', CAST(k * 5 * 10000000000 AS STRING),
+                  ',"fee":', CAST(k * 10000000000 AS STRING),
+                  ',"curatorDeposit":', CAST(k * 5000000000 AS STRING),
+                  ',"bond":', CAST(k * 1000000000 AS STRING),
+                  ',"status":', """ + status_json + """, '}') AS value""",
+    )
+    bounty_df = _sro_rows(
+        snap.bounties(bounty_entries), "bounty",
+        track="'bounty'", track_val="CAST(bounty_id AS STRING)",
+        address="proposer", target="curator", status="bounty_status",
+        n="update_due", amount="value", deposit="curator_deposit", fee="fee",
+    )
 
     # computeTotalStaked era rollup (literal singleton frame)
     singles = spark.createDataFrame(
@@ -5433,7 +5288,10 @@ def snapshots_relay_opengov(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "name string, value string",
     )
-    staking_df = snap.staking_info(singles).select(*X["staking_sel"])
+    staking_df = _sro_rows(
+        snap.staking_info(singles), "staking",
+        track="'era'", track_val="metric", n="era", amount="value",
+    )
 
     return (
         votes_df.unionByName(casters_df)

@@ -79,14 +79,15 @@ def test_no_budget_file_is_silent(tmp_path):
     assert over == {} and no_budget == [] and not p.exists()
 
 
-def test_speed_ratio_normalizes_by_nt_then_1t_else_raw():
+def test_speed_ratio_normalizes_by_nt_else_raw():
     then = {"box_speed_1t": 300, "box_speed_nt": 1200, "box_probe_threads": 8}
     # same thread count: the full-parallel stamp normalizes
     now = {"box_speed_1t": 200, "box_speed_nt": 600, "box_probe_threads": 8}
     assert speed_ratio(then, now) == 2.0
-    # thread counts differ: nt stamps are not comparable, 1t is
+    # thread counts differ: nt stamps are not comparable and the 1t
+    # stamp cannot correct for cores, so the verdict stays raw
     now = {"box_speed_1t": 200, "box_speed_nt": 600, "box_probe_threads": 4}
-    assert speed_ratio(then, now) == 1.5
+    assert speed_ratio(then, now) is None
     # budgets stamped before the probe existed: raw verdict only
     assert speed_ratio({}, now) is None
 

@@ -2647,6 +2647,86 @@ def test_relay_staking_info_missing_or_duplicate_era(spark):
     assert d[0].avg_conviction == 0.0 and d[0].delegations_votes == 5.0
 
 
+def test_relay_and_kusama_keep_their_own_decimals(spark):
+    """Polkadot (10 decimals) and Kusama (12) run the same relay walks
+    in one session: every decimalized balance reads exactly 100x larger
+    on Polkadot, and every other column is equal. Balances are
+    multiples of 1e11 plancks (one in hex), so both quotients are exact."""
+    from polkadot_etl_spark.plans.snapshots import KusamaSnapshotter, RelaySnapshotter
+
+    kv = "key_args string, value string"
+    voting = spark.createDataFrame([
+        ('["vA", 0]',
+         '{"casting":{"votes":[[1,{"standard":{"vote":"0x81","balance":3000000000000}}],'
+         '[2,{"splitAbstain":{"aye":1000000000000,"nay":500000000000,'
+         '"abstain":2000000000000}}]],"delegations":{"votes":4000000000000,'
+         '"capital":2000000000000},"prior":[7,1000000000000]}}'),
+        ('["vB", 0]',
+         '{"delegating":{"balance":"0x2d79883d2000","target":"vA","conviction":"Locked2x",'
+         '"delegations":{"votes":0,"capital":0},"prior":[9,500000000000]}}'),
+    ], kv)
+    referenda = spark.createDataFrame([
+        ('[5]',
+         '{"ongoing":{"submissionDeposit":{"who":"d5","amount":1000000000000},'
+         '"decisionDeposit":{"who":"d5","amount":2000000000000},"tally":'
+         '{"ayes":7000000000000,"nays":3000000000000,"support":5000000000000}}}'),
+        ('[6]', '{"approved":[100006,{"who":"d6","amount":1000000000000},null]}'),
+    ], kv)
+    treasury = spark.createDataFrame([
+        ('["3"]', '{"proposer":"p","value":1000000000000,"beneficiary":"b",'
+                  '"bond":500000000000}'),
+    ], kv)
+    bounties = spark.createDataFrame([
+        ('[4]', '{"proposer":"p","value":5000000000000,"fee":1000000000000,'
+                '"curatorDeposit":500000000000,"bond":1,'
+                '"status":{"active":{"curator":"c","updateDue":9}}}'),
+    ], kv)
+    singles = spark.createDataFrame(
+        [("currentEra", "1477"), ("erasTotalStake", "8200000000000000000"),
+         ("totalIssuance", "15000000000000000000"), ("validatorCount", "600")],
+        "name string, value string",
+    )
+    tracks = [
+        ("casting_votes", voting, {"aye", "nay", "abstain"}),
+        ("casting_summary", voting,
+         {"delegations_votes", "delegations_capital", "prior_balance"}),
+        ("delegations", voting, {"balance", "prior_balance"}),
+        ("delegatees", voting, {"delegations_votes", "delegations_capital"}),
+        ("referenda", referenda, {"submission_deposit", "decision_deposit",
+                                  "tally_ayes", "tally_nays", "tally_support"}),
+        ("treasury_proposals", treasury, {"value", "bond"}),
+        ("bounties", bounties, {"value", "fee", "curator_deposit"}),
+        ("staking_info", singles, {"value"}),
+    ]
+
+    def split(rows, balances):
+        """(non-balance columns, balance columns) per row, in a stable
+        order; staking_info's counters are not balances."""
+        out = []
+        for r in rows:
+            d = r.asDict()
+            bal = balances if d.get("metric", "erasTotalStake") in (
+                "erasTotalStake", "totalIssuance") else set()
+            out.append(({c: v for c, v in d.items() if c not in bal},
+                        {c: v for c, v in d.items() if c in bal}))
+        return sorted(out, key=lambda p: repr(sorted(p[0].items())))
+
+    scaled = 0
+    for method, entries, balances in tracks:
+        dot = split(getattr(RelaySnapshotter(), method)(entries).collect(), balances)
+        ksm = split(getattr(KusamaSnapshotter(), method)(entries).collect(), balances)
+        assert dot and len(dot) == len(ksm), method
+        for (dot_rest, dot_bal), (ksm_rest, ksm_bal) in zip(dot, ksm):
+            assert dot_rest == ksm_rest, method
+            for c, v in dot_bal.items():
+                if v is None:
+                    assert ksm_bal[c] is None, (method, c)
+                else:
+                    assert v == ksm_bal[c] * 100, (method, c, v, ksm_bal[c])
+                    scaled += v != 0
+    assert scaled >= 20
+
+
 def test_bigquery_publish_contract(spark):
     """The bq load / bq query command contract matches the reference's
     invocations byte-for-byte in shape (substrateetl.js:713, 1513,

@@ -17,10 +17,14 @@ BENCH_BUDGETS.json verdict, raw and normalized by box speed
 (bench.speed_ratio): when a query is over its raw budget, this sitting's
 box is probed once (benchutil.box_speed_probe) and the budget is scaled
 by the generating sitting's stamped speed over this one's, so box drift
-reads apart from a real regression. Run breaches on an idle box.
+reads apart from a real regression. Stamps taken at another thread
+count cannot be compared, so such a sitting prints the raw verdict
+only. Run breaches on an idle box.
 
-Each timed query also reports its codegen: the classes Janino compiled
-in each iteration and the compile seconds over all of them
+Each timed query also reports its builder's py4j round trips in each
+iteration (benchutil.py4j_round_trips; the first iteration's trips
+build any memo cold) and its codegen: the classes Janino compiled in
+each iteration and the compile seconds over all of them
 (benchutil.codegen_compiles). A warm iteration should compile nothing;
 a query whose last iteration still compiled is flagged, because its
 generated source changes from run to run or the codegen cache is too
@@ -49,6 +53,7 @@ def main() -> int:
     from polkadot_etl_spark.benchutil import (
         box_speed_probe,
         codegen_compiles,
+        py4j_round_trips,
         time_noop_split,
         warm_session,
     )
@@ -100,10 +105,14 @@ def main() -> int:
         if args.no_time:
             continue
         marks = []  # codegen counters as each iteration starts, then at the end
+        trips = []  # py4j round trips of each iteration's builder
 
         def build(spark, sf_dir, build=spec.build):
             marks.append(codegen_compiles(spark))
-            return build(spark, sf_dir)
+            with py4j_round_trips() as calls:
+                df = build(spark, sf_dir)
+            trips.append(calls[0])
+            return df
 
         spark.sparkContext.setJobDescription(f"profile: {name}")
         splits = time_noop_split(build, spark, sf_dir, base_iters=args.iters)
@@ -132,9 +141,17 @@ def main() -> int:
                     if m <= b_norm
                     else f", ratio {ratio:.3f}, OVER normalized ({b_norm:.2f}s): REAL"
                 )
+            elif box_then and box_then.get("box_probe_threads") != box_now.get(
+                "box_probe_threads"
+            ):
+                verdict += (
+                    f", budgets stamped at {box_then.get('box_probe_threads')} threads,"
+                    f" this box {box_now.get('box_probe_threads')}: no normalized verdict"
+                )
         print(
             f"{name}: min={m:.3f}s build={splits[times.index(m)][0]:.3f}s "
             f"{verdict} iters=" + ",".join(f"{t:.3f}" for t in times)
+            + " round_trips=" + ",".join(map(str, trips))
             + " codegen=" + ",".join(map(str, classes)) + f" classes in {compile_s:.2f}s"
             + (", LAST ITERATION COMPILED" if classes[-1] else "")
         )

@@ -1,7 +1,7 @@
 """Corpus-independent Column-tree memo of the GAR parsers
-(plans/garparsers.py, plans/xcmgar.py), its only owners: the snapshot
-extractors build their tracks as SQL text, which is cheap enough to
-build on every call, and hold no memo.
+(plans/garparsers.py), its only owners: the snapshot extractors and the
+registry's interior-key codec (plans/xcmgar.py) are SQL text, which is
+cheap enough to build on every call, and hold no memo.
 
 Building a large registry frame through the Column API costs thousands
 of py4j round trips — and most of that construction rebuilds the SAME

@@ -25,7 +25,7 @@ chain, so the parent side broadcasts.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -99,15 +99,18 @@ def _u128_from_maybe_hex(c: str) -> str:
 
 
 def _dechex_int(c: Column) -> Column:
-    """Small int from a decimal OR 0x-hex string (paraTool.dechexToInt)."""
-    return (
-        F.when(
-            c.startswith("0x"),
-            F.conv(F.regexp_replace(c, "^0x", ""), 16, 10).cast("long"),
-        )
-        .otherwise(c.try_cast("long"))
-        .cast("int")
-    )
+    """INT from a decimal string (commas allowed: '1,234', the toHuman
+    form) OR a 0x-hex string — the reference's dechexToInt
+    (paraTool.js; xcmgarTool.dechexToInt).  NULL, never a task failure,
+    for anything that is not an integer or is outside INT range, like
+    the decode helpers above: under ANSI mode (Spark 4 default) conv
+    THROWS on 64-bit overflow and a plain cast THROWS out of range, so
+    the hex arm keeps at most 8 significant digits before conv (conv of
+    '' is NULL) and both arms try_cast straight to INT."""
+    hex_digits = F.regexp_extract(c, "^0x0*([0-9a-fA-F]{1,8})$", 1)
+    return F.when(
+        c.startswith("0x"), F.conv(hex_digits, 16, 10).try_cast("int")
+    ).otherwise(F.regexp_replace(c, ",", "").try_cast("int"))
 
 
 def reward_feed(

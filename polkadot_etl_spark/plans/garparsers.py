@@ -25,14 +25,16 @@ JSON — the same fixture-fed contract as plans/snapshots.py S10); every
 parse is native JSON column work (get_json_object / from_json), zero
 Python; the known-asset gate is a broadcast join (registries are
 dim-scale, ~1e3 rows/chain); output rows feed straight into
-plans.xcmgar.build_xcm_asset_registry, whose Arrow codec derives the
-canonical interior key.
+plans.xcmgar.build_xcm_asset_registry, whose native column codec
+(native_loc_cols) derives the canonical interior key.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from polkadot_etl_spark.plans.feeds import _dechex_int
 
 # Corpus-independent expression memo (plans/exprmemo.py, r14 VERDICT
 # #4): the parser selects below are pure functions of the parser CLASS,
@@ -45,16 +47,6 @@ def _cleaned_asset_id(raw: Column) -> Column:
     """'1,984' → 1984 (xcmgarTool.cleanedAssetID — comma-formatted
     toHuman ids cleaned before use, common_chainparser.js:123)."""
     return F.regexp_replace(raw, ",", "").try_cast("long")
-
-
-def _dechex_int(raw: Column) -> Column:
-    """Decimal-or-hex string → int (xcmgarTool.dechexToInt — decimals
-    fields arrive as 12 or '0x0c' depending on the chain's metadata)."""
-    return (
-        F.when(raw.startswith("0x"), F.conv(F.substring(raw, 3, 32), 16, 10).try_cast("long"))
-        .otherwise(F.regexp_replace(raw, ",", "").try_cast("long"))
-        .cast("int")
-    )
 
 
 def _unwrap_location(value: Column) -> Column:
@@ -921,8 +913,10 @@ DIVERGENCES: dict[str, dict[str, str]] = {
     "xtokens-multicurrencies": {
         "where": "augment_from_xtokens transferMulticurrencies"
         " (common_chainparser.js processOutgoingXTokens)",
-        "ours": "not inferred (the reference arm is unreachable dead code)",
-        "reference": "nominally handled, never executes",
+        "ours": "inferred: the [currency, amount] pairs' currencies zip"
+        " positionally against the event's MultiAssets (augment_from_xtokens)",
+        "reference": "nominally handled, never executes (duplicate"
+        " 'xTokens:transfer' case label, common_chainparser.js:1131/:1141)",
         "restore": "none — no reference output exists to reproduce",
     },
 }

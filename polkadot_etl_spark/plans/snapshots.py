@@ -508,7 +508,7 @@ class AstarSnapshotter(ChainSnapshotter):
         [{"Evm"/"Wasm": address}], value = {owner, id, state}."""
         dapp = F.get_json_object("key_args", "$[0]")
         dmap = F.from_json(dapp, "map<string,string>")
-        from polkadot_etl_spark.plans.garparsers import _dechex_int
+        from polkadot_etl_spark.plans.feeds import _dechex_int
 
         return entries.select(
             F.get_json_object("value", "$.owner").alias("owner"),
@@ -627,7 +627,7 @@ class ShibuyaSnapshotter(AstarSnapshotter):
         next_era_start, period_number, subperiod,
         next_subperiod_start_era, maintenance); nextEraStart arrives
         comma-formatted or hex (dechexToInt, shibuya.js:85)."""
-        from polkadot_etl_spark.plans.garparsers import _dechex_int
+        from polkadot_etl_spark.plans.feeds import _dechex_int
 
         v = F.col("value")
         pi = F.get_json_object(v, "$.periodInfo")

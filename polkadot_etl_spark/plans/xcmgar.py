@@ -11,87 +11,40 @@ registry then propagates back into per-chain asset tables — the
 asset × xcmasset join of xcmLiquidityPairsUpdate
 (substrate/xcmmanager.js:500-510).
 
-Spark shape: the multilocation→interior-key codec runs once per
-registration row in one Arrow-batched UDF (registrations are dim-scale:
-~1e3 rows per relay — this whole pipeline is broadcast territory);
-canonical-row selection is a rank window over (origin-first,
-non-wrapper-first); propagation is a broadcast join on the local
-(para_id, currency_id) representation. Lake upsert goes through
-operators.merge.upsert_day_partitioned (J10 MERGE semantics).
+Spark shape: the multilocation→interior-key codec is native column
+work — one let-chained SQL expression per registration row
+(native_loc_cols), evaluated once inside one Generate node, no Python
+stage (registrations are dim-scale: ~1e3 rows per relay — this whole
+pipeline is broadcast territory); canonical-row selection is a rank
+window over (origin-first, non-wrapper-first); propagation is a
+broadcast join on the local (para_id, currency_id) representation.
+Lake upsert goes through operators.merge.upsert_day_partitioned (J10
+MERGE semantics).
 """
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
-from polkadot_etl_spark.functions.multilocation import (
-    _JUNCTIONS,
-    interior_key,
-    para_id_of,
-)
+from polkadot_etl_spark.functions.multilocation import _JUNCTIONS
 from polkadot_etl_spark.operators.srp import _let
 
-_LOC_INFO = T.StructType(
-    [
-        T.StructField("xcm_interior_key", T.StringType()),
-        T.StructField("origin_para_id", T.IntegerType()),
-        T.StructField("n_junctions", T.IntegerType()),
-    ]
-)
-
-
-@pandas_udf(_LOC_INFO)
-def _loc_info_fn(multilocation: pd.Series, relay: pd.Series) -> pd.DataFrame:
-    keys, paras, njs = [], [], []
-    for m, r in zip(multilocation, relay):
-        try:
-            d = json.loads(m)
-            k = interior_key(d, r or "polkadot")
-            keys.append(k)
-            paras.append(para_id_of(d))
-            body = k.split("~", 1)[1]
-            njs.append(0 if body == "here" else len(json.loads(body)))
-        except Exception:
-            keys.append(None)
-            paras.append(None)
-            njs.append(None)
-    return pd.DataFrame(
-        {"xcm_interior_key": keys, "origin_para_id": paras, "n_junctions": njs}
-    )
-
-
-# The codec IS deterministic, but Catalyst treats deterministic
-# expressions as free to duplicate and push around — measured: the
-# isNotNull(xcm_interior_key) gate got pushed below the repartition into
-# every union leg, re-running the Arrow stage once per near-empty file
-# split (each Python task pays a ~1.5 s worker-fork floor here).
-# Marking it nondeterministic pins ONE evaluation in ONE compact stage.
-_loc_info = _loc_info_fn.asNondeterministic()
-
-
 # ---------------------------------------------------------------------------
-# Native (pure-column) form of the codec — the Arrow form's fast path.
+# The interior-key codec as column work.
 #
-# Every Arrow stage pays the ~1.5 s Python-worker fork floor (measured,
-# see build_xcm_asset_registry below), and the interior-key codec is
-# deterministic JSON→JSON assembly — for the SCALAR junction zoo it is
-# expressible as column work: get_json_object('$') normalizes the
-# document to compact Jackson text (whitespace stripped — the same
-# separators json.dumps(…, separators=(',', ':')) emits), junction
-# names rename through a map literal, and each single-key junction
-# object re-assembles by string math. json.dumps(sort_keys=True) is a
-# NO-OP on single-key dicts, so compact-normalize + rename IS the
+# The codec is deterministic JSON→JSON assembly, and for the SCALAR
+# junction zoo it is expressible as column work: get_json_object('$')
+# normalizes the document to compact Jackson text (whitespace stripped —
+# the same separators json.dumps(…, separators=(',', ':')) emits),
+# junction names rename through a map literal, and each single-key
+# junction object re-assembles by string math. json.dumps(sort_keys=True)
+# is a NO-OP on single-key dicts, so compact-normalize + rename IS the
 # canonical serialization for scalar junctions.
 #
-# SUPPORTED (returns the identical struct the Arrow codec returns,
-# cross-checked row-for-row in tests/test_xcmgar.py):
+# SUPPORTED (returns exactly what functions/multilocation.interior_key
+# returns, cross-checked row-for-row in tests/test_xcmgar.py):
 #   - here / missing / null interiors (including the {} → '~here' rule);
 #   - X1 bare-or-array through Xn arrays of single-key junctions whose
 #     values are JSON null, integers, or printable-ASCII strings with
@@ -100,12 +53,11 @@ _loc_info = _loc_info_fn.asNondeterministic()
 #     globalConsensus — everything the gar parsers emit);
 #   - mixed-case junction/variant names, first-parachain origin
 #     extraction, n_junctions.
-# OUT OF SCOPE → NULL key (row routes to the Arrow form or drops,
-# caller's choice): object-valued junctions (accountId32/accountKey20/
-# accountIndex64 carry nested dicts whose key ORDER json.dumps sorts —
-# one-level-flat string math cannot honestly reproduce that), float
-# literals, and strings needing escape sequences. The Arrow codec
-# remains the total form and the cross-check.
+# OUT OF SCOPE → NULL key, and the registry builders below drop the
+# row: object-valued junctions (accountId32/accountKey20/accountIndex64
+# carry nested dicts whose key ORDER json.dumps sorts — one-level-flat
+# string math cannot honestly reproduce that), float literals, and
+# strings needing escape sequences.
 # ---------------------------------------------------------------------------
 
 _CANON_MAP_SQL = (
@@ -120,11 +72,11 @@ _SAFE_QSTRING_RE = r'^\"[\\x20-\\x21\\x23-\\x5b\\x5d-\\x7e]*\"$'
 def native_loc_cols(
     df: DataFrame, ml_col: str = "multilocation", relay_col: str = "relay_chain"
 ) -> DataFrame:
-    """df + the _LOC_INFO columns (xcm_interior_key, origin_para_id,
-    n_junctions) computed natively — the zero-Python fast path for
-    scalar-junction multilocations; NULL key outside the documented
-    scope (see module comment). Identical output to ``_loc_info`` on
-    supported shapes (cross-checked in tests/test_xcmgar.py).
+    """df + the codec columns (xcm_interior_key, origin_para_id,
+    n_junctions) for scalar-junction multilocations; NULL key outside
+    the documented scope (see the codec comment above). Identical output
+    to functions/multilocation.interior_key on supported shapes
+    (cross-checked in tests/test_xcmgar.py).
 
     The whole codec is ONE let-chained expression (see _let): every
     intermediate — normalized doc, interior text, variant keys, the
@@ -141,19 +93,8 @@ def native_loc_cols(
         # named like an output would silently produce duplicate/ambiguous
         # columns after the explode — fail loudly instead
         raise ValueError(f"input columns collide with codec outputs: {sorted(clash)}")
-    # r14 (VERDICT #4): the whole codec Column is corpus-independent for
-    # a given (ml_col, relay_col) pair — build the ~20 KB let-chain and
-    # parse it through F.expr once per process, not per invocation
-    from polkadot_etl_spark.plans.garparsers import _expr_cache
-
     return df.select(
-        "*",
-        F.explode_outer(
-            _expr_cache(
-                ("native_loc_expr", ml_col, relay_col),
-                lambda: F.expr(_native_loc_sql(ml_col, relay_col)),
-            )
-        ).alias("__nloc"),
+        "*", F.explode_outer(F.expr(_native_loc_sql(ml_col, relay_col))).alias("__nloc")
     ).select("*", "__nloc.*").drop("__nloc")
 
 
@@ -204,8 +145,7 @@ def _native_loc_sql(ml_col: str, relay_col: str) -> str:
     # evaluates exactly once per row inside one Generate node and every
     # consumer reads leaf attributes (the struct-returning form was
     # re-evaluated by each consumer - filter + three field extractions
-    # made the sf0.1 exec 4.8 s; the Generate form measures below the
-    # Arrow wave)
+    # made the sf0.1 exec 4.8 s)
     empty = (
         "CAST(array() AS ARRAY<STRUCT<xcm_interior_key: STRING,"
         " origin_para_id: INT, n_junctions: INT>>)"
@@ -263,40 +203,13 @@ def _native_loc_sql(ml_col: str, relay_col: str) -> str:
     return sql
 
 
-def _with_loc_info(chain_assets: DataFrame, codec: str) -> DataFrame:
-    """chain_assets + the codec struct fields, null-keyed rows dropped.
-
-    codec='arrow': the total Python form — one COMPACT wave of Arrow
-    tasks (registrations are dim-scale but typically arrive as a union
-    of many near-empty file splits, and every Arrow-UDF task pays a
-    fixed Python-worker fork cost, ~1.5 s here — re-balance to one wave
-    of core-count tasks so the codec stage costs one fork wall-clock,
-    not ceil(splits/cores); capped because on a large cluster
-    defaultParallelism is thousands and a ~1e3-row dim over thousands
-    of codec tasks would be all fork cost).
-
-    codec='native': zero Python, zero repartition — the pure-column
-    form for scalar-junction registries (see native_loc_info's scope
-    note; out-of-scope rows get a NULL key and DROP, so callers whose
-    data may carry object-valued junctions must use 'arrow')."""
-    if codec == "native":
-        return native_loc_cols(chain_assets).where(
-            F.col("xcm_interior_key").isNotNull()
-        )
-    if codec != "arrow":
-        raise ValueError(f"unknown codec: {codec!r} (use 'arrow' or 'native')")
-    par = min(chain_assets.sparkSession.sparkContext.defaultParallelism, 64)
-    info = _loc_info(F.col("multilocation"), F.col("relay_chain")).alias("__info")
-    return (
-        chain_assets.repartition(par)
-        .withColumn("__info", info)
-        .select("*", "__info.*")
-        .drop("__info")
-        .where(F.col("xcm_interior_key").isNotNull())
-    )
+def _keyed(chain_assets: DataFrame) -> DataFrame:
+    """chain_assets + the codec columns, NULL-keyed (out-of-scope) rows
+    dropped."""
+    return native_loc_cols(chain_assets).where(F.col("xcm_interior_key").isNotNull())
 
 
-def build_xcm_asset_registry(chain_assets: DataFrame, codec: str = "arrow") -> DataFrame:
+def build_xcm_asset_registry(chain_assets: DataFrame) -> DataFrame:
     """Per-chain registrations → one canonical row per xcm_interior_key.
 
     Input columns: relay_chain, para_id (registering chain), currency_id
@@ -310,17 +223,12 @@ def build_xcm_asset_registry(chain_assets: DataFrame, codec: str = "arrow") -> D
     distinct chains that know the asset (schema/xcmassets.json
     confidence column).
 
-    codec: 'arrow' (default, total) or 'native' (zero-Python column
-    form for scalar-junction registries — what every gar parser
-    emits). MEASURED (r7, sf0.1 local[32], fresh sessions x3): native
-    and arrow are wall-clock EQUAL within noise — the Arrow wave's
-    ~1.5 s fork floor is offset by the native expression's richer
-    per-row JSON work. Native still wins on plan SHAPE, which is what
-    matters at cluster scale: zero Python stages and one fewer
-    Exchange (the codec-compaction repartition disappears), both
-    plan-pinned in tests/test_plan_quality.py.
+    Rows are keyed by native_loc_cols; a registration whose
+    multilocation is outside the codec's scope (object-valued junctions
+    such as AccountId32, float literals, strings needing escapes) gets a
+    NULL key and is dropped. Every gar parser emits in-scope rows only.
     """
-    r = _with_loc_info(chain_assets, codec)
+    r = _keyed(chain_assets)
     is_origin = F.coalesce(F.col("origin_para_id"), F.lit(0)) == F.col("para_id")
     is_wrapper = F.col("symbol").startswith("xc")
     w = Window.partitionBy("xcm_interior_key").orderBy(
@@ -365,7 +273,9 @@ def propagate_registry(local_assets: DataFrame, chain_assets: DataFrame, registr
     """Decorate per-chain asset rows with their canonical identity — the
     xcmLiquidityPairsUpdate join (xcmmanager.js:500-510): local
     (para_id, currency_id) → xcm_interior_key → canonical
-    symbol/decimals/home chain. Registry sides broadcast (dim-scale)."""
+    symbol/decimals/home chain. Registry sides broadcast (dim-scale).
+    Registrations outside the codec's scope map to no key, so their
+    local rows get a NULL xcm_interior_key."""
     mapping = F.broadcast(
         build_registration_index(chain_assets).select(
             F.col("para_id").alias("__mp"),
@@ -395,11 +305,12 @@ def propagate_registry(local_assets: DataFrame, chain_assets: DataFrame, registr
     return out.withColumnRenamed("__mk", "xcm_interior_key")
 
 
-def build_registration_index(chain_assets: DataFrame, codec: str = "arrow") -> DataFrame:
+def build_registration_index(chain_assets: DataFrame) -> DataFrame:
     """(para_id, currency_id) → xcm_interior_key for every registration
-    (same codec selection as build_xcm_asset_registry)."""
+    in the codec's scope (out-of-scope rows drop, as in
+    build_xcm_asset_registry)."""
     return (
-        _with_loc_info(chain_assets, codec)
+        _keyed(chain_assets)
         .select("para_id", "currency_id", "xcm_interior_key")
         .dropDuplicates(["para_id", "currency_id"])
     )

@@ -348,8 +348,9 @@ FROM conf
     "currency) and re-registered as an xc-wrapper (ForeignAsset) by each "
     "remote chain that has a supplier there. The REAL "
     "plans.xcmgar.build_xcm_asset_registry canonicalizes: multilocation→"
-    "interior-key via the Arrow-batched codec UDF, home-registration-"
-    "first rank window, confidence = distinct registering chains. The "
+    "interior-key via the native column codec (native_loc_cols), home-"
+    "registration-first rank window, confidence = distinct registering "
+    "chains. The "
     "oracle constructs the expected canonical rows directly.",
     tags=("pipeline", "join", "window"),
 )
@@ -398,7 +399,7 @@ def xcm_asset_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("xcN"), ks),
         "onchain",
     )
-    reg = build_xcm_asset_registry(origins.unionByName(remotes), codec="native")
+    reg = build_xcm_asset_registry(origins.unionByName(remotes))
     return reg.select(
         "xcm_interior_key",
         "symbol",
@@ -3145,7 +3146,7 @@ UNION ALL SELECT * FROM mb_rows
     "the XC-20 precompile contract address derived per asset id — "
     "parse through "
     "plans.garparsers (native JSON columns, broadcast known-asset gates) "
-    "and canonicalize via the REAL build_xcm_asset_registry (Arrow "
+    "and canonicalize via the REAL build_xcm_asset_registry (native "
     "interior-key codec, home-first rank window, confidence = distinct "
     "registering chains; the USDT key is registered by BOTH statemint "
     "and hydra, and the home/manual row must win with confidence 2). "
@@ -3364,8 +3365,7 @@ def gar_chain_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(ph_regs)
         .unionByName(ac_regs)
         .unionByName(mb_regs)
-        .unionByName(il_regs),
-        codec="native",
+        .unionByName(il_regs)
     )
     return reg.select(
         "xcm_interior_key",
@@ -4540,7 +4540,7 @@ UNION ALL SELECT * FROM shadow
     "contributes nothing global by design — its parser is "
     "dispatch-tested in pytest. All parses are native JSON columns with "
     "broadcast known-asset gates; canonicalization is the REAL "
-    "build_xcm_asset_registry (one compact Arrow codec wave, home-first "
+    "build_xcm_asset_registry (native interior-key codec, home-first "
     "rank window).",
     tags=("pipeline", "join", "window", "xcm"),
 )
@@ -4706,8 +4706,7 @@ def gar_longtail_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
         as_regs.unionByName(sh_regs)
         .unionByName(cl_regs)
         .unionByName(ot_regs)
-        .unionByName(sd_regs),
-        codec="native",
+        .unionByName(sd_regs)
     )
     return reg.select(
         "xcm_interior_key",

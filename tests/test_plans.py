@@ -2497,6 +2497,30 @@ def test_dechex_str_over_width_hex_is_null_not_truncated(spark):
     assert [r.feeds for r in rows] == [None, None, None, decimal.Decimal(123)]
 
 
+@pytest.mark.parametrize(
+    "raw, want",
+    [
+        ("1,234", 1234),  # toHuman comma-formatted decimal
+        ("0x8000000000000000", None),  # 2^63: past INT, must not fail the task
+        ("0x" + "f" * 18, None),  # past 64 bits: conv would overflow
+        ("4294967296", None),  # 2^32: past INT
+        ("0x10", 16),
+        ("12", 12),
+        ("abc", None),
+        ("0x", None),
+    ],
+)
+def test_dechex_int_is_null_not_a_failure(spark, raw, want):
+    """The one dechexToInt (reward eras, gar decimals, dApp-staking ids
+    and eras): INT or NULL for every input, never a task failure under
+    the session's ANSI mode."""
+    from polkadot_etl_spark.plans.feeds import _dechex_int
+
+    df = spark.createDataFrame([(raw,)], "v string").select(_dechex_int(F.col("v")).alias("n"))
+    assert df.schema["n"].dataType.simpleString() == "int"
+    assert df.collect()[0].n == want
+
+
 def test_newest_per_key_same_bn_conflict_is_deterministic(spark):
     """Two observations for one key at the SAME block with different
     payloads must pick a stable winner (payload-desc tiebreak), not a

@@ -220,7 +220,7 @@ def test_xtokens_augment_rules(spark):
     params currencies against the event MultiAssets, concrete-fungible
     only (here/null ids drop), unknown-currency gate, and the
     source='augment' publish."""
-    from polkadot_etl_spark.plans.garparsers import CloverGarParser
+    from polkadot_etl_spark.plans.garparsers import DIVERGENCES, CloverGarParser
 
     gar = spark.createDataFrame(
         [
@@ -268,6 +268,10 @@ def test_xtokens_augment_rules(spark):
         ('{"Token":"3"}', "CL3", x2 % (2293, 53), "augment"),
         ('{"Token":"6"}', "CL6", x2 % (2296, 56), "augment"),
     ]
+
+    # the divergence registry records the multicurrencies row above as
+    # inferred, where the reference's arm never executes
+    assert DIVERGENCES["xtokens-multicurrencies"]["ours"].startswith("inferred")
 
 
 def test_xtokens_augment_zip_alignment_matrix(spark):

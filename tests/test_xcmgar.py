@@ -1,19 +1,56 @@
-"""Native vs Arrow multilocation-codec cross-check.
+"""The multilocation interior-key codec: native form vs the Python
+reference.
 
-plans/xcmgar.py carries TWO forms of the interior-key codec: the total
-Arrow form (_loc_info, json.loads + interior_key per row) and the r7
-native pure-column form (native_loc_cols — zero Python, zero extra
-Exchange). The native form's contract: IDENTICAL output on its
-documented scope (scalar-junction multilocations — everything the gar
-parsers emit) and NULL key outside it. These tests pin both halves of
-that contract; if the native form ever silently diverges from the
+plans/xcmgar.py keys every registration through one codec, the
+pure-column native_loc_cols. Its contract: IDENTICAL output to
+functions/multilocation.interior_key on its documented scope
+(scalar-junction multilocations — everything the gar parsers emit) and
+NULL key outside it, where the registry builders drop the row. These
+tests pin both halves against a reference Arrow UDF over interior_key
+(_loc_info_fn below); if the native form ever silently diverges from the
 Python semantics, the gar registry hashes would move — this catches it
 at the operator level first.
 """
 
 from __future__ import annotations
 
+import json
+
+import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
+
+from polkadot_etl_spark.functions.multilocation import interior_key, para_id_of
+
+_LOC_INFO = T.StructType(
+    [
+        T.StructField("xcm_interior_key", T.StringType()),
+        T.StructField("origin_para_id", T.IntegerType()),
+        T.StructField("n_junctions", T.IntegerType()),
+    ]
+)
+
+
+@pandas_udf(_LOC_INFO)
+def _loc_info_fn(multilocation: pd.Series, relay: pd.Series) -> pd.DataFrame:
+    """The reference codec: interior_key per row, NULL where it raises."""
+    keys, paras, njs = [], [], []
+    for m, r in zip(multilocation, relay):
+        try:
+            d = json.loads(m)
+            k = interior_key(d, r or "polkadot")
+            keys.append(k)
+            paras.append(para_id_of(d))
+            body = k.split("~", 1)[1]
+            njs.append(0 if body == "here" else len(json.loads(body)))
+        except Exception:
+            keys.append(None)
+            paras.append(None)
+            njs.append(None)
+    return pd.DataFrame(
+        {"xcm_interior_key": keys, "origin_para_id": paras, "n_junctions": njs}
+    )
 
 
 ZOO = [
@@ -42,7 +79,7 @@ ZOO = [
 ]
 
 OUT_OF_SCOPE = [
-    # object-valued junction: the Arrow codec canonicalizes the nested
+    # object-valued junction: the reference canonicalizes the nested
     # dict with sorted keys; the native form must refuse (NULL key),
     # never emit an unsorted approximation
     ('{"parents":1,"interior":{"X1":{"AccountId32":{"network":"Any","key":"0xab"}}}}', "polkadot"),
@@ -50,7 +87,7 @@ OUT_OF_SCOPE = [
 
 
 def _both(spark, rows):
-    from polkadot_etl_spark.plans.xcmgar import _loc_info, native_loc_cols
+    from polkadot_etl_spark.plans.xcmgar import native_loc_cols
 
     df = spark.createDataFrame(rows, "multilocation string, relay_chain string")
     nat = {
@@ -61,7 +98,7 @@ def _both(spark, rows):
         r.multilocation: (r.a.xcm_interior_key, r.a.origin_para_id, r.a.n_junctions)
         for r in df.select(
             "multilocation",
-            _loc_info(F.col("multilocation"), F.col("relay_chain")).alias("a"),
+            _loc_info_fn(F.col("multilocation"), F.col("relay_chain")).alias("a"),
         ).collect()
     }
     return nat, arrow
@@ -82,36 +119,64 @@ def test_native_codec_refuses_object_valued_junctions(spark):
     )
 
 
-def test_registry_identical_under_both_codecs(spark):
-    """build_xcm_asset_registry(codec='native') must produce exactly the
-    rows of the default Arrow form on a parser-shaped registration set
-    — the operator-level guarantee behind the gar queries' unchanged
-    hashes."""
+_REGS_SCHEMA = (
+    "relay_chain string, para_id int, currency_id string, symbol string,"
+    " name string, decimals int, multilocation string,"
+    " xc_contract_address string, source string"
+)
+
+
+def test_registry_rows_on_parser_shaped_registrations(spark):
+    """build_xcm_asset_registry on a parser-shaped registration set: the
+    canonical rows behind the gar queries' hashes — DOT keyed 'here'
+    with canonical para 0, USDT home row with confidence 2, SDN."""
     from polkadot_etl_spark.plans.xcmgar import build_xcm_asset_registry
 
+    usdt = (
+        '{"parents":1,"interior":{"X3":[{"Parachain":1000},'
+        '{"PalletInstance":50},{"GeneralIndex":1984}]}}'
+    )
+    sdn = '{"parents": 1, "interior": {"X1": [{"Parachain": 2007}]}}'
     regs = spark.createDataFrame(
         [
             ("polkadot", 2004, "42", "xcDOT", "dot", 10,
              '{"parents":0,"interior":{"Here":null}}', None, "onchain"),
             ("polkadot", 0, "0", "DOT", "dot", 10,
              '{"parents":0,"interior":{"here":null}}', None, "native"),
-            ("polkadot", 1000, "1984", "USDT", "tether", 6,
-             '{"parents":1,"interior":{"X3":[{"Parachain":1000},{"PalletInstance":50},{"GeneralIndex":1984}]}}',
-             None, "onchain"),
-            ("polkadot", 2034, "5", "xcUSDT", "tether", 6,
-             '{"parents":1,"interior":{"X3":[{"Parachain":1000},{"PalletInstance":50},{"GeneralIndex":1984}]}}',
-             None, "onchain"),
-            ("kusama", 2007, "SDN", "SDN", "shiden", 18,
-             '{"parents": 1, "interior": {"X1": [{"Parachain": 2007}]}}', None, "manual"),
+            ("polkadot", 1000, "1984", "USDT", "tether", 6, usdt, None, "onchain"),
+            ("polkadot", 2034, "5", "xcUSDT", "tether", 6, usdt, None, "onchain"),
+            ("kusama", 2007, "SDN", "SDN", "shiden", 18, sdn, None, "manual"),
         ],
-        "relay_chain string, para_id int, currency_id string, symbol string,"
-        " name string, decimals int, multilocation string,"
-        " xc_contract_address string, source string",
+        _REGS_SCHEMA,
     )
-    a = sorted(map(tuple, build_xcm_asset_registry(regs, codec="arrow").collect()))
-    n = sorted(map(tuple, build_xcm_asset_registry(regs, codec="native").collect()))
-    assert a == n
-    assert len(a) == 3  # DOT(here) canonical para 0, USDT conf 2, SDN
+    got = sorted(map(tuple, build_xcm_asset_registry(regs).collect()))
+    assert got == [
+        ('kusama~[{"parachain":2007}]', None, sdn, "SDN", 18, 2007,
+         "chain2007", "x1", "manual", None, "SDN", 1),
+        ('polkadot~[{"parachain":1000},{"palletInstance":50},{"generalIndex":1984}]',
+         None, usdt, "USDT", 6, 1000, "chain1000", "x3", "onchain", None, "1984", 2),
+        ("polkadot~here", None, '{"parents":0,"interior":{"here":null}}', "DOT",
+         10, 0, "chain0", "here", "native", None, "0", 2),
+    ]
+
+
+def test_registry_drops_out_of_scope_registrations(spark):
+    """A registration whose multilocation carries an object-valued
+    junction (AccountId32) is outside the codec's scope: it gets no key
+    and is absent from the registry, while in-scope rows still land."""
+    from polkadot_etl_spark.plans.xcmgar import build_xcm_asset_registry
+
+    (account_ml, _), = OUT_OF_SCOPE
+    regs = spark.createDataFrame(
+        [
+            ("polkadot", 2004, "7", "ACC", "acc", 12, account_ml, None, "onchain"),
+            ("polkadot", 0, "0", "DOT", "dot", 10,
+             '{"parents":0,"interior":{"Here":null}}', None, "native"),
+        ],
+        _REGS_SCHEMA,
+    )
+    got = build_xcm_asset_registry(regs).collect()
+    assert [(r.xcm_interior_key, r.symbol) for r in got] == [("polkadot~here", "DOT")]
 
 
 def test_native_codec_rejects_reserved_output_columns(spark):

@@ -535,12 +535,12 @@ class StatemintParser(ChainParser):
                 F.col("decimals").alias("__dec"),
             )
         )
-        from polkadot_etl_spark.plans.garparsers import _cleaned_asset_id
+        from polkadot_etl_spark.plans.feeds import _cleaned_asset_id
 
         is_assets = F.col("section") == "assets"
         out = transfers.join(
             dim,
-            is_assets & (_cleaned_asset_id(F.col("asset")) == F.col("__aid")),
+            is_assets & (F.expr(_cleaned_asset_id("asset")) == F.col("__aid")),
             "left",
         )
         dec = F.col("__dec")

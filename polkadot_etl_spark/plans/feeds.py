@@ -25,7 +25,7 @@ chain, so the parent side broadcasts.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -98,19 +98,28 @@ def _u128_from_maybe_hex(c: str) -> str:
     )
 
 
-def _dechex_int(c: Column) -> Column:
-    """INT from a decimal string (commas allowed: '1,234', the toHuman
-    form) OR a 0x-hex string — the reference's dechexToInt
-    (paraTool.js; xcmgarTool.dechexToInt).  NULL, never a task failure,
-    for anything that is not an integer or is outside INT range, like
-    the decode helpers above: under ANSI mode (Spark 4 default) conv
-    THROWS on 64-bit overflow and a plain cast THROWS out of range, so
-    the hex arm keeps at most 8 significant digits before conv (conv of
-    '' is NULL) and both arms try_cast straight to INT."""
-    hex_digits = F.regexp_extract(c, "^0x0*([0-9a-fA-F]{1,8})$", 1)
-    return F.when(
-        c.startswith("0x"), F.conv(hex_digits, 16, 10).try_cast("int")
-    ).otherwise(F.regexp_replace(c, ",", "").try_cast("int"))
+def _dechex_int(c: str) -> str:
+    """SQL text: INT from the SQL text ``c`` of a decimal string (commas
+    allowed: '1,234', the toHuman form) OR a 0x-hex string — the
+    reference's dechexToInt (paraTool.js; xcmgarTool.dechexToInt).
+    NULL, never a task failure, for anything that is not an integer or
+    is outside INT range, like the decode helpers above: under ANSI mode
+    (Spark 4 default) conv THROWS on 64-bit overflow and a plain cast
+    THROWS out of range, so the hex arm keeps at most 8 significant
+    digits before conv (conv of '' is NULL) and both arms try_cast
+    straight to INT."""
+    hex_digits = f"regexp_extract({c}, '^0x0*([0-9a-fA-F]{{1,8}})$', 1)"
+    return (
+        f"CASE WHEN startswith({c}, '0x') THEN try_cast(conv({hex_digits}, 16, 10) AS INT)"
+        f" ELSE try_cast(regexp_replace({c}, ',', '') AS INT) END"
+    )
+
+
+def _cleaned_asset_id(raw: str) -> str:
+    """SQL text: '1,984' → 1984 as BIGINT from the SQL text ``raw``
+    (xcmgarTool.cleanedAssetID — comma-formatted toHuman ids cleaned
+    before use, common_chainparser.js:123)."""
+    return f"try_cast(regexp_replace({raw}, ',', '') AS BIGINT)"
 
 
 def reward_feed(
@@ -151,7 +160,7 @@ def reward_feed(
     base = events.where(is_reward | is_payout).withColumn("__d", arr)
 
     if era_data_index is not None:
-        era_raw = F.when(is_reward, _dechex_int(F.get(F.col("__d"), era_data_index)))
+        era_raw = F.when(is_reward, F.expr(_dechex_int(f"get(__d, {era_data_index})")))
     else:
         era_raw = F.when(is_payout, F.get(F.col("__d"), 0).cast("int"))
     contract = (

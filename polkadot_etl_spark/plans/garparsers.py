@@ -22,11 +22,17 @@ with a {location, properties} value).
 
 Spark shape: inputs are state-entry frames (key_args JSON array + value
 JSON — the same fixture-fed contract as plans/snapshots.py S10); every
-parse is native JSON column work (get_json_object / from_json), zero
-Python; the known-asset gate is a broadcast join (registries are
-dim-scale, ~1e3 rows/chain); output rows feed straight into
-plans.xcmgar.build_xcm_asset_registry, whose native column codec
+parse is native JSON work written as SQL text (selectExpr / where
+strings / F.expr), zero Python; the known-asset gate is a broadcast join
+(registries are dim-scale, ~1e3 rows/chain); output rows feed straight
+into plans.xcmgar.build_xcm_asset_registry, whose native column codec
 (native_loc_cols) derives the canonical interior key.
+
+SQL text, not Column trees: every Column-API node is at least one py4j
+round trip, and a text parses into the same Catalyst expression in one
+call (README pitfall "Large expression trees cost py4j, not JVM"), so
+the selects are rebuilt on every call and hold no memo — except
+GarParser.parse_gar, the one remaining plans/exprmemo site.
 """
 
 from __future__ import annotations
@@ -34,23 +40,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from polkadot_etl_spark.plans.feeds import _dechex_int
-
-# Corpus-independent expression memo (plans/exprmemo.py, r14 VERDICT
-# #4): the parser selects below are pure functions of the parser CLASS,
-# not of the data, and rebuilding their trees (~9,000 py4j round trips
-# per gar registry frame) cost the gar_chain/longtail builds 1.7–2.0 s.
 from polkadot_etl_spark.plans.exprmemo import expr_cache as _expr_cache
+from polkadot_etl_spark.plans.feeds import _cleaned_asset_id, _dechex_int
+
+# SQL text of the first storage-key argument
+_KEY0 = "get_json_object(key_args, '$[0]')"
 
 
-def _cleaned_asset_id(raw: Column) -> Column:
-    """'1,984' → 1984 (xcmgarTool.cleanedAssetID — comma-formatted
-    toHuman ids cleaned before use, common_chainparser.js:123)."""
-    return F.regexp_replace(raw, ",", "").try_cast("long")
-
-
-def _unwrap_location(value: Column) -> Column:
-    """XCM location value → the inner {parents, interior} JSON.
+def _unwrap_location(value: str) -> str:
+    """SQL text: the XCM location value ``value`` (SQL text) → the inner
+    {parents, interior} JSON.
 
     Handles the three shapes the reference unwraps
     (common_chainparser.js:598-613 `xcmAssetJSON.xcm ?? xcmAssetJSON`;
@@ -59,25 +58,19 @@ def _unwrap_location(value: Column) -> Column:
     - xcm     {"xcm": {...}}
     - version {"V0"/"V1"/..: {...}} (any single version key)
     """
-    versioned = F.element_at(F.map_values(F.from_json(value, "map<string,string>")), 1)
-    return F.when(F.get_json_object(value, "$.parents").isNotNull(), value).otherwise(
-        F.coalesce(F.get_json_object(value, "$.xcm"), versioned)
+    versioned = f"element_at(map_values(from_json({value}, 'map<string,string>')), 1)"
+    return (
+        f"CASE WHEN get_json_object({value}, '$.parents') IS NOT NULL THEN {value}"
+        f" ELSE coalesce(get_json_object({value}, '$.xcm'), {versioned}) END"
     )
 
 
-def _numeric_xc_location(entries: DataFrame) -> DataFrame:
-    """The common xc-map shape: numeric asset-id key, (possibly
-    version-wrapped) multilocation value — hydra assetLocations, moonbeam
-    assetIdType, calamari assetIdLocation, parallel assetIdType all read
-    this way."""
-    cols = _expr_cache(
-        "numeric_xc_location",
-        lambda: [
-            _cleaned_asset_id(F.get_json_object("key_args", "$[0]")).alias("asset_id"),
-            _unwrap_location(F.col("value")).alias("multilocation"),
-        ],
+def _xc_rows(entries: DataFrame, key: str, location: str) -> DataFrame:
+    """xc entries → (the ``key`` select, multilocation) rows that carry a
+    location; ``key`` and ``location`` are SQL text."""
+    return entries.selectExpr(key, f"{location} AS multilocation").where(
+        "multilocation IS NOT NULL"
     )
-    return entries.select(*cols).where(F.col("multilocation").isNotNull())
 
 
 class GarParser:
@@ -135,94 +128,93 @@ class GarParser:
         - decimals parse decimal-or-hex (dechexToInt, :141)."""
 
         def _exprs():
-            meta = F.coalesce(F.get_json_object("value", "$.metadata"), F.col("value"))
-            aid = _cleaned_asset_id(F.get_json_object("key_args", "$[0]"))
-            symbol = F.get_json_object(meta, "$.symbol")
-            decimals = _dechex_int(F.get_json_object(meta, "$.decimals"))
+            meta = "coalesce(get_json_object(value, '$.metadata'), value)"
+            aid = _cleaned_asset_id(_KEY0)
+            symbol = f"get_json_object({meta}, '$.symbol')"
+            decimals = _dechex_int(f"get_json_object({meta}, '$.decimals')")
             return [
-                aid.alias("asset_id"),
-                F.concat(F.lit('{"Token":"'), aid.cast("string"), F.lit('"}')).alias(
-                    "currency_id"
-                ),
-                symbol.alias("symbol"),
-                F.coalesce(F.get_json_object(meta, "$.name"), symbol).alias("name"),
-                decimals.alias("decimals"),
+                F.expr(f"{aid} AS asset_id"),
+                F.expr(f"""concat('{{"Token":"', CAST({aid} AS STRING), '"}}') AS currency_id"""),
+                F.expr(f"{symbol} AS symbol"),
+                F.expr(f"coalesce(get_json_object({meta}, '$.name'), {symbol}) AS name"),
+                F.expr(f"{decimals} AS decimals"),
             ]
 
+        # the one plans/exprmemo site (see its docstring for why it stays)
         cols = _expr_cache(("parse_gar", GarParser), _exprs)
-        return entries.select(*cols).where(
-            F.col("symbol").isNotNull() & F.col("decimals").isNotNull()
-        )
+        return entries.select(*cols).where("symbol IS NOT NULL AND decimals IS NOT NULL")
 
     # ---------------------------------------------------------------- xcGar
 
     def _xc_location(self, entries: DataFrame) -> DataFrame:
-        """Subclass hook: raw xc entries → (asset_id, multilocation JSON,
-        xc_name, xc_symbol, xc_decimals — the latter three only for
-        value shapes that embed properties)."""
-        raise NotImplementedError(f"{self.parser_name} has no xc registry")
+        """Raw xc entries → (asset_id, multilocation JSON). The common
+        xc-map shape: numeric asset-id key, (possibly version-wrapped)
+        multilocation value — hydra assetLocations, moonbeam assetIdType,
+        calamari assetIdLocation, parallel assetIdType all read this
+        way; Phala, Orml and OrmlMetadata override it."""
+        if self.xc_gar_pallet is None:
+            raise NotImplementedError(f"{self.parser_name} has no xc registry")
+        return _xc_rows(
+            entries, f"{_cleaned_asset_id(_KEY0)} AS asset_id", _unwrap_location("value")
+        )
 
     def parse_xc_gar(self, xc_entries: DataFrame, gar: DataFrame) -> DataFrame:
         """XC registrations: location rows gated on the known-asset set —
         the reference skips ids absent from the local registry
         ('AssetInfo unknown -- skip', common_chainparser.js:672-675) —
         with the display symbol taken from the local registry, xc-wrapper
-        prefix stripped (:610 symbol.replace('xc','')). Broadcast join:
-        both sides are dim-scale. The join key is ``xc_join_on`` —
-        numeric asset_id for assets-pallet chains, the CurrencyId JSON
-        for ORML chains whose registries key on currency objects."""
+        prefix stripped (:610 symbol.replace('xc','')). The join key is
+        ``xc_join_on`` — numeric asset_id for assets-pallet chains, the
+        CurrencyId JSON for ORML chains whose registries key on currency
+        objects."""
         return self._gated_registrations(self._xc_location(xc_entries), gar, "onchain")
 
     def _gated_registrations(
-        self, loc: DataFrame, gar: DataFrame, source: str
+        self, rows: DataFrame, gar: DataFrame, source: str
     ) -> DataFrame:
-        def _dim_cols():
-            return [
-                F.col(self.xc_join_on).alias("__jk"),
-                F.col("currency_id").alias("__cur"),
-                F.col("symbol").alias("__sym"),
-                F.col("name").alias("__name"),
-                F.col("decimals").alias("__dec"),
-            ]
-
-        def _out_cols():
-            sym = F.col("__sym")
-            if self.xc_strip_wrapper:
-                # INTENTIONAL divergence: the reference strips the FIRST
-                # 'xc' occurrence anywhere (symbol.replace('xc',''),
-                # common_chainparser.js:610) so an interior 'xc' in a
-                # non-wrapper symbol would mangle ('FOxcBAR' → 'FOBAR');
-                # the anchored form only strips the wrapper PREFIX, which
-                # is the rule's stated purpose. Symbols differing under
-                # the two rules are malformed registrations in the
-                # reference too.
-                sym = F.regexp_replace(sym, "^xc", "")
-            return [
-                F.lit(self.relay_chain).alias("relay_chain"),
-                F.lit(self.para_id).alias("para_id"),
-                F.col("__cur").alias("currency_id"),
-                sym.alias("symbol"),
-                F.col("__name").alias("name"),
-                F.col("__dec").alias("decimals"),
-                F.col("multilocation"),
-                F.lit(None).cast("string").alias("xc_contract_address"),
-                F.lit(source).alias("source"),
-            ]
-
-        # keyed on every attribute the trees read, so two instances of
-        # one class with different knobs can never share a wrong tree
+        """Location ``rows`` joined to the local registry ``gar`` (a
+        broadcast join: both sides are dim-scale) → the 9-column
+        registration rows. Manual rows key on ``symbol`` when they carry
+        one, else on ``asset_id``, publish under ``manual_relay_chain``
+        and keep the registry symbol; on-chain and augment rows key on
+        ``xc_join_on``, publish under ``relay_chain`` and strip the
+        xc-wrapper prefix when ``xc_strip_wrapper``."""
+        manual = source == "manual"
+        if manual:
+            key = "symbol" if "symbol" in rows.columns else "asset_id"
+        else:
+            key = self.xc_join_on
+        relay = self.manual_relay_chain if manual else self.relay_chain
+        symbol = "__sym"
+        if self.xc_strip_wrapper and not manual:
+            # INTENTIONAL divergence: the reference strips the FIRST 'xc'
+            # occurrence anywhere (symbol.replace('xc',''),
+            # common_chainparser.js:610) so an interior 'xc' in a
+            # non-wrapper symbol would mangle ('FOxcBAR' → 'FOBAR'); the
+            # anchored form only strips the wrapper PREFIX, which is the
+            # rule's stated purpose. Symbols differing under the two
+            # rules are malformed registrations in the reference too.
+            symbol = "regexp_replace(__sym, '^xc', '')"
         dim = F.broadcast(
-            gar.select(*_expr_cache(("gated_dim", self.xc_join_on), _dim_cols))
+            gar.selectExpr(
+                f"{key} AS __jk",
+                "currency_id AS __cur",
+                "symbol AS __sym",
+                "name AS __name",
+                "decimals AS __dec",
+            )
         )
-        joined = loc.join(dim, loc[self.xc_join_on] == F.col("__jk"), "inner")
-        out_key = (
-            "gated_out",
-            self.relay_chain,
-            self.para_id,
-            self.xc_strip_wrapper,
-            source,
+        return rows.join(dim, F.expr(f"{key} = __jk"), "inner").selectExpr(
+            f"'{relay}' AS relay_chain",
+            f"{self.para_id} AS para_id",
+            "__cur AS currency_id",
+            f"{symbol} AS symbol",
+            "__name AS name",
+            "__dec AS decimals",
+            "multilocation",
+            "CAST(NULL AS STRING) AS xc_contract_address",
+            f"'{source}' AS source",
         )
-        return joined.select(*_expr_cache(out_key, _out_cols))
 
     # -------------------------------------------------------------- augment
 
@@ -257,8 +249,8 @@ class GarParser:
 
         Input extrinsics frame: (section, method, params JSON, events
         JSON array of {section, method, data}). Everything is native
-        JSON column work; the gate is the same broadcast dim as
-        parse_xc_gar; rows publish with source='augment'.
+        JSON work; the gate is the same broadcast dim as parse_xc_gar;
+        rows publish with source='augment'.
 
         Assets-pallet chains only (numeric currency ids — the chains the
         reference wires augment on: clover, origintrail, robonomics's
@@ -269,62 +261,38 @@ class GarParser:
                 f"{self.parser_name}: xTokens augment supports "
                 "assets-pallet (numeric id) chains only"
             )
-        def _exprs():
-            ev_arr = F.from_json(F.col("events"), "array<string>")
-            xt = F.filter(
-                ev_arr,
-                lambda e: (F.get_json_object(e, "$.section") == "xTokens")
-                & (F.get_json_object(e, "$.method") == "TransferredMultiAssets"),
-            )
-            sm = F.concat(F.col("section"), F.lit(":"), F.col("method"))
-            # local side: one currency for transfer, the [currency,
-            # amount] pair list's first elements for
-            # transferMulticurrencies
-            currencies = F.when(
-                F.col("method") == "transfer",
-                F.array(F.get_json_object("params", "$.currency_id")),
-            ).otherwise(
-                F.transform(
-                    F.from_json(
-                        F.get_json_object("params", "$.currencies"), "array<string>"
-                    ),
-                    lambda c: F.get_json_object(c, "$[0]"),
-                )
-            )
-            # global side: the event's Vec<MultiAsset> (data[1])
-            assets = F.from_json(
-                F.get_json_object(F.element_at("__xt", 1), "$.data[1]"),
-                "array<string>",
-            )
-            loc = F.get_json_object("ast", "$.id.concrete")
-            fungible = F.get_json_object("ast", "$.fun.fungible")
-            aid = _cleaned_asset_id(
-                F.coalesce(F.get_json_object("cur", "$.Token"), F.col("cur"))
-            )
-            return {
-                "xt": xt,
-                "sm_in": sm.isin(
-                    "xTokens:transfer", "xTokens:transferMulticurrencies"
-                ),
-                "zipped": F.explode(
-                    F.arrays_zip(currencies.alias("cur"), assets.alias("ast"))
-                ).alias("z"),
-                "pair_keep": loc.isNotNull()
-                & fungible.isNotNull()
-                & aid.isNotNull(),
-                "pair_cols": [aid.alias("asset_id"), loc.alias("multilocation")],
-            }
-
-        ex = _expr_cache(("augment_xtokens", GarParser), _exprs)
+        xt = (
+            "filter(from_json(events, 'array<string>'),"
+            " e -> get_json_object(e, '$.section') = 'xTokens'"
+            " AND get_json_object(e, '$.method') = 'TransferredMultiAssets')"
+        )
+        # local side: one currency for transfer, the [currency, amount]
+        # pair list's first elements for transferMulticurrencies
+        currencies = (
+            "CASE WHEN method = 'transfer'"
+            " THEN array(get_json_object(params, '$.currency_id'))"
+            " ELSE transform(from_json(get_json_object(params, '$.currencies'),"
+            " 'array<string>'), c -> get_json_object(c, '$[0]')) END"
+        )
+        # global side: the event's Vec<MultiAsset> (data[1])
+        assets = "from_json(get_json_object(element_at(__xt, 1), '$.data[1]'), 'array<string>')"
+        loc = "get_json_object(ast, '$.id.concrete')"
+        fungible = "get_json_object(ast, '$.fun.fungible')"
+        aid = _cleaned_asset_id("coalesce(get_json_object(cur, '$.Token'), cur)")
         base = (
-            extrinsics.where(ex["sm_in"]).withColumn("__xt", ex["xt"]).where(
-                F.size("__xt") == 1
+            extrinsics.where(
+                "concat(section, ':', method)"
+                " IN ('xTokens:transfer', 'xTokens:transferMulticurrencies')"
             )
+            .selectExpr("*", f"{xt} AS __xt")
+            .where("size(__xt) = 1")
         )
-        z = base.select(ex["zipped"]).select(
-            F.col("z.cur").alias("cur"), F.col("z.ast").alias("ast")
+        pairs = (
+            base.selectExpr(f"inline(arrays_zip({currencies}, {assets})) AS (cur, ast)")
+            .where(f"{loc} IS NOT NULL AND {fungible} IS NOT NULL AND {aid} IS NOT NULL")
+            .selectExpr(f"{aid} AS asset_id", f"{loc} AS multilocation")
+            .distinct()
         )
-        pairs = z.where(ex["pair_keep"]).select(*ex["pair_cols"]).distinct()
         return self._gated_registrations(pairs, gar, "augment")
 
     # --------------------------------------------------------------- manual
@@ -371,29 +339,7 @@ class GarParser:
             # (statemint's {"Token":"1984"}) or by symbol (astar's
             # native {"Token":"ASTR"}, which attaches to the
             # system-properties seed).
-            by_symbol = "symbol" in manual.columns
-            dim = F.broadcast(
-                gar.select(
-                    (F.col("symbol") if by_symbol else F.col("asset_id")).alias("__jk"),
-                    F.col("currency_id").alias("__cur"),
-                    F.col("symbol").alias("__sym"),
-                    F.col("name").alias("__name"),
-                    F.col("decimals").alias("__dec"),
-                )
-            )
-            mkey = manual["symbol"] if by_symbol else manual["asset_id"]
-            m = manual.join(dim, mkey == F.col("__jk"), "inner").select(
-                F.lit(self.manual_relay_chain).alias("relay_chain"),
-                F.lit(self.para_id).alias("para_id"),
-                F.col("__cur").alias("currency_id"),
-                F.col("__sym").alias("symbol"),
-                F.col("__name").alias("name"),
-                F.col("__dec").alias("decimals"),
-                F.col("multilocation"),
-                F.lit(None).cast("string").alias("xc_contract_address"),
-                F.lit("manual").alias("source"),
-            )
-            parts.append(m)
+            parts.append(self._gated_registrations(manual, gar, "manual"))
         if not parts:
             raise ValueError(f"{self.parser_name}: no registration source")
         out = parts[0]
@@ -447,9 +393,6 @@ class HydraGarParser(GarParser):
     xc_gar_storage = "assetLocations"
     xc_strip_wrapper = True  # IdType path (common_chainparser.js:610)
 
-    def _xc_location(self, entries: DataFrame) -> DataFrame:
-        return _numeric_xc_location(entries)
-
 
 class PhalaGarParser(GarParser):
     """Phala (polkadot-2035 / kusama-2004 khala, gar/chainParsers/
@@ -465,16 +408,11 @@ class PhalaGarParser(GarParser):
     xc_gar_storage = "registryInfoByIds"
 
     def _xc_location(self, entries: DataFrame) -> DataFrame:
-        cols = _expr_cache(
-            ("xc_location", PhalaGarParser),
-            lambda: [
-                _cleaned_asset_id(F.get_json_object("key_args", "$[0]")).alias(
-                    "asset_id"
-                ),
-                F.get_json_object("value", "$.location").alias("multilocation"),
-            ],
+        return _xc_rows(
+            entries,
+            f"{_cleaned_asset_id(_KEY0)} AS asset_id",
+            "get_json_object(value, '$.location')",
         )
-        return entries.select(*cols).where(F.col("multilocation").isNotNull())
 
 
 class OrmlGarParser(GarParser):
@@ -501,61 +439,45 @@ class OrmlGarParser(GarParser):
     vs_token_rule = False
 
     def parse_gar(self, entries: DataFrame) -> DataFrame:
-        def _exprs():
-            key0 = F.get_json_object("key_args", "$[0]")
-            kmap = F.from_json(key0, "map<string,string>")
-            kname = F.element_at(F.map_keys(kmap), 1)
-            kval = F.element_at(F.map_values(kmap), 1)
-            numeric = kval.rlike("^[0-9,]+$")
-            scalar_json = F.when(numeric, F.regexp_replace(kval, ",", "")).otherwise(
-                F.concat(F.lit('"'), kval, F.lit('"'))
-            )
-            currency = F.when(kname == "NativeAssetId", kval).otherwise(
-                F.concat(
-                    F.lit('{"'),
-                    F.regexp_replace(kname, "Id$", ""),
-                    F.lit('":'),
-                    scalar_json,
-                    F.lit("}"),
-                )
-            )
-            symbol = F.get_json_object("value", "$.symbol")
-            name = F.get_json_object("value", "$.name")
-            if self.vs_token_rule:
-                is_vs = currency.startswith('{"VSToken"')
-                symbol = F.when(is_vs, F.concat(F.lit("VS"), symbol)).otherwise(symbol)
-                name = F.when(
-                    is_vs, F.concat(F.lit("Bifrost Voucher Slot "), name)
-                ).otherwise(name)
-            return [
-                F.lit(None).cast("long").alias("asset_id"),
-                currency.alias("currency_id"),
-                symbol.alias("symbol"),
-                name.alias("name"),
-                _dechex_int(F.get_json_object("value", "$.decimals")).alias(
-                    "decimals"
-                ),
-            ]
-
-        cols = _expr_cache(("orml_parse_gar", self.vs_token_rule), _exprs)
-        return entries.select(*cols).where(
-            F.col("symbol").isNotNull() & F.col("decimals").isNotNull()
+        kmap = f"from_json({_KEY0}, 'map<string,string>')"
+        kname = f"element_at(map_keys({kmap}), 1)"
+        kval = f"element_at(map_values({kmap}), 1)"
+        scalar_json = (
+            f"CASE WHEN {kval} rlike '^[0-9,]+$' THEN regexp_replace({kval}, ',', '')"
+            f""" ELSE concat('"', {kval}, '"') END"""
         )
+        currency = (
+            f"CASE WHEN {kname} = 'NativeAssetId' THEN {kval}"
+            f""" ELSE concat('{{"', regexp_replace({kname}, 'Id$', ''), '":',"""
+            f" {scalar_json}, '}}') END"
+        )
+        symbol = "get_json_object(value, '$.symbol')"
+        name = "get_json_object(value, '$.name')"
+        if self.vs_token_rule:
+            is_vs = f"""startswith({currency}, '{{"VSToken"')"""
+            symbol = f"CASE WHEN {is_vs} THEN concat('VS', {symbol}) ELSE {symbol} END"
+            name = (
+                f"CASE WHEN {is_vs} THEN concat('Bifrost Voucher Slot ', {name})"
+                f" ELSE {name} END"
+            )
+        decimals = _dechex_int("get_json_object(value, '$.decimals')")
+        return entries.selectExpr(
+            "CAST(NULL AS BIGINT) AS asset_id",
+            f"{currency} AS currency_id",
+            f"{symbol} AS symbol",
+            f"{name} AS name",
+            f"{decimals} AS decimals",
+        ).where("symbol IS NOT NULL AND decimals IS NOT NULL")
 
     def _xc_location(self, entries: DataFrame) -> DataFrame:
         # foreignAssetLocations keys on the bare ForeignAsset id
         # (useForeignAssetPrefix, common_chainparser.js:714-718)
-        def _exprs():
-            fa = _cleaned_asset_id(F.get_json_object("key_args", "$[0]"))
-            return [
-                F.concat(
-                    F.lit('{"ForeignAsset":'), fa.cast("string"), F.lit("}")
-                ).alias("currency_id"),
-                _unwrap_location(F.col("value")).alias("multilocation"),
-            ]
-
-        cols = _expr_cache(("xc_location", OrmlGarParser), _exprs)
-        return entries.select(*cols).where(F.col("multilocation").isNotNull())
+        fa = _cleaned_asset_id(_KEY0)
+        return _xc_rows(
+            entries,
+            f"""concat('{{"ForeignAsset":', CAST({fa} AS STRING), '}}') AS currency_id""",
+            _unwrap_location("value"),
+        )
 
 
 class AcalaGarParser(OrmlGarParser):
@@ -602,15 +524,12 @@ class MoonbeamGarParser(GarParser):
     xc_gar_storage = "assetIdType"
     xc_strip_wrapper = True
 
-    def _xc_location(self, entries: DataFrame) -> DataFrame:
-        return _numeric_xc_location(entries)
-
     def parse_xc_gar(self, xc_entries: DataFrame, gar: DataFrame) -> DataFrame:
         out = super().parse_xc_gar(xc_entries, gar)
         # xcContractAddress = 0xffffffff ++ 16-byte big-endian asset id
-        aid = _cleaned_asset_id(F.get_json_object("currency_id", "$.Token"))
-        xc20 = F.concat(F.lit("0xffffffff"), F.lpad(F.lower(F.hex(aid)), 32, "0"))
-        return out.withColumn("xc_contract_address", xc20)
+        aid = _cleaned_asset_id("get_json_object(currency_id, '$.Token')")
+        xc20 = f"concat('0xffffffff', lpad(lower(hex({aid})), 32, '0'))"
+        return out.withColumn("xc_contract_address", F.expr(xc20))
 
 
 class OrmlMetadataGarParser(GarParser):
@@ -633,32 +552,19 @@ class OrmlMetadataGarParser(GarParser):
     def parse_gar(self, entries: DataFrame) -> DataFrame:
         out = super().parse_gar(entries)
         if self.pad_prefix:
-            cur = F.concat(
-                F.lit('{"%s":"' % self.pad_prefix),
-                F.col("asset_id").cast("string"),
-                F.lit('"}'),
-            )
+            cur = f"""concat('{{"{self.pad_prefix}":"', CAST(asset_id AS STRING), '"}}')"""
             out = out.withColumn(
                 "currency_id",
-                F.when(F.col("asset_id").isNotNull(), cur).otherwise(
-                    F.col("currency_id")
-                ),
+                F.expr(f"CASE WHEN asset_id IS NOT NULL THEN {cur} ELSE currency_id END"),
             )
         return out
 
     def _xc_location(self, entries: DataFrame) -> DataFrame:
-        cols = _expr_cache(
-            ("xc_location", OrmlMetadataGarParser),
-            lambda: [
-                _cleaned_asset_id(F.get_json_object("key_args", "$[0]")).alias(
-                    "asset_id"
-                ),
-                _unwrap_location(F.get_json_object("value", "$.location")).alias(
-                    "multilocation"
-                ),
-            ],
+        return _xc_rows(
+            entries,
+            f"{_cleaned_asset_id(_KEY0)} AS asset_id",
+            _unwrap_location("get_json_object(value, '$.location')"),
         )
-        return entries.select(*cols).where(F.col("multilocation").isNotNull())
 
 
 class InterlayGarParser(OrmlMetadataGarParser):
@@ -721,9 +627,6 @@ class CalamariGarParser(GarParser):
     xc_gar_pallet = "assetManager"
     xc_gar_storage = "assetIdLocation"
 
-    def _xc_location(self, entries: DataFrame) -> DataFrame:
-        return _numeric_xc_location(entries)
-
 
 class ParallelGarParser(GarParser):
     """parallel polkadot-2012 / heiko kusama-2085 (parallel.js:1):
@@ -734,9 +637,6 @@ class ParallelGarParser(GarParser):
     xc_gar_pallet = "assetRegistry"
     xc_gar_storage = "assetIdType"
     xc_strip_wrapper = True
-
-    def _xc_location(self, entries: DataFrame) -> DataFrame:
-        return _numeric_xc_location(entries)
 
 
 class AstarGarParser(GarParser):
@@ -753,9 +653,6 @@ class AstarGarParser(GarParser):
     xc_gar_pallet = "xcAssetConfig"
     xc_gar_storage = "assetIdToLocation"
     native_tokens = [("ASTR", 18)]
-
-    def _xc_location(self, entries: DataFrame) -> DataFrame:
-        return _numeric_xc_location(entries)
 
     def manual_registrations(self, spark) -> DataFrame:
         loc = (
@@ -804,9 +701,6 @@ class CloverGarParser(GarParser):
     xc_gar_pallet = "assetConfig"
     xc_gar_storage = "assetIdLocation"
 
-    def _xc_location(self, entries: DataFrame) -> DataFrame:
-        return _numeric_xc_location(entries)
-
 
 class OrigintrailGarParser(GarParser):
     """origintrail polkadot-2043 (gar/chainParsers/origintrail.js:1):
@@ -818,9 +712,6 @@ class OrigintrailGarParser(GarParser):
     para_id = 2043
     xc_gar_pallet = "xcAssetConfig"
     xc_gar_storage = "assetIdToLocation"
-
-    def _xc_location(self, entries: DataFrame) -> DataFrame:
-        return _numeric_xc_location(entries)
 
 
 class RobonomicsGarParser(GarParser):
@@ -850,9 +741,6 @@ class ShadowGarParser(GarParser):
     xc_gar_pallet = "assetManager"
     xc_gar_storage = "assetIdType"
     xc_strip_wrapper = True
-
-    def _xc_location(self, entries: DataFrame) -> DataFrame:
-        return _numeric_xc_location(entries)
 
 
 _GAR_PARSERS: dict[str, type[GarParser]] = {

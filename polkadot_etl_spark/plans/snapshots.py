@@ -506,16 +506,16 @@ class AstarSnapshotter(ChainSnapshotter):
     def integrated_dapps(self, entries: DataFrame) -> DataFrame:
         """dappStaking.integratedDApps → the dApp registry: key =
         [{"Evm"/"Wasm": address}], value = {owner, id, state}."""
-        dapp = F.get_json_object("key_args", "$[0]")
-        dmap = F.from_json(dapp, "map<string,string>")
         from polkadot_etl_spark.plans.feeds import _dechex_int
 
-        return entries.select(
-            F.get_json_object("value", "$.owner").alias("owner"),
-            F.element_at(F.map_keys(dmap), 1).alias("dapp_type"),
-            F.element_at(F.map_values(dmap), 1).alias("dapp_address"),
-            _dechex_int(F.get_json_object("value", "$.id")).alias("dapp_id"),
-            (F.get_json_object("value", "$.state") == "Registered").alias("registered"),
+        dmap = "from_json(get_json_object(key_args, '$[0]'), 'map<string,string>')"
+        dapp_id = _dechex_int("get_json_object(value, '$.id')")
+        return entries.selectExpr(
+            "get_json_object(value, '$.owner') AS owner",
+            f"element_at(map_keys({dmap}), 1) AS dapp_type",
+            f"element_at(map_values({dmap}), 1) AS dapp_address",
+            f"{dapp_id} AS dapp_id",
+            "get_json_object(value, '$.state') = 'Registered' AS registered",
         )
 
 
@@ -629,19 +629,18 @@ class ShibuyaSnapshotter(AstarSnapshotter):
         comma-formatted or hex (dechexToInt, shibuya.js:85)."""
         from polkadot_etl_spark.plans.feeds import _dechex_int
 
-        v = F.col("value")
-        pi = F.get_json_object(v, "$.periodInfo")
-        return entries.select(
-            _dechex_int(F.get_json_object(v, "$.era")).alias("era"),
-            _dechex_int(F.get_json_object(v, "$.nextEraStart"))
-            .cast("long")
-            .alias("next_era_start"),
-            _dechex_int(F.get_json_object(pi, "$.number")).alias("period_number"),
-            F.get_json_object(pi, "$.subperiod").alias("subperiod"),
-            _dechex_int(F.get_json_object(pi, "$.nextSubperiodStartEra")).alias(
-                "next_subperiod_start_era"
-            ),
-            F.get_json_object(v, "$.maintenance").cast("boolean").alias("maintenance"),
+        pi = "get_json_object(value, '$.periodInfo')"
+
+        def dechex(doc: str, path: str) -> str:
+            return _dechex_int(f"get_json_object({doc}, '{path}')")
+
+        return entries.selectExpr(
+            f"{dechex('value', '$.era')} AS era",
+            f"CAST({dechex('value', '$.nextEraStart')} AS BIGINT) AS next_era_start",
+            f"{dechex(pi, '$.number')} AS period_number",
+            f"get_json_object({pi}, '$.subperiod') AS subperiod",
+            f"{dechex(pi, '$.nextSubperiodStartEra')} AS next_subperiod_start_era",
+            "CAST(get_json_object(value, '$.maintenance') AS BOOLEAN) AS maintenance",
         )
 
 

@@ -69,11 +69,10 @@ _CANON_MAP_SQL = (
 _SAFE_QSTRING_RE = r'^\"[\\x20-\\x21\\x23-\\x5b\\x5d-\\x7e]*\"$'
 
 
-def native_loc_cols(
-    df: DataFrame, ml_col: str = "multilocation", relay_col: str = "relay_chain"
-) -> DataFrame:
+def native_loc_cols(df: DataFrame) -> DataFrame:
     """df + the codec columns (xcm_interior_key, origin_para_id,
-    n_junctions) for scalar-junction multilocations; NULL key outside
+    n_junctions) for the scalar-junction multilocations of its
+    ``multilocation`` column, relative to its ``relay_chain``; NULL key outside
     the documented scope (see the codec comment above). Identical output
     to functions/multilocation.interior_key on supported shapes
     (cross-checked in tests/test_xcmgar.py).
@@ -94,11 +93,11 @@ def native_loc_cols(
         # columns after the explode — fail loudly instead
         raise ValueError(f"input columns collide with codec outputs: {sorted(clash)}")
     return df.select(
-        "*", F.explode_outer(F.expr(_native_loc_sql(ml_col, relay_col))).alias("__nloc")
+        "*", F.explode_outer(F.expr(_native_loc_sql())).alias("__nloc")
     ).select("*", "__nloc.*").drop("__nloc")
 
 
-def _native_loc_sql(ml_col: str, relay_col: str) -> str:
+def _native_loc_sql() -> str:
     """The codec's one let-chained SQL expression (see native_loc_cols)."""
     # inner lets: keys / canonical name / value text each bind once
     # per junction (the inline form re-ran json_object_keys ~6x per
@@ -165,9 +164,9 @@ def _native_loc_sql(ml_col: str, relay_col: str) -> str:
         f" ELSE {empty} END"
     )
     sql = _let(
-        ml_col, "ml0",
+        "multilocation", "ml0",
         _let(
-            relay_col, "rl0",
+            "relay_chain", "rl0",
             _let(
                 "get_json_object(ml0, '$')", "nrm",
                 _let(

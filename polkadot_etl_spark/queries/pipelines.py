@@ -3000,32 +3000,45 @@ def dune_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# The GAR inputs below are SQL text over an integer key column ``k``:
+# a cold build parses each select in a few py4j calls (README pitfall
+# "Large expression trees cost py4j, not JVM").
+_GAR_KEY_ARGS = """concat('["', CAST(k AS STRING), '"]') AS key_args"""
+
+
+def _x2(para: str, gi: str) -> str:
+    """SQL text: the {parents:1, X2:[Parachain, GeneralIndex]} location
+    JSON of the SQL texts ``para`` and ``gi``."""
+    return (
+        f"""concat('{{"parents":1,"interior":{{"X2":[{{"Parachain":', CAST({para} AS STRING),"""
+        f""" '}},{{"GeneralIndex":', CAST({gi} AS STRING), '}}]}}}}')"""
+    )
+
+
 def _statemint_gar_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthetic assets:metadata state entries for AssetHub, exercising
     every parse rule of processGarAssetPallet (common_chainparser.js:
     120-158): comma-formatted ids, hex-or-decimal decimals, missing-name
     fallback, missing-symbol drop — plus the real USDT (1984) row the
     manual registration (statemint.js:27-38) attaches to."""
-    part = load_table(spark, sf_dir, "part").where(
-        (F.col("p_partkey") >= 1) & (F.col("p_partkey") < 40)
+    part = load_table(spark, sf_dir, "part").where("p_partkey >= 1 AND p_partkey < 40")
+    ks = "CAST(p_partkey AS STRING)"
+    dec = "6 + p_partkey % 7"
+    dec_json = (
+        f"""CASE WHEN p_partkey % 3 = 0 THEN concat('"0x', lower(hex({dec})), '"')"""
+        f" ELSE CAST({dec} AS STRING) END"
     )
-    k = F.col("p_partkey")
-    ks = k.cast("string")
-    dec_val = F.lit(6) + k % 7
-    dec_json = F.when(
-        k % 3 == 0, F.concat(F.lit('"0x'), F.lower(F.hex(dec_val)), F.lit('"'))
-    ).otherwise(dec_val.cast("string"))
-    sym_part = F.when(k % 7 == 0, F.lit("")).otherwise(
-        F.concat(F.lit('"symbol":"ST'), ks, F.lit('",'))
+    sym_part = (
+        "CASE WHEN p_partkey % 7 = 0 THEN ''"
+        f""" ELSE concat('"symbol":"ST', {ks}, '",') END"""
     )
-    name_part = F.when(k % 5 == 0, F.lit("")).otherwise(
-        F.concat(F.lit('"name":"Part '), ks, F.lit('",'))
+    name_part = (
+        "CASE WHEN p_partkey % 5 = 0 THEN ''"
+        f""" ELSE concat('"name":"Part ', {ks}, '",') END"""
     )
-    synth = part.select(
-        F.concat(F.lit('["'), F.format_number(k * 100, 0), F.lit('"]')).alias("key_args"),
-        F.concat(
-            F.lit("{"), sym_part, name_part, F.lit('"decimals":'), dec_json, F.lit("}")
-        ).alias("value"),
+    synth = part.selectExpr(
+        """concat('["', format_number(p_partkey * 100, 0), '"]') AS key_args""",
+        f"""concat('{{', {sym_part}, {name_part}, '"decimals":', {dec_json}, '}}') AS value""",
     )
     usdt = spark.createDataFrame(
         [('["1,984"]', '{"symbol":"USDT","name":"Tether USD","decimals":6}')],
@@ -3167,39 +3180,21 @@ def gar_chain_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- hydra: assetMetadataMap + version-wrapped assetLocations
-    nat = load_table(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("k"))
-    k = F.col("k")
-    ks = k.cast("string")
-    key_args = F.concat(F.lit('["'), ks, F.lit('"]'))
+    nat = load_table(spark, sf_dir, "nation").selectExpr("n_nationkey AS k")
     hy_gar = _hydra_gar_entries(spark, sf_dir).unionByName(
         spark.createDataFrame(
             [('["900"]', '{"symbol":"xcUSDT","decimals":6}')],
             "key_args string, value string",
         )
     )
-
-    def _x2(para: Column, gi: Column) -> Column:
-        return F.concat(
-            F.lit('{"parents":1,"interior":{"X2":[{"Parachain":'),
-            para.cast("string"),
-            F.lit('},{"GeneralIndex":'),
-            gi.cast("string"),
-            F.lit("}]}}"),
-        )
-
     hy_xc_val = (
-        F.when(k % 3 == 0, F.concat(F.lit('{"v1":'), _x2(k + 2000, k), F.lit("}")))
-        .when(
-            k % 3 == 1,
-            F.concat(
-                F.lit('{"xcm":{"parents":1,"interior":{"X1":{"Parachain":'),
-                (k + 2000).cast("string"),
-                F.lit("}}}}"),
-            ),
-        )
-        .otherwise(_x2(k + 3000, k))
+        f"""CASE WHEN k % 3 = 0 THEN concat('{{"v1":', {_x2("k + 2000", "k")}, '}}')"""
+        " WHEN k % 3 = 1 THEN concat("
+        """'{"xcm":{"parents":1,"interior":{"X1":{"Parachain":',"""
+        " CAST(k + 2000 AS STRING), '}}}}')"
+        f" ELSE {_x2('k + 3000', 'k')} END"
     )
-    hy_xc = nat.select(key_args.alias("key_args"), hy_xc_val.alias("value")).unionByName(
+    hy_xc = nat.selectExpr(_GAR_KEY_ARGS, f"{hy_xc_val} AS value").unionByName(
         spark.createDataFrame(
             [
                 # hydra's wrapper registration of AssetHub USDT → the same
@@ -3222,32 +3217,17 @@ def gar_chain_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     hy_regs = HydraGarParser().registrations(spark, hy_gar, hy_xc)
 
     # --- phala: assets:metadata + {location, properties} registryInfoByIds
-    sup = (
-        load_table(spark, sf_dir, "supplier")
-        .select(F.col("s_suppkey").alias("k"))
-        .where(F.col("k") < 25)
+    ks = "CAST(k AS STRING)"
+    sup = load_table(spark, sf_dir, "supplier").selectExpr("s_suppkey AS k").where("k < 25")
+    ph_gar = sup.selectExpr(
+        _GAR_KEY_ARGS,
+        f"""concat('{{"symbol":"PH', {ks}, '","name":"Phala ', {ks},"""
+        """ '","decimals":', CAST(8 + k % 4 AS STRING), '}') AS value""",
     )
-    ph_gar = sup.select(
-        key_args.alias("key_args"),
-        F.concat(
-            F.lit('{"symbol":"PH'),
-            ks,
-            F.lit('","name":"Phala '),
-            ks,
-            F.lit('","decimals":'),
-            (F.lit(8) + k % 4).cast("string"),
-            F.lit("}"),
-        ).alias("value"),
-    )
-    ph_xc = sup.select(
-        key_args.alias("key_args"),
-        F.concat(
-            F.lit('{"location":'),
-            _x2(k + 2100, k + 100),
-            F.lit(',"properties":{"symbol":"PH'),
-            ks,
-            F.lit('"}}'),
-        ).alias("value"),
+    ph_xc = sup.selectExpr(
+        _GAR_KEY_ARGS,
+        f"""concat('{{"location":', {_x2("k + 2100", "k + 100")},"""
+        f""" ',"properties":{{"symbol":"PH', {ks}, '"}}}}') AS value""",
     )
     ph_regs = PhalaGarParser().registrations(spark, ph_gar, ph_xc)
 
@@ -3256,33 +3236,20 @@ def gar_chain_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # foreignAssetLocations xc registry joined on {"ForeignAsset": id}
     cu = (
         load_table(spark, sf_dir, "customer")
-        .select(F.col("c_custkey").cast("long").alias("k"))
-        .where(F.col("k") < 20)
+        .selectExpr("CAST(c_custkey AS BIGINT) AS k")
+        .where("k < 20")
     )
-    ck = F.col("k")
-    cks = ck.cast("string")
     ac_key = (
-        F.when(ck % 4 == 0, F.concat(F.lit('[{"ForeignAssetId":"'), cks, F.lit('"}]')))
-        .when(
-            ck % 4 == 1,
-            F.concat(F.lit('[{"NativeAssetId":{"Token":"T'), cks, F.lit('"}}]')),
-        )
-        .when(
-            ck % 4 == 2,
-            F.concat(
-                F.lit('[{"Erc20":"0x'),
-                F.substring(F.md5(F.concat(F.lit("e"), cks)), 1, 40).alias("h"),
-                F.lit('"}]'),
-            ),
-        )
-        .otherwise(F.concat(F.lit('[{"StableAssetId":"'), cks, F.lit('"}]')))
+        f"""CASE WHEN k % 4 = 0 THEN concat('[{{"ForeignAssetId":"', {ks}, '"}}]')"""
+        f""" WHEN k % 4 = 1 THEN concat('[{{"NativeAssetId":{{"Token":"T', {ks}, '"}}}}]')"""
+        """ WHEN k % 4 = 2 THEN concat('[{"Erc20":"0x',"""
+        f""" substring(md5(concat('e', {ks})), 1, 40), '"}}]')"""
+        f""" ELSE concat('[{{"StableAssetId":"', {ks}, '"}}]') END"""
     )
-    ac_gar = cu.select(
-        ac_key.alias("key_args"),
-        F.concat(
-            F.lit('{"name":"Acala '), cks, F.lit('","symbol":"A'), cks,
-            F.lit('","decimals":12}'),
-        ).alias("value"),
+    ac_gar = cu.selectExpr(
+        f"{ac_key} AS key_args",
+        f"""concat('{{"name":"Acala ', {ks}, '","symbol":"A', {ks},"""
+        """ '","decimals":12}') AS value""",
     ).unionByName(
         spark.createDataFrame(
             [('[{"ForeignAssetId":"1,900"}]',
@@ -3291,11 +3258,8 @@ def gar_chain_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ac_xc = (
-        cu.where(ck % 4 == 0)
-        .select(
-            F.concat(F.lit('["'), cks, F.lit('"]')).alias("key_args"),
-            _x2(ck + 4000, ck + 900).alias("value"),
-        )
+        cu.where("k % 4 = 0")
+        .selectExpr(_GAR_KEY_ARGS, f"{_x2('k + 4000', 'k + 900')} AS value")
         .unionByName(
             spark.createDataFrame(
                 [('["1,900"]',
@@ -3311,25 +3275,14 @@ def gar_chain_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # --- moonbeam: assets:metadata + assetManager:assetIdType, with the
     # XC-20 precompile contract address derived from every asset id
-    reg_t = load_table(spark, sf_dir, "region").select(
-        F.col("r_regionkey").cast("long").alias("k")
+    reg_t = load_table(spark, sf_dir, "region").selectExpr("CAST(r_regionkey AS BIGINT) AS k")
+    mb_sym = f"CASE WHEN k % 2 = 0 THEN concat('xcR', {ks}) ELSE concat('R', {ks}) END"
+    mb_gar = reg_t.selectExpr(
+        _GAR_KEY_ARGS,
+        f"""concat('{{"symbol":"', {mb_sym}, '","name":"Region ', {ks},"""
+        """ '","decimals":10}') AS value""",
     )
-    rk = F.col("k")
-    rks = rk.cast("string")
-    mb_sym = F.when(rk % 2 == 0, F.concat(F.lit("xcR"), rks)).otherwise(
-        F.concat(F.lit("R"), rks)
-    )
-    mb_gar = reg_t.select(
-        F.concat(F.lit('["'), rks, F.lit('"]')).alias("key_args"),
-        F.concat(
-            F.lit('{"symbol":"'), mb_sym,
-            F.lit('","name":"Region '), rks, F.lit('","decimals":10}'),
-        ).alias("value"),
-    )
-    mb_xc = reg_t.select(
-        F.concat(F.lit('["'), rks, F.lit('"]')).alias("key_args"),
-        _x2(rk + 6000, rk + 77).alias("value"),
-    )
+    mb_xc = reg_t.selectExpr(_GAR_KEY_ARGS, f"{_x2('k + 6000', 'k + 77')} AS value")
     mb_regs = MoonbeamGarParser().registrations(spark, mb_gar, mb_xc)
 
     # --- interlay: orml-asset-registry — the metadata value EMBEDS the
@@ -3338,23 +3291,17 @@ def gar_chain_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # location (local-only assets: decorate but never register).
     il = (
         load_table(spark, sf_dir, "part")
-        .where((F.col("p_partkey") >= 50) & (F.col("p_partkey") < 70))
-        .select(F.col("p_partkey").cast("long").alias("k"))
+        .where("p_partkey >= 50 AND p_partkey < 70")
+        .selectExpr("CAST(p_partkey AS BIGINT) AS k")
     )
-    ik = F.col("k")
-    iks = ik.cast("string")
-    loc_part = F.when(
-        ik % 5 != 0,
-        F.concat(
-            F.lit(',"location":{"v3":'), _x2(ik + 7000, ik + 200), F.lit("}")
-        ),
-    ).otherwise(F.lit(""))
-    il_entries = il.select(
-        F.concat(F.lit('["'), iks, F.lit('"]')).alias("key_args"),
-        F.concat(
-            F.lit('{"symbol":"I'), iks, F.lit('","name":"IAsset '), iks,
-            F.lit('","decimals":10'), loc_part, F.lit("}"),
-        ).alias("value"),
+    loc_part = (
+        f"""CASE WHEN k % 5 != 0 THEN concat(',"location":{{"v3":',"""
+        f" {_x2('k + 7000', 'k + 200')}, '}}') ELSE '' END"
+    )
+    il_entries = il.selectExpr(
+        _GAR_KEY_ARGS,
+        f"""concat('{{"symbol":"I', {ks}, '","name":"IAsset ', {ks},"""
+        f""" '","decimals":10', {loc_part}, '}}') AS value""",
     )
     from polkadot_etl_spark.plans.garparsers import InterlayGarParser
 
@@ -3488,15 +3435,12 @@ def _hydra_gar_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hydra assetRegistry:assetMetadataMap entries (no name field —
     every name falls back to the symbol; k%6 rows carry the xc wrapper
     prefix) — shared by the registry-parse and snapshot-track queries."""
-    nat = load_table(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("k"))
-    k = F.col("k")
-    ks = k.cast("string")
-    hy_sym = F.when(k % 6 == 0, F.concat(F.lit("xcH"), ks)).otherwise(
-        F.concat(F.lit("H"), ks)
-    )
-    return nat.select(
-        F.concat(F.lit('["'), ks, F.lit('"]')).alias("key_args"),
-        F.concat(F.lit('{"symbol":"'), hy_sym, F.lit('","decimals":12}')).alias("value"),
+    nat = load_table(spark, sf_dir, "nation").selectExpr("n_nationkey AS k")
+    ks = "CAST(k AS STRING)"
+    hy_sym = f"CASE WHEN k % 6 = 0 THEN concat('xcH', {ks}) ELSE concat('H', {ks}) END"
+    return nat.selectExpr(
+        _GAR_KEY_ARGS,
+        f"""concat('{{"symbol":"', {hy_sym}, '","decimals":12}}') AS value""",
     )
 
 
@@ -4554,38 +4498,25 @@ def gar_longtail_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from polkadot_etl_spark.plans.xcmgar import build_xcm_asset_registry
 
-    def _x2(para: Column, gi: Column) -> Column:
-        return F.concat(
-            F.lit('{"parents":1,"interior":{"X2":[{"Parachain":'),
-            para.cast("string"),
-            F.lit('},{"GeneralIndex":'),
-            gi.cast("string"),
-            F.lit("}]}}"),
-        )
-
-    def _keyed(df: DataFrame) -> Column:
-        return F.concat(F.lit('["'), F.col("k").cast("string"), F.lit('"]'))
-
-    k = F.col("k")
-    ks = k.cast("string")
+    ks = "CAST(k AS STRING)"
 
     # --- astar: assets:metadata + xcAssetConfig:assetIdToLocation
     pt = (
         load_table(spark, sf_dir, "part")
-        .where(F.col("p_partkey") < 20)
-        .select(F.col("p_partkey").cast("long").alias("k"))
+        .where("p_partkey < 20")
+        .selectExpr("CAST(p_partkey AS BIGINT) AS k")
     )
-    as_gar = pt.select(
-        _keyed(pt).alias("key_args"),
-        F.concat(
-            F.lit('{"symbol":"AS'), ks, F.lit('","name":"Astar '), ks,
-            F.lit('","decimals":18}'),
-        ).alias("value"),
+    as_gar = pt.selectExpr(
+        _GAR_KEY_ARGS,
+        f"""concat('{{"symbol":"AS', {ks}, '","name":"Astar ', {ks},"""
+        """ '","decimals":18}') AS value""",
     )
-    as_xc_val = F.when(
-        k % 2 == 0, F.concat(F.lit('{"v1":'), _x2(k + 2600, k), F.lit("}"))
-    ).otherwise(F.concat(F.lit('{"xcm":'), _x2(k + 2600, k), F.lit("}")))
-    as_xc = pt.select(_keyed(pt).alias("key_args"), as_xc_val.alias("value")).unionByName(
+    as_loc = _x2("k + 2600", "k")
+    as_xc_val = (
+        f"""CASE WHEN k % 2 = 0 THEN concat('{{"v1":', {as_loc}, '}}')"""
+        f""" ELSE concat('{{"xcm":', {as_loc}, '}}') END"""
+    )
+    as_xc = pt.selectExpr(_GAR_KEY_ARGS, f"{as_xc_val} AS value").unionByName(
         spark.createDataFrame(
             # id 999 absent from assets:metadata → unknown-asset skip
             [('["999"]', '{"parents":1,"interior":{"X1":{"Parachain":9999}}}')],
@@ -4595,35 +4526,29 @@ def gar_longtail_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     as_regs = AstarGarParser().registrations(spark, as_gar, as_xc)
 
     # --- shiden: same parser class, kusama relay, SDN native
-    rg = load_table(spark, sf_dir, "region").select(
-        F.col("r_regionkey").cast("long").alias("k")
+    rg = load_table(spark, sf_dir, "region").selectExpr("CAST(r_regionkey AS BIGINT) AS k")
+    sh_gar = rg.selectExpr(
+        _GAR_KEY_ARGS,
+        f"""concat('{{"symbol":"SH', {ks}, '","name":"Shiden ', {ks},"""
+        """ '","decimals":12}') AS value""",
     )
-    sh_gar = rg.select(
-        _keyed(rg).alias("key_args"),
-        F.concat(
-            F.lit('{"symbol":"SH'), ks, F.lit('","name":"Shiden '), ks,
-            F.lit('","decimals":12}'),
-        ).alias("value"),
-    )
-    sh_xc = rg.select(_keyed(rg).alias("key_args"), _x2(k + 2700, k + 40).alias("value"))
+    sh_xc = rg.selectExpr(_GAR_KEY_ARGS, f"{_x2('k + 2700', 'k + 40')} AS value")
     sh_regs = ShidenGarParser().registrations(spark, sh_gar, sh_xc)
 
     # --- clover: assets:metadata + assetConfig:assetIdLocation; k%3==0
     # assets are local-only (no xc row)
     sup = (
         load_table(spark, sf_dir, "supplier")
-        .where(F.col("s_suppkey") < 15)
-        .select(F.col("s_suppkey").cast("long").alias("k"))
+        .where("s_suppkey < 15")
+        .selectExpr("CAST(s_suppkey AS BIGINT) AS k")
     )
-    cl_gar = sup.select(
-        _keyed(sup).alias("key_args"),
-        F.concat(
-            F.lit('{"symbol":"CL'), ks, F.lit('","name":"Clover '), ks,
-            F.lit('","decimals":10}'),
-        ).alias("value"),
+    cl_gar = sup.selectExpr(
+        _GAR_KEY_ARGS,
+        f"""concat('{{"symbol":"CL', {ks}, '","name":"Clover ', {ks},"""
+        """ '","decimals":10}') AS value""",
     )
-    cl_xc = sup.where(k % 3 != 0).select(
-        _keyed(sup).alias("key_args"), _x2(k + 2200, k + 10).alias("value")
+    cl_xc = sup.where("k % 3 != 0").selectExpr(
+        _GAR_KEY_ARGS, f"{_x2('k + 2200', 'k + 10')} AS value"
     )
     clover = CloverGarParser()
     cl_regs = clover.registrations(spark, cl_gar, cl_xc)
@@ -4631,26 +4556,22 @@ def gar_longtail_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # locations INFERRED from outgoing xTokens extrinsics
     # (processOutgoingXTokens); k=12 carries TWO TransferredMultiAssets
     # events and must skip
-    aug_src = sup.where(k % 3 == 0)
-    asset_json = F.concat(
-        F.lit('[{"id":{"concrete":'), _x2(k + 2290, k + 50),
-        F.lit('},"fun":{"fungible":77}}]'),
+    aug_src = sup.where("k % 3 = 0")
+    asset_json = (
+        f"""concat('[{{"id":{{"concrete":', {_x2("k + 2290", "k + 50")},"""
+        """ '},"fun":{"fungible":77}}]')"""
     )
-    ev = F.concat(
-        F.lit('{"section":"xTokens","method":"TransferredMultiAssets",'
-              '"data":["s",'), asset_json, F.lit(",{},{}]}"),
+    ev = (
+        """concat('{"section":"xTokens","method":"TransferredMultiAssets","""
+        f""""data":["s",', {asset_json}, ',{{}},{{}}]}}')"""
     )
-    cl_ext = aug_src.select(
-        F.lit("xTokens").alias("section"),
-        F.when(k % 2 == 1, F.lit("transfer"))
-        .otherwise(F.lit("transferMulticurrencies"))
-        .alias("method"),
-        F.when(k % 2 == 1, F.concat(F.lit('{"currency_id":'), ks, F.lit("}")))
-        .otherwise(F.concat(F.lit('{"currencies":[['), ks, F.lit(",100]]}")))
-        .alias("params"),
-        F.when(k == 12, F.concat(F.lit("["), ev, F.lit(","), ev, F.lit("]")))
-        .otherwise(F.concat(F.lit("["), ev, F.lit("]")))
-        .alias("events"),
+    cl_ext = aug_src.selectExpr(
+        "'xTokens' AS section",
+        "CASE WHEN k % 2 = 1 THEN 'transfer' ELSE 'transferMulticurrencies' END AS method",
+        f"""CASE WHEN k % 2 = 1 THEN concat('{{"currency_id":', {ks}, '}}')"""
+        f""" ELSE concat('{{"currencies":[[', {ks}, ',100]]}}') END AS params""",
+        f"CASE WHEN k = 12 THEN concat('[', {ev}, ',', {ev}, ']')"
+        f" ELSE concat('[', {ev}, ']') END AS events",
     )
     cl_regs = cl_regs.unionByName(
         clover.augment_from_xtokens(cl_ext, clover.parse_gar(cl_gar))
@@ -4660,46 +4581,34 @@ def gar_longtail_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # astar's (2606, 6) location → confidence 2, astar home-rank wins
     cu = (
         load_table(spark, sf_dir, "customer")
-        .where(F.col("c_custkey") < 12)
-        .select(F.col("c_custkey").cast("long").alias("k"))
+        .where("c_custkey < 12")
+        .selectExpr("CAST(c_custkey AS BIGINT) AS k")
     )
-    ot_gar = cu.select(
-        _keyed(cu).alias("key_args"),
-        F.concat(
-            F.lit('{"symbol":"OT'), ks, F.lit('","name":"Trail '), ks,
-            F.lit('","decimals":18}'),
-        ).alias("value"),
+    ot_gar = cu.selectExpr(
+        _GAR_KEY_ARGS,
+        f"""concat('{{"symbol":"OT', {ks}, '","name":"Trail ', {ks},"""
+        """ '","decimals":18}') AS value""",
     )
-    ot_loc = F.when(k <= 10, _x2(k + 2430, k + 20)).otherwise(
-        _x2(F.lit(2606), F.lit(6))
-    )
-    ot_xc = cu.select(
-        _keyed(cu).alias("key_args"),
-        F.concat(F.lit('{"v3":'), ot_loc, F.lit("}")).alias("value"),
+    ot_loc = f"CASE WHEN k <= 10 THEN {_x2('k + 2430', 'k + 20')} ELSE {_x2('2606', '6')} END"
+    ot_xc = cu.selectExpr(
+        _GAR_KEY_ARGS, f"""concat('{{"v3":', {ot_loc}, '}}') AS value"""
     )
     ot_regs = OrigintrailGarParser().registrations(spark, ot_gar, ot_xc)
 
     # --- shadow: assetManager:assetIdType, xc-wrapper strip; k%3==0
     # assets are local-only
-    na = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").cast("long").alias("k")
+    na = load_table(spark, sf_dir, "nation").selectExpr("CAST(n_nationkey AS BIGINT) AS k")
+    sd_sym = f"CASE WHEN k % 2 = 0 THEN concat('xcSD', {ks}) ELSE concat('SD', {ks}) END"
+    sd_gar = na.selectExpr(
+        _GAR_KEY_ARGS,
+        f"""concat('{{"symbol":"', {sd_sym}, '","name":"Shadow ', {ks},"""
+        """ '","decimals":11}') AS value""",
     )
-    sd_sym = F.when(k % 2 == 0, F.concat(F.lit("xcSD"), ks)).otherwise(
-        F.concat(F.lit("SD"), ks)
+    sd_loc = _x2("k + 2120", "k + 30")
+    sd_xc_val = (
+        f"""CASE WHEN k % 2 = 0 THEN concat('{{"v0":', {sd_loc}, '}}') ELSE {sd_loc} END"""
     )
-    sd_gar = na.select(
-        _keyed(na).alias("key_args"),
-        F.concat(
-            F.lit('{"symbol":"'), sd_sym, F.lit('","name":"Shadow '), ks,
-            F.lit('","decimals":11}'),
-        ).alias("value"),
-    )
-    sd_xc_val = F.when(
-        k % 2 == 0, F.concat(F.lit('{"v0":'), _x2(k + 2120, k + 30), F.lit("}"))
-    ).otherwise(_x2(k + 2120, k + 30))
-    sd_xc = na.where(k % 3 != 0).select(
-        _keyed(na).alias("key_args"), sd_xc_val.alias("value")
-    )
+    sd_xc = na.where("k % 3 != 0").selectExpr(_GAR_KEY_ARGS, f"{sd_xc_val} AS value")
     sd_regs = ShadowGarParser().registrations(spark, sd_gar, sd_xc)
 
     reg = build_xcm_asset_registry(

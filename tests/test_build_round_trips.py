@@ -4,7 +4,8 @@ Each PySpark Column or functions call is at least one py4j round trip
 (README pitfall "Large expression trees cost py4j, not JVM"), so a cold
 build's round-trip count is its plan-construction cost. The snapshot
 queries are held to a budget here: the one etl_publish builds cold
-every pass, and the relay tracks, the largest snapshot build.
+every pass, and the relay tracks, the largest snapshot build. So are
+the two registry queries that drive every GAR parser.
 """
 
 from __future__ import annotations
@@ -17,13 +18,20 @@ from tests.conftest import REPO, SF_DIR, run_fresh_process
 
 
 @pytest.mark.parametrize(
-    "name", ["snapshots_hydradx_omnipool", "snapshots_relay_opengov"]
+    "name",
+    [
+        "snapshots_hydradx_omnipool",
+        "snapshots_relay_opengov",
+        "gar_chain_registry",
+        "gar_longtail_registry",
+    ],
 )
 def test_cold_snapshot_build_round_trip_budget(name, tmp_path):
     """A fresh get_spark process builds the query (every memo cold) in
     fewer than 1,500 round trips: hydradx made ~8,700 with per-call
     origin capture and Column-API decode trees, relay ~4,300 with its
-    Column trees. Its session has origin capture off, and an ANSI divide
+    Column trees, and the GAR registries ~2,900-3,600 with Column-API
+    parsers and inputs. Its session has origin capture off, and an ANSI divide
     by zero still raises with its error class."""
     script = textwrap.dedent(
         f"""

@@ -2516,7 +2516,7 @@ def test_dechex_int_is_null_not_a_failure(spark, raw, want):
     the session's ANSI mode."""
     from polkadot_etl_spark.plans.feeds import _dechex_int
 
-    df = spark.createDataFrame([(raw,)], "v string").select(_dechex_int(F.col("v")).alias("n"))
+    df = spark.createDataFrame([(raw,)], "v string").selectExpr(f"{_dechex_int('v')} AS n")
     assert df.schema["n"].dataType.simpleString() == "int"
     assert df.collect()[0].n == want
 

@@ -5869,29 +5869,24 @@ def _dump_replay_winners(spark: SparkSession, sf_dir: str) -> DataFrame:
         block_candidates_stream,
         fork_resolving_sink,
     )
+    from polkadot_etl_spark.streaming.replay import run_bounded_stream
 
     with tempfile.TemporaryDirectory(
         prefix="dump_replay_", ignore_cleanup_errors=True
     ) as work:
         src_dir = _stream_dump_candidates(spark, sf_dir, work)
         state_dir = os.path.join(work, "state")
-        q = (
+        run_bounded_stream(
             # one wave file per micro-batch (oldest-mtime first): the
             # whole point is driving fork_resolving_sink's INCREMENTAL
             # read-state/union/re-resolve path across three batches — an
             # unbounded trigger would coalesce the pre-existing files
             # into one batch and a broken state merge could still
             # hash-green (r10 self-review finding)
-            block_candidates_stream(spark, src_dir, max_files_per_trigger=1)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "chk"))
-            .foreachBatch(fork_resolving_sink(state_dir))
-            .start()
+            block_candidates_stream(spark, src_dir, max_files_per_trigger=1),
+            work,
+            fork_resolving_sink(state_dir),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         # the X2 publish gate: only finalized winners leave the state
         return (
             spark.read.parquet(state_dir)

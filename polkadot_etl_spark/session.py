@@ -6,8 +6,6 @@ Here those are Catalyst/Tungsten features we simply enable:
 
 - AQE (runtime re-plan, skew-join splitting, partition coalescing) replaces
   the reference's hand-tuned batch sizes (substrateetl.js:6236).
-- Dynamic partition overwrite replaces BigQuery's ``$YYYYMMDD --replace``
-  atomic day-partition loads (substrateetl.js:6553-6572).
 - Arrow execution keeps any Python-side work (pandas UDFs) batched.
 
 At cluster scale the same builder is used; only the master and a few
@@ -58,8 +56,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Atomic day-partition republish (reference: bq load --replace).
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # Arrow for any pandas UDF / toPandas path.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Broadcast threshold: dims (region/nation/specversions/assetInfo

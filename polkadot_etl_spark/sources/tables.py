@@ -166,11 +166,12 @@ def write_day_partitioned(
 ) -> None:
     """Publish a silver/gold table partitioned on ``time_col``.
 
-    With ``spark.sql.sources.partitionOverwriteMode=dynamic`` (set in
-    session.py) mode="overwrite" replaces ONLY the partitions present
-    in ``df`` — the idempotent partition-replace the reference gets from
-    BigQuery partition decorators (SURVEY X8). At 100 TB this is the unit
-    of reprocessing: one chain-day, never a full-table rewrite.
+    Dynamic partition overwrite is a writer option, so mode="overwrite"
+    replaces ONLY the partitions present in ``df`` whatever the
+    session's ``spark.sql.sources.partitionOverwriteMode`` — the
+    idempotent partition-replace the reference gets from BigQuery
+    partition decorators (SURVEY X8). At 100 TB this is the unit of
+    reprocessing: one chain-day, never a full-table rewrite.
 
     grain="hour" adds a second-level log_hr partition (0-23) under each
     day — the dump_gs_hourly export variant (substrateetl.js:5522-5650,
@@ -192,7 +193,12 @@ def write_day_partitioned(
         raise ValueError(f"unknown grain {grain!r}")
     if cluster_by:
         out = out.sortWithinPartitions(*part_cols, *cluster_by)
-    out.write.mode(mode).partitionBy(*part_cols).parquet(path)
+    (
+        out.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*part_cols)
+        .parquet(path)
+    )
 
 
 def write_bucketed(

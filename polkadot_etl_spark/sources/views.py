@@ -66,6 +66,7 @@ def materialize_cache(
     (
         df.withColumn(partition_col, F.to_date(F.col(time_col)))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
         .parquet(path)
     )

@@ -119,7 +119,6 @@ def fork_resolving_sink(state_dir: str):
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # r13 (guide §1.2/§2.4): pin the micro-batch once. The eager
         # localCheckpoint (a) evaluates the source exactly once — the
         # old shape re-read/re-parsed the stream source for isEmpty,
@@ -174,6 +173,7 @@ def fork_resolving_sink(state_dir: str):
         (
             resolved.repartition(n_out, "chain_id", "log_dt")
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("chain_id", "log_dt")
             .parquet(state_dir)
         )

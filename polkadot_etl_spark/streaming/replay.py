@@ -1,22 +1,24 @@
-"""Shared bounded-replay fixture harness for the streaming gate queries.
+"""Shared bounded-replay harness for the streaming gate queries.
 
-Three oracle-gated queries replay bounded NDJSON streams through the REAL
+Four oracle-gated queries replay bounded streams through the REAL
 streaming machines (streaming_corpus_replay / streaming_neardedup_replay
 over documents, streaming_dump_replay over block candidates, and the
-composed daily-increment pipeline). Each used to carry its own copy of
-the same two fixture idioms; this module is the ONE definition (the
-refactor the r10 review deferred until the replay queries rotated back
-through the driver window — r11, per the staleness rule):
+composed daily-increment pipeline). This module is the ONE definition
+of the harness idioms they share:
 
 - ``write_ndjson_waves``: materialize arrival WAVES as one NDJSON file
   each with FORCED-DISTINCT ascending mtimes, so FileStreamSource's
   oldest-first ordering pins the batch sequence (with
   ``maxFilesPerTrigger=1``, wave i IS micro-batch i — the property the
   incremental-state seams are exercised through);
-- ``collect_bounded_stream``: run a bounded stream to completion,
-  collecting every micro-batch via foreachBatch into one pandas frame.
+- ``run_bounded_stream``: the one start / drain / stop loop — start a
+  bounded stream into a foreachBatch sink, process everything available
+  and always stop it;
+- ``collect_bounded_stream``: ``run_bounded_stream`` with a sink that
+  collects every micro-batch into one pandas frame, the stream planned
+  on ``replay_session``'s sized clone.
 
-Both are fixture plumbing, not operators: the machines under test live
+All are fixture plumbing, not operators: the machines under test live
 in streaming/{corpus,neardedup,pipeline}.py.
 """
 
@@ -102,35 +104,15 @@ def replay_session(spark, n_rows: int):
     return sess
 
 
-def collect_bounded_stream(
-    build_stream, work: str, out_schema, spark, n_rows: int | None = None
-):
-    """Run a bounded stream to completion, collecting every micro-batch
-    via foreachBatch into one pandas frame. Returns the concatenated
-    pandas frame (possibly empty, schema-named).
-
-    ``build_stream`` is a callable SparkSession -> streaming DataFrame:
-    the harness — not the caller — decides which session the stream
-    plans against, because the state-partition sizing must live in a
-    session the caller's other (possibly concurrent) plans never see.
-    With ``n_rows`` (the bounded stream's total row count, which replay
-    harnesses know exactly) the stream is built on ``replay_session``'s
-    clone — sized state partitions, zero mutation of the caller's
-    session conf (see replay_session). Without it the stream builds
-    directly on ``spark``."""
-    import pandas as pd
-
-    acc: "list[pd.DataFrame]" = []
-
-    def _collect(batch_df: DataFrame, _batch_id: int) -> None:
-        acc.append(batch_df.toPandas())
-
-    sess = replay_session(spark, n_rows) if n_rows is not None else spark
+def run_bounded_stream(stream: DataFrame, work: str, sink) -> None:
+    """Run the bounded streaming DataFrame ``stream`` to completion into
+    the foreachBatch ``sink`` (a ``(batch_df, batch_id)`` callable),
+    checkpointing under ``<work>/chk``. The query is stopped even when
+    the sink raises; the error then propagates to the caller."""
     q = (
-        build_stream(sess)
-        .writeStream.outputMode("append")
+        stream.writeStream.outputMode("append")
         .option("checkpointLocation", os.path.join(work, "chk"))
-        .foreachBatch(_collect)
+        .foreachBatch(sink)
         .start()
     )
     try:
@@ -140,6 +122,29 @@ def collect_bounded_stream(
         # the caller's rmtree'd source/checkpoint dirs for the rest of
         # the session, polluting every subsequent query
         q.stop()
+
+
+def collect_bounded_stream(build_stream, work: str, out_schema, spark, n_rows: int):
+    """Run a bounded stream to completion, collecting every micro-batch
+    via foreachBatch into one pandas frame. Returns the concatenated
+    pandas frame (possibly empty, schema-named).
+
+    ``build_stream`` is a callable SparkSession -> streaming DataFrame:
+    the harness — not the caller — decides which session the stream
+    plans against, because the state-partition sizing must live in a
+    session the caller's other (possibly concurrent) plans never see.
+    ``n_rows`` is the bounded stream's total row count, which replay
+    harnesses know exactly: the stream is built on ``replay_session``'s
+    clone — sized state partitions, zero mutation of the caller's
+    session conf (see replay_session)."""
+    import pandas as pd
+
+    acc: "list[pd.DataFrame]" = []
+
+    def _collect(batch_df: DataFrame, _batch_id: int) -> None:
+        acc.append(batch_df.toPandas())
+
+    run_bounded_stream(build_stream(replay_session(spark, n_rows)), work, _collect)
     out = [p for p in acc if len(p)]
     if out:
         return pd.concat(out, ignore_index=True)

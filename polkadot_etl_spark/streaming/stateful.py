@@ -5,11 +5,12 @@ across blocks while indexing, matches source/dest observations as they
 arrive, and cleans entries after N blocks (reference indexer.js:3109-3194
 cleanTrailingXcmMap; the async batch variant is xcmmanager.js:417-497).
 
-Spark mapping: ``applyInPandasWithState`` over groupBy(msgHash) — each
-message hash owns a tiny state (unmatched source/dest observations);
-matching is incremental per micro-batch and emits a match exactly once,
-when the second side arrives. A processing-time timeout expires idle
-hashes, bounding state exactly like cleanTrailingXcmMap bounds the map.
+Spark mapping: ``match_messages_stream`` is the one streaming form —
+``applyInPandasWithState`` over groupBy(msgHash). Each message hash owns
+a tiny state (unmatched source/dest observations); matching is
+incremental per micro-batch and emits a match exactly once, when the
+second side arrives. A processing-time timeout expires idle hashes,
+bounding state exactly like cleanTrailingXcmMap bounds the map.
 
 Semantics match the batch operator (plans/xcm.match_messages): band
 0 <= sentAtDest - sentAtSource <= max_sent_lag, first-match-wins per dest
@@ -175,84 +176,3 @@ def match_messages_stream(
         timeoutConf=timeout,
     )
 
-
-# ---------------------------------------------------------------------------
-# Spark 4 transformWithStateInPandas form of the same operator: typed
-# per-key state (ValueState) instead of a packed tuple, the same matching
-# semantics via _match_pending, and TTL owned by the state store. This is
-# the forward API — applyInPandasWithState above remains for parity with
-# Spark 3.x deployments.
-# ---------------------------------------------------------------------------
-
-
-def make_tws_processor(max_sent_lag: int = 4, state_ttl_ms: int | None = 120_000):
-    """Build the StatefulProcessor for transformWithStateInPandas.
-
-    State layout: one ValueState holding the same (sources_json,
-    dests_json) pair as the GroupState form — the wire format is shared
-    so a pipeline can migrate between the two APIs without a state
-    rewrite (modulo the store format itself)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class XcmMatchProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            ttl = state_ttl_ms if state_ttl_ms is not None else -1
-            self._pending = handle.getValueState("pending", STATE_SCHEMA, ttl)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            (msg_hash,) = key
-            if self._pending.exists():
-                src_json, dst_json = self._pending.get()
-                sources = json.loads(src_json) if src_json else []
-                dests = json.loads(dst_json) if dst_json else []
-            else:
-                sources, dests = [], []
-            for pdf in rows:
-                for row in pdf.itertuples(index=False):
-                    obs = {
-                        "chainID": int(row.chainID),
-                        "chainIDDest": int(row.chainIDDest),
-                        "sentAt": int(row.sentAt),
-                        "blockNumber": int(row.blockNumber),
-                        "blockTS": int(row.blockTS),
-                    }
-                    side = sources if int(row.incoming) == 0 else dests
-                    existing = next(
-                        (o for o in side if o["sentAt"] == obs["sentAt"]), None
-                    )
-                    if existing is None:
-                        side.append(obs)
-                    elif obs["blockNumber"] < existing["blockNumber"]:
-                        existing.update(obs)
-            matches, sources, dests = _match_pending(sources, dests, max_sent_lag)
-            self._pending.update((json.dumps(sources), json.dumps(dests)))
-            if matches:
-                out = pd.DataFrame(matches)
-                out.insert(0, "msgHash", msg_hash)
-                yield out
-
-        def close(self) -> None:
-            pass
-
-    return XcmMatchProcessor()
-
-
-def match_messages_stream_tws(
-    messages: DataFrame, max_sent_lag: int = 4, state_ttl_ms: int | None = 120_000
-) -> DataFrame:
-    """Streaming X4 via the Spark 4 transformWithStateInPandas API.
-    Requires the RocksDB state store provider
-    (spark.sql.streaming.stateStore.providerClass =
-    ...RocksDBStateStoreProvider) AND the google.protobuf package (the
-    TWS state-server wire protocol) — absent from this test container,
-    so the pytest is skipif-gated; the applyInPandasWithState form above
-    is the one exercised here."""
-    return messages.groupBy("msgHash").transformWithStateInPandas(
-        statefulProcessor=make_tws_processor(max_sent_lag, state_ttl_ms),
-        outputStructType=MATCH_SCHEMA,
-        outputMode="Append",
-        timeMode="ProcessingTime" if state_ttl_ms is not None else "None",
-    )

@@ -750,44 +750,55 @@ class TestSkewOperators:
 
 
 class TestLakeWriter:
-    def test_day_partition_replace_is_surgical(self, spark, tmp_path):
+    """write_day_partitioned carries dynamic overwrite as a writer
+    option, so each test publishes through a session clone set to
+    static overwrite and checks the clone is still static afterwards."""
+
+    KEY = "spark.sql.sources.partitionOverwriteMode"
+
+    @pytest.fixture
+    def static(self, spark):
+        clone = spark.newSession()
+        clone.conf.set(self.KEY, "static")
+        yield clone
+        assert clone.conf.get(self.KEY) == "static"
+
+    def test_day_partition_replace_is_surgical(self, static, tmp_path):
         """X8: rewriting one day must replace exactly that day and leave
         the others untouched (the bq load --replace '$YYYYMMDD' analog)."""
         from pyspark.sql import functions as F
 
         from polkadot_etl_spark.sources.tables import write_day_partitioned
 
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         path = str(tmp_path / "lake")
         day1 = [(1, "2024-01-01 05:00:00"), (2, "2024-01-01 06:00:00")]
         day2 = [(3, "2024-01-02 05:00:00")]
-        df = spark.createDataFrame(day1 + day2, "id: long, ts: string").withColumn(
+        df = static.createDataFrame(day1 + day2, "id: long, ts: string").withColumn(
             "ts", F.to_timestamp("ts")
         )
         write_day_partitioned(df, path, "ts", cluster_by=["id"])
         # re-publish ONLY day 2 with different content
-        df2 = spark.createDataFrame(
+        df2 = static.createDataFrame(
             [(99, "2024-01-02 09:00:00")], "id: long, ts: string"
         ).withColumn("ts", F.to_timestamp("ts"))
         write_day_partitioned(df2, path, "ts")
-        got = {r.id for r in spark.read.parquet(path).collect()}
+        got = {r.id for r in static.read.parquet(path).collect()}
         assert got == {1, 2, 99}  # day1 intact, day2 replaced
 
-    def test_replay_same_day_is_idempotent(self, spark, tmp_path):
+    def test_replay_same_day_is_idempotent(self, static, tmp_path):
         from pyspark.sql import functions as F
 
         from polkadot_etl_spark.sources.tables import write_day_partitioned
 
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         path = str(tmp_path / "lake")
-        df = spark.createDataFrame([(1, "2024-01-01 05:00:00")], "id: long, ts: string").withColumn(
+        df = static.createDataFrame([(1, "2024-01-01 05:00:00")], "id: long, ts: string").withColumn(
             "ts", F.to_timestamp("ts")
         )
         write_day_partitioned(df, path, "ts")
         write_day_partitioned(df, path, "ts")  # replay
-        assert spark.read.parquet(path).count() == 1
+        assert static.read.parquet(path).count() == 1
 
-    def test_hourly_grain_replaces_one_hour(self, spark, tmp_path):
+    def test_hourly_grain_replaces_one_hour(self, static, tmp_path):
         """dump_gs_hourly variant (substrateetl.js:5522-5650): two-level
         (log_dt, log_hr) partitioning -- an hourly replay replaces exactly
         that hour, sibling hours and other days stay intact."""
@@ -795,7 +806,6 @@ class TestLakeWriter:
 
         from polkadot_etl_spark.sources.tables import write_day_partitioned
 
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         path = str(tmp_path / "lake_hr")
         rows = [
             (1, "2024-01-01 05:10:00"),
@@ -803,23 +813,23 @@ class TestLakeWriter:
             (3, "2024-01-01 06:00:00"),
             (4, "2024-01-02 05:00:00"),
         ]
-        df = spark.createDataFrame(rows, "id: long, ts: string").withColumn(
+        df = static.createDataFrame(rows, "id: long, ts: string").withColumn(
             "ts", F.to_timestamp("ts")
         )
         write_day_partitioned(df, path, "ts", grain="hour")
-        got = spark.read.parquet(path)
+        got = static.read.parquet(path)
         assert {(r.id, str(r.log_dt), r.log_hr) for r in got.collect()} == {
             (1, "2024-01-01", 5), (2, "2024-01-01", 5),
             (3, "2024-01-01", 6), (4, "2024-01-02", 5),
         }
         # replay hour 05 of day 1 with different content
-        df2 = spark.createDataFrame(
+        df2 = static.createDataFrame(
             [(99, "2024-01-01 05:30:00")], "id: long, ts: string"
         ).withColumn("ts", F.to_timestamp("ts"))
         write_day_partitioned(df2, path, "ts", grain="hour")
-        assert {r.id for r in spark.read.parquet(path).collect()} == {99, 3, 4}
+        assert {r.id for r in static.read.parquet(path).collect()} == {99, 3, 4}
         # day-level pruning still works over the two-level layout
-        day1 = spark.read.parquet(path).where(F.col("log_dt") == "2024-01-01")
+        day1 = static.read.parquet(path).where(F.col("log_dt") == "2024-01-01")
         assert {r.id for r in day1.collect()} == {99, 3}
 
 

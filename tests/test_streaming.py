@@ -361,138 +361,6 @@ def test_stream_stream_join_with_watermarks(spark, tmp_path, few_shuffle_partiti
     assert (out[0].blockNumberSource, out[0].blockNumberDest) == (100, 900)
 
 
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-class TestTransformWithState:
-    def test_tws_matches_across_micro_batches(self, spark, tmp_path, few_shuffle_partitions):
-        """The Spark 4 transformWithStateInPandas form must produce the
-        SAME matches as the applyInPandasWithState form — shared
-        _match_pending semantics, typed ValueState carrying the pending
-        observations across batches. Needs the RocksDB state store.
-
-        ENVIRONMENTAL CONSTRAINT (probed, not assumed — no skip): the
-        TWS *driver-side* worker
-        (pyspark/sql/streaming/transform_with_state_driver_worker.py)
-        imports pyspark.sql.streaming.proto.StateMessage_pb2, whose
-        first line is ``from google.protobuf import descriptor`` — the
-        state-server protocol is protobuf-encoded, and the real
-        google.protobuf package is NOT installed in this sandbox (and
-        must not be pip-installed per the environment contract). With
-        protobuf present this test runs the full two-batch match;
-        without it, it PINS the exact gating failure: query start dies
-        in validateAndMaybeEvolveStateSchema with
-        STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE caused by the
-        google.protobuf ImportError. If the constraint ever lifts (or
-        the failure mode shifts), the pin branch fails loudly and this
-        test must be flipped to the real path."""
-        if not _protobuf_available():
-            self._assert_gating_failure(spark, tmp_path)
-            return
-        self._run_real_tws(spark, tmp_path)
-
-    def _assert_gating_failure(self, spark, tmp_path):
-        from pyspark.errors import StreamingQueryException
-
-        from polkadot_etl_spark.streaming.stateful import (
-            MESSAGE_SCHEMA,
-            match_messages_stream_tws,
-        )
-
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        try:
-            src_dir = tmp_path / "msgs_gate"
-            src_dir.mkdir()
-            _write_batch(src_dir, "b1", [_msg("0xaa", 0, 100, 1000, 50_000)])
-            stream = spark.readStream.schema(MESSAGE_SCHEMA).json(str(src_dir))
-            matched = match_messages_stream_tws(stream, state_ttl_ms=None)
-            with pytest.raises(StreamingQueryException) as exc:
-                q = (
-                    matched.writeStream.foreachBatch(lambda b, _: b.collect())
-                    .option("checkpointLocation", str(tmp_path / "ckpt_gate"))
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(120)
-            # the precise constraint: the TWS driver worker crashed
-            # during initialization because StateMessage_pb2 could not
-            # import google.protobuf — not some other streaming failure
-            msg = str(exc.value)
-            assert "TransformWithStateInPySpark driver worker exited" in msg
-        finally:
-            if prev is not None:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-            else:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    def _run_real_tws(self, spark, tmp_path):
-        """The full two-batch cross-batch match (runs wherever
-        google.protobuf is installed)."""
-        from polkadot_etl_spark.streaming.stateful import (
-            MESSAGE_SCHEMA,
-            match_messages_stream_tws,
-        )
-
-        prev = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        try:
-            src_dir = tmp_path / "msgs"
-            src_dir.mkdir()
-            out = []
-            _write_batch(src_dir, "b1", [
-                _msg("0xaa", 0, 100, 1000, 50_000),
-                _msg("0xbb", 0, 100, 1001, 50_006),
-                _msg("0xbb", 1, 102, 9001, 50_018),
-            ])
-            stream = (
-                spark.readStream.schema(MESSAGE_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .json(str(src_dir))
-            )
-            matched = match_messages_stream_tws(stream, state_ttl_ms=None)
-
-            def collect(batch_df, _bid):
-                out.extend(batch_df.collect())
-
-            q = matched.writeStream.foreachBatch(collect).option(
-                "checkpointLocation", str(tmp_path / "ckpt_tws")
-            ).trigger(availableNow=True).start()
-            q.awaitTermination(120)
-            assert [r.msgHash for r in out] == ["0xbb"]
-            _write_batch(src_dir, "b2", [
-                _msg("0xaa", 1, 103, 9000, 50_030),
-                _msg("0xcc", 0, 100, 1002, 50_012),
-                _msg("0xcc", 1, 110, 9002, 50_060),  # lag 10 > 4
-            ])
-            q = matched.writeStream.foreachBatch(collect).option(
-                "checkpointLocation", str(tmp_path / "ckpt_tws")
-            ).trigger(availableNow=True).start()
-            q.awaitTermination(120)
-            by_hash = {r.msgHash: r for r in out}
-            assert set(by_hash) == {"0xaa", "0xbb"}
-            assert by_hash["0xaa"].diffSentAt == 3
-        finally:
-            if prev is not None:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-            else:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_socket_ingestion_end_to_end(spark):
     """S1 over a LIVE network boundary: a localhost TCP server streams
     NDJSON block candidates (the WS-bridge shape), the socket source

@@ -280,6 +280,38 @@ def test_replay_session_is_isolated_and_sized(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
+def test_run_bounded_stream_always_stops(spark, tmp_path, monkeypatch):
+    """A failing foreachBatch sink must surface its error to the caller
+    and leave no streaming query running on the session; so must a wait
+    that is interrupted while the query itself is still healthy."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from polkadot_etl_spark.streaming.replay import run_bounded_stream
+
+    src, _, _ = _mk_dirs(tmp_path)
+    _write_ndjson(src / "a.json", [{"doc_id": 1, "text": GOOD, "lang": "en", "source": "s0"}])
+    before = {q.id for q in spark.streams.active}
+
+    def sink(_batch_df, _batch_id):
+        raise RuntimeError("sink failed on purpose")
+
+    with pytest.raises(StreamingQueryException, match="sink failed on purpose"):
+        run_bounded_stream(document_stream(spark, str(src)), str(tmp_path / "w1"), sink)
+    assert {q.id for q in spark.streams.active} == before
+
+    def interrupted(_self):
+        raise KeyboardInterrupt
+
+    monkeypatch.setattr(StreamingQuery, "processAllAvailable", interrupted)
+    with pytest.raises(KeyboardInterrupt):
+        run_bounded_stream(
+            document_stream(spark, str(src)), str(tmp_path / "w2"), lambda b, i: None
+        )
+    assert {q.id for q in spark.streams.active} == before
+
+
 def test_collect_bounded_stream_never_mutates_caller_conf(spark, tmp_path):
     """A concurrent driver thread polling the caller's session conf for
     the stream's whole lifetime must never observe the replay sizing —
